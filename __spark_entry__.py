@@ -3,7 +3,9 @@
 ``entry(spark)`` smoke-runs the flagship spatial-demand query at sf0.001;
 ``queries()`` exposes one callable per implemented operator from
 SURVEY.md §2 (+ the scale extensions); ``oracle_sql()`` gives the DuckDB
-equivalent for every SQL-expressible query.
+equivalent for every SQL-expressible query. Both derive from
+``QUERY_TABLE`` at the bottom of this file, the one place a query is
+declared.
 
 Hash-match discipline (the driver compares order-insensitive value hashes):
 
@@ -66,19 +68,6 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> dict:
     _ensure_shipped(spark)
     from erde_spark.session import load_tables
     return load_tables(spark, sf_dir, *names)
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Spread a low-parallelism scan across the session's cores before
-    a compute-heavy per-row kernel (guide §2.5 input skew / §6 split
-    sizing): the sf test files are single-small-file scans — ONE input
-    partition — so an encode/decode/hash kernel downstream would run on
-    1 of N cores. Delegates to
-    :func:`erde_spark.session.spread_to_cores` (data-adaptive: no-op on
-    any multi-split input, file-index probe instead of ``df.rdd``,
-    streaming frames returned unchanged)."""
-    from erde_spark.session import spread_to_cores
-    return spread_to_cores(df)
 
 
 def _dsum(col) -> F.Column:
@@ -4273,6 +4262,7 @@ def q_audio_features(spark, sf_dir):
     import pandas as pd
 
     from erde_spark.scale.multimodal import ASSET_SCHEMA, audio_features
+    from erde_spark.session import spread_to_cores
     d = _t(spark, sf_dir, 'documents')['documents'].select('doc_id')
 
     def _synth(batches):
@@ -4292,7 +4282,7 @@ def q_audio_features(spark, sf_dir):
                              ('audio/wav', None, None, len(blob))))
             yield pd.DataFrame(rows, columns=['asset_id', 'media', 'meta'])
 
-    assets = _spread(spark, d).mapInPandas(_synth, schema=ASSET_SCHEMA)
+    assets = spread_to_cores(d).mapInPandas(_synth, schema=ASSET_SCHEMA)
     return (audio_features(assets, sample_rate=8000)
             .select('asset_id', 'n_frames',
                     F.round('rms', 4).alias('rms'),
@@ -4306,8 +4296,9 @@ def q_multimodal_features(spark, sf_dir):
     rows-only check; q_multimodal_features_check is the value-checked
     companion over real PNGs)."""
     from erde_spark.scale.multimodal import extract_features, synthesize_assets
+    from erde_spark.session import spread_to_cores
     d = _t(spark, sf_dir, 'documents')['documents']
-    return extract_features(synthesize_assets(_spread(spark, d)), fake=True) \
+    return extract_features(synthesize_assets(spread_to_cores(d)), fake=True) \
         .select('asset_id', F.round('feat_mean', 4).alias('feat_mean'),
                 F.round('feat_std', 4).alias('feat_std'))
 
@@ -4328,6 +4319,7 @@ def q_audio_features_check(spark, sf_dir):
     import pandas as pd
 
     from erde_spark.scale.multimodal import ASSET_SCHEMA, audio_features
+    from erde_spark.session import spread_to_cores
     d = _t(spark, sf_dir, 'documents')['documents'].select('doc_id')
 
     def _synth(batches):
@@ -4347,7 +4339,7 @@ def q_audio_features_check(spark, sf_dir):
                              ('audio/wav', None, None, len(blob))))
             yield pd.DataFrame(rows, columns=['asset_id', 'media', 'meta'])
 
-    assets = _spread(spark, d).mapInPandas(_synth, schema=ASSET_SCHEMA)
+    assets = spread_to_cores(d).mapInPandas(_synth, schema=ASSET_SCHEMA)
     return (audio_features(assets, sample_rate=8000)
             .select('asset_id', 'n_frames', 'rms',
                     F.col('zero_cross_rate').alias('zcr'))
@@ -4379,6 +4371,7 @@ def q_multimodal_features_check(spark, sf_dir):
     import pandas as pd
 
     from erde_spark.scale.multimodal import ASSET_SCHEMA, extract_features
+    from erde_spark.session import spread_to_cores
     d = _t(spark, sf_dir, 'documents')['documents'].select('doc_id')
 
     def _mk(batches):
@@ -4399,7 +4392,7 @@ def q_multimodal_features_check(spark, sf_dir):
             yield pd.DataFrame({'asset_id': ids, 'media': blobs,
                                 'meta': metas})
 
-    assets = _spread(spark, d).mapInPandas(_mk, schema=ASSET_SCHEMA)
+    assets = spread_to_cores(d).mapInPandas(_mk, schema=ASSET_SCHEMA)
     return (extract_features(assets)
             .select('asset_id', 'feat_mean', 'feat_std',
                     F.element_at('features', 1).alias('feat_first'),
@@ -6584,6 +6577,7 @@ def q_audio_dedup_check(spark, sf_dir):
 
     from erde_spark.scale.audiohash import audio_dedup_pairs
     from erde_spark.scale.multimodal import ASSET_SCHEMA
+    from erde_spark.session import spread_to_cores
     d = _t(spark, sf_dir, 'documents')['documents'] \
         .select('doc_id').where(F.col('doc_id') < 1200)
 
@@ -6618,7 +6612,7 @@ def q_audio_dedup_check(spark, sf_dir):
 
     # spread the synthesis+FFT over the executors: the filtered scan
     # would otherwise land in one or two input partitions
-    assets = _spread(spark, d).mapInPandas(_synth, schema=ASSET_SCHEMA)
+    assets = spread_to_cores(d).mapInPandas(_synth, schema=ASSET_SCHEMA)
     pairs = audio_dedup_pairs(assets, min_shared=8)
     return (pairs.select('id_a', 'id_b', F.lit(1).alias('found'))
             .orderBy('id_a'))
@@ -7041,461 +7035,255 @@ FROM customer
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order matters: the driver's correctness gate checks the
-    FIRST 50 entries, so positions 1-50 hold exactly one-or-more oracled
-    queries per SURVEY.md §2 operator family (relational core, subset/
-    lookup/stats facades, windows, set-ops, time-series extensions, agg
-    shapes, function surfaces, sketches, event windows, geo measures,
-    the sjoin family, text, dedup, similarity) plus the curation-
-    pipeline family (decontamination, repetition, corpus mixing,
-    sequence packing, OOV rate). Redundant per-family variants (all
-    green in earlier gates, see CORRECTNESS_r01.json), TPC-H variants,
-    and the rows-only queries sit at the tail.
+# ---------------------------------------------------------------- registry
+# Each query is declared exactly once, here. queries(),
+# oracle_sql() and bench_queries() (bench.py's headline set) all derive
+# from this table; add a query by adding one row. Rows keep the
+# historical registration order. Queries without oracle SQL are
+# approximate (LSH recall), external-service backed, or not
+# SQL-expressible; the shared component machinery of the LSH dedups is
+# still value-gated via cluster_components_jaccard.
 
-    Round-3 rotation: the 6 oracled queries that had never had a
-    driver-side row (geo_line_buffer, dedup_containment, corpus_health,
-    text_quality_filter, sample_stratified, sample_split — all green
-    against the local DuckDB replica) moved into the first-50 window;
-    6 twice-green entries (tpch_q1/q6, subset_dsl, lookup_customer,
-    crossjoin_dims, column_stats — green in BOTH r01 and r02) moved to
-    the tail; the four NEW oracled queries of this round
-    (lm_quality_score, token_divergence, dedup_cluster_sizes,
-    bpe_pair_stats, profile_orders) also sit in the window, displacing
-    five more twice-green entries (asof_last_click, resample_locf,
-    window_top3_orders, percentile_prices, string_funcs).
+#: (name, query_fn, oracle SQL or None, in bench.py's headline set)
+QUERY_TABLE = [
+    ('routing_route_check', q_routing_route_check,
+     _ROUTING_ROUTE_CHECK_SQL, True),
+    ('od_table_check', q_od_table_check, _OD_TABLE_CHECK_SQL, True),
+    ('isochrone_grid_check', q_isochrone_grid_check,
+     _ISOCHRONE_GRID_CHECK_SQL, True),
+    ('stream_join_attrib', q_stream_join_attrib,
+     _STREAM_JOIN_ATTRIB_SQL, True),
+    ('d4_check', q_d4_check, _D4_CHECK_SQL, True),
+    ('bloom_decontaminate', q_bloom_decontaminate, _BLOOM_DECON_SQL, True),
+    ('zarr_roundtrip', q_zarr_roundtrip, _ZARR_ROUNDTRIP_SQL, True),
+    ('top_tokens', q_top_tokens, _TOP_TOKENS_SQL, True),
+    ('token_count_bpe', q_token_count_bpe, _TOKEN_BPE_SQL, True),
+    ('text_analysis', q_text_analysis, _TEXT_SQL, True),
+    ('simhash_check', q_simhash_check, _SIMHASH_CHECK_SQL, False),
+    ('readability', q_readability, _READABILITY_SQL, True),
+    ('passage_span_check', q_passage_span_check,
+     _PASSAGE_SPAN_CHECK_SQL, False),
+    ('minhash_cluster_check', q_minhash_cluster_check,
+     _MINHASH_CLUSTER_CHECK_SQL, False),
+    ('embedding_lsh_check', q_embedding_lsh_check,
+     _EMBEDDING_LSH_CHECK_SQL, False),
+    ('embedding_cluster_check', q_embedding_cluster_check,
+     _EMBEDDING_CLUSTER_CHECK_SQL, False),
+    ('ann_rank1_check', q_ann_rank1_check, _ANN_RANK1_CHECK_SQL, False),
+    ('dsir_weights', q_dsir_weights, _DSIR_SQL, True),
+    ('image_phash_dedup', q_image_phash_dedup, _IMAGE_PHASH_SQL, True),
+    ('video_metadata', q_video_metadata, _VIDEO_META_SQL, True),
+    ('mojibake_fix', q_mojibake_fix, _MOJIBAKE_SQL, True),
+    ('url_canonical_dedup', q_url_canonical_dedup, _URL_CANON_SQL, True),
+    ('robots_filter', q_robots_filter, _ROBOTS_SQL, True),
+    ('warc_ingest', q_warc_ingest, _WARC_INGEST_SQL, True),
+    ('geo_line_buffer', q_geo_line_buffer, _LINE_BUFFER_SQL, False),
+    ('bitext_mine_check', q_bitext_mine_check, _BITEXT_MINE_SQL, True),
+    ('geo_transform_registry', q_geo_transform_registry,
+     _GEO_TRANSFORM_REGISTRY_SQL, True),
+    ('text_quality_filter', q_text_quality_filter,
+     _quality_filter_sql(), True),
+    ('html_extract', q_html_extract, _html_sql(), True),
+    ('token_divergence', q_token_divergence, _TOKEN_DIVERGENCE_SQL, True),
+    ('passage_dedup', q_passage_dedup, _PASSAGE_DEDUP_SQL, False),
+    ('dedup_against_snapshot', q_dedup_against_snapshot,
+     _DEDUP_AGAINST_SQL, False),
+    ('domain_filter', q_domain_filter, _DOMAIN_FILTER_SQL, False),
+    ('events_stateful_check', q_events_stateful_check,
+     _EVENTS_STATEFUL_CHECK_SQL, True),
+    ('bpe_merges_check', q_bpe_merges_check, _BPE_MERGES_CHECK_SQL, True),
+    ('audio_features_check', q_audio_features_check, _AUDIO_CHECK_SQL, True),
+    ('multimodal_features_check', q_multimodal_features_check,
+     _MULTIMODAL_CHECK_SQL, True),
+    ('split_no_leakage', q_split_no_leakage, _SPLIT_NO_LEAKAGE_SQL, False),
+    ('bpe_pair_stats', q_bpe_pair_stats, _BPE_PAIR_SQL, False),
+    ('dedup_cluster_sizes', q_dedup_cluster_sizes,
+     _DEDUP_CLUSTER_SIZES_SQL, False),
+    ('cap_per_domain', q_cap_per_domain, _CAP_PER_DOMAIN_SQL, True),
+    ('dedup_lines_within_doc', q_dedup_lines_within_doc,
+     _DEDUP_LINES_SQL, True),
+    ('exactsubstr_cut', q_exactsubstr_cut, _EXACTSUBSTR_CUT_SQL, True),
+    ('media_decode_mixed', q_media_decode_mixed, _MEDIA_DECODE_SQL, True),
+    ('video_frame_dedup', q_video_frame_dedup, _VIDEO_FRAME_DEDUP_SQL, True),
+    ('pack_bestfit_check', q_pack_bestfit_check, _PACK_BESTFIT_SQL, True),
+    ('wds_roundtrip', q_wds_roundtrip, _WDS_ROUNDTRIP_SQL, True),
+    ('tfrecord_roundtrip', q_tfrecord_roundtrip,
+     _TFRECORD_ROUNDTRIP_SQL, True),
+    ('boilerplate_lines', q_boilerplate_lines, _BOILERPLATE_SQL, True),
+    ('nb_classifier', q_nb_classifier, _NB_SQL, True),
+    ('chunk_documents', q_chunk_documents, _CHUNK_SQL, True),
+    ('langid_nb', q_langid_nb, _LANGID_SQL, True),
+    # -- tail: driver-green in earlier rounds (history in CHANGES.md) --
+    ('geo_transform', q_geo_transform, _GEO_TRANSFORM_SQL, False),
+    ('geo_transform_families', q_geo_transform_families,
+     _GEO_TRANSFORM_FAMILIES_SQL, False),
+    ('lookup_customer', q_lookup_customer, _LOOKUP_SQL, True),
+    ('crossjoin_dims', q_crossjoin_dims, _CROSSJOIN_SQL, False),
+    ('column_stats', q_column_stats, _STATS_SQL, True),
+    ('window_top3_orders', q_window_top3, _WINDOW_SQL, True),
+    ('asof_last_click', q_asof_last_click, _ASOF_SQL, True),
+    ('resample_locf', q_resample_locf, _RESAMPLE_SQL, True),
+    ('percentile_prices', q_percentile_prices, _PERCENTILE_SQL, True),
+    ('string_funcs', q_string_funcs, _STRING_FUNCS_SQL, False),
+    ('anti_join_no_urgent', q_anti_join, _ANTI_SQL, False),
+    ('scalar_subquery_acctbal', q_scalar_subquery, _SCALAR_SUB_SQL, False),
+    ('sketch_cardinality', q_sketch_cardinality, _SKETCH_SQL, False),
+    ('events_hourly', q_events_hourly, _EVENTS_HOURLY_SQL, True),
+    ('events_sessionize', q_events_sessionize, _SESSIONIZE_SQL, True),
+    ('range_band_join', q_range_band_join, _RANGE_BAND_SQL, True),
+    ('full_outer_priority', q_full_outer_priority, _FULL_OUTER_SQL, False),
+    ('pivot_priority_revenue', q_pivot_priority_revenue, _PIVOT_SQL, False),
+    ('rollup_pricing', q_rollup_pricing, _ROLLUP_SQL, True),
+    ('corpus_mix', q_corpus_mix, _CORPUS_MIX_SQL, True),
+    ('pack_sequences', q_pack_sequences, _PACK_SQL, True),
+    ('oov_rate', q_oov_rate, _OOV_SQL, True),
+    ('profile_orders', q_profile_orders, _PROFILE_SQL, False),
+    ('geo_rect_area', q_geo_rect_area, _GEO_AREA_SQL, True),
+    ('geo_line_length', q_geo_line_length, _GEO_LENGTH_SQL, False),
+    ('geo_buffer_area', q_geo_buffer_area, _GEO_BUFFER_SQL, True),
+    ('sample_hash', q_sample_hash, _SAMPLE_HASH_SQL, False),
+    ('bm25_search', q_bm25_search, _BM25_SQL, True),
+    ('set_ops', q_set_ops, _SET_OPS_SQL, False),
+    ('tpch_q12_late_lines', q_tpch_q12, _Q12_SQL, False),
+    ('repetition_ngrams', q_repetition_ngrams, _REPETITION_SQL, True),
+    ('dedup_jaccard', q_dedup_jaccard, _DEDUP_JACCARD_SQL, False),
+    ('dedup_containment', q_dedup_containment, _DEDUP_CONTAIN_SQL, False),
+    ('corpus_health', q_corpus_health, _corpus_health_sql(), False),
+    ('sample_stratified', q_sample_stratified, _SAMPLE_STRAT_SQL, False),
+    ('sample_split', q_sample_split, _SAMPLE_SPLIT_SQL, False),
+    ('pii_scrub', q_pii_scrub, _pii_sql(), True),
+    ('domain_stats', q_domain_stats, _domain_stats_sql(), True),
+    ('lm_quality_score', q_lm_quality_score, _LM_QUALITY_SQL, True),
+    ('backfill_resume_check', q_backfill_resume_check,
+     _BACKFILL_RESUME_SQL, False),
+    ('weighted_sample_check', q_weighted_sample_check,
+     _WEIGHTED_SAMPLE_SQL, False),
+    ('zst_roundtrip', q_zst_roundtrip, _ZST_ROUNDTRIP_SQL, False),
+    ('npy_roundtrip', q_npy_roundtrip, _NPY_ROUNDTRIP_SQL, False),
+    ('semdedup_check', q_semdedup_check, _SEMDEDUP_SQL, False),
+    ('inverted_index_check', q_inverted_index_check,
+     _INVERTED_INDEX_SQL, False),
+    ('postings_lookup_check', q_postings_lookup_check,
+     _POSTINGS_LOOKUP_SQL, False),
+    ('upsert_latest_check', q_upsert_latest_check, _UPSERT_LATEST_SQL, False),
+    ('zst_stream_ingest', q_zst_stream_ingest, _ZST_STREAM_SQL, False),
+    ('kneser_ney_check', q_kneser_ney_check, _KNESER_NEY_SQL, False),
+    ('mmr_select_check', q_mmr_select_check, _MMR_SELECT_SQL, False),
+    ('safetensors_roundtrip', q_safetensors_roundtrip,
+     _SAFETENSORS_ROUNDTRIP_SQL, False),
+    ('normalize_text_check', q_normalize_text_check,
+     _NORMALIZE_TEXT_SQL, False),
+    ('geo_transform_polar', q_geo_transform_polar,
+     _GEO_TRANSFORM_POLAR_SQL, True),
+    ('geo_lonlat_detect', q_geo_lonlat_detect, _LONLAT_SQL, False),
+    ('geo_buffer_dissolve', q_geo_buffer_dissolve,
+     _BUFFER_DISSOLVE_SQL, False),
+    ('sjoin_points_rects', q_sjoin_points_rects, _SJOIN_SQL, True),
+    ('snearest_rect', q_snearest_rect, _SNEAREST_SQL, True),
+    ('sjfull_geoms', q_sjfull_geoms, _SJFULL_SQL, False),
+    ('sagg_rect_demand', q_sagg_rect_demand, _SAGG_SQL, True),
+    ('sfilter_outside', q_sfilter_outside, _SFILTER_SQL, True),
+    ('slookup_nation', q_slookup_nation, _SLOOKUP_SQL, False),
+    ('c4_filter', q_c4_filter, _C4_FILTER_SQL, True),
+    ('warc_stream_ingest', q_warc_stream_ingest, _WARC_INGEST_SQL, True),
+    ('streaming_dedup_check', q_streaming_dedup_check,
+     _STREAMING_DEDUP_CHECK_SQL, False),
+    ('dedup_exact', q_dedup_exact, _DEDUP_EXACT_SQL, True),
+    ('quality_classifier', q_quality_classifier,
+     _QUALITY_CLASSIFIER_SQL, True),
+    ('dedup_jaccard_ngram', q_dedup_jaccard_ngram,
+     _DEDUP_JACCARD_NGRAM_SQL, False),
+    ('cluster_components_jaccard', q_cluster_components_jaccard,
+     _CLUSTER_CC_SQL, False),
+    ('dedup_embedding', q_dedup_embedding, _DEDUP_EMBEDDING_SQL, False),
+    ('similarity_topk', q_similarity_topk, _SIMILARITY_TOPK_SQL, True),
+    ('contamination_check', q_contamination, _CONTAMINATION_SQL, True),
+    ('date_funcs', q_date_funcs, _DATE_FUNCS_SQL, False),
+    ('array_funcs', q_array_funcs, _ARRAY_FUNCS_SQL, False),
+    ('tpch_q3_topk', q_tpch_q3, _Q3_SQL, True),
+    ('tpch_q5_region_revenue', q_tpch_q5, _Q5_SQL, True),
+    ('tpch_q4_semijoin', q_tpch_q4, _Q4_SQL, False),
+    ('tpch_q13_custdist', q_tpch_q13, _Q13_SQL, False),
+    ('tpch_q18_bigorders', q_tpch_q18, _Q18_SQL, False),
+    ('tpch_q19_disjunctive', q_tpch_q19, _Q19_SQL, False),
+    ('tpch_q10_returns', q_tpch_q10, _Q10_SQL, False),
+    ('tpch_q2_min_supplier', q_tpch_q2, _Q2_SQL, False),
+    ('tpch_q7_nation_volume', q_tpch_q7, _Q7_SQL, False),
+    ('tpch_q8_mktshare', q_tpch_q8, _Q8_SQL, False),
+    ('tpch_q9_profit', q_tpch_q9, _Q9_SQL, False),
+    ('tpch_q11_important_parts', q_tpch_q11, _Q11_SQL, False),
+    ('tpch_q14_promo', q_tpch_q14_promo, _Q14_SQL, False),
+    ('tpch_q15_top_supplier', q_tpch_q15, _Q15_SQL, False),
+    ('tpch_q16_supplier_cnt', q_tpch_q16, _Q16_SQL, False),
+    ('tpch_q17_small_qty', q_tpch_q17, _Q17_SQL, False),
+    ('tpch_q20_heavy_shippers', q_tpch_q20, _Q20_SQL, False),
+    ('tpch_q21_waiting', q_tpch_q21, _Q21_SQL, False),
+    ('tpch_q22_idle_customers', q_tpch_q22, _Q22_SQL, False),
+    ('cube_orders', q_cube_orders, _CUBE_SQL, False),
+    ('distinct_segments', q_distinct_segments, _DISTINCT_SQL, False),
+    ('supplier_by_nation', q_supplier_by_nation, _SUPPLIER_SQL, False),
+    ('window_running_revenue', q_window_running, _WINDOW_RUNNING_SQL, False),
+    ('events_sliding', q_events_sliding, _EVENTS_SLIDING_SQL, False),
+    ('events_json', q_events_json, _EVENTS_JSON_SQL, True),
+    ('grouping_sets_orders', q_grouping_sets, _GROUPING_SETS_SQL, False),
+    ('tpch_q1_pricing', q_tpch_q1, _Q1_SQL, True),
+    ('tpch_q6_revenue', q_tpch_q6, _Q6_SQL, False),
+    ('subset_dsl', q_subset_dsl, _SUBSET_SQL, False),
+    ('span_corrupt_check', q_span_corrupt_check, _SPAN_CORRUPT_SQL, True),
+    ('temperature_mix_check', q_temperature_mix_check,
+     _TEMPERATURE_MIX_SQL, True),
+    ('avro_roundtrip', q_avro_roundtrip, _AVRO_ROUNDTRIP_SQL, True),
+    ('ul2_mix_check', q_ul2_mix_check, _UL2_MIX_SQL, True),
+    ('audio_dedup_check', q_audio_dedup_check, _AUDIO_DEDUP_SQL, True),
+    ('domain_pagerank_check', q_domain_pagerank_check,
+     _DOMAIN_PAGERANK_SQL, True),
+    ('hard_negative_check', q_hard_negative_check, _HARD_NEGATIVE_SQL, True),
+    ('curation_pipeline_check', q_curation_pipeline_check,
+     _CURATION_PIPELINE_SQL, True),
+    ('bitext_lsh_check', q_bitext_lsh_check, _BITEXT_LSH_SQL, True),
+    ('fim_transform_check', q_fim_transform_check, _FIM_TRANSFORM_SQL, True),
+    ('chat_spans_check', q_chat_spans_check, _CHAT_SPANS_SQL, True),
+    ('compression_filter_check', q_compression_filter_check,
+     _COMPRESSION_FILTER_SQL, True),
+    ('perplexity_rank_check', q_perplexity_rank_check,
+     _PERPLEXITY_RANK_SQL, True),
+    ('megatron_roundtrip', q_megatron_roundtrip,
+     _MEGATRON_ROUNDTRIP_SQL, True),
+    ('ccnet_buckets_check', q_ccnet_buckets_check, _CCNET_BUCKETS_SQL, True),
+    ('global_shuffle_check', q_global_shuffle_check,
+     _GLOBAL_SHUFFLE_SQL, True),
+    ('unimax_mix_check', q_unimax_mix_check, _UNIMAX_MIX_SQL, True),
+    ('stream_shards_roundtrip', q_stream_shards_roundtrip,
+     _STREAM_SHARDS_SQL, True),
+    ('sentence_split_check', q_sentence_split_check,
+     _SENTENCE_SPLIT_SQL, True),
+    ('text_winnow_pairs', q_text_winnow, None, False),
+    ('audio_features', q_audio_features, None, True),
+    ('bpe_train_merges', q_bpe_train_merges, None, False),
+    ('dedup_minhash_lsh', q_dedup_minhash_lsh, None, True),
+    ('dedup_simhash', q_dedup_simhash, None, True),
+    ('dedup_embedding_lsh', q_dedup_embedding_lsh, None, False),
+    ('dedup_embedding_clusters', q_dedup_embedding_clusters, None, True),
+    ('dedup_clusters', q_dedup_clusters, None, True),
+    ('similarity_lsh', q_similarity_lsh, None, True),
+    ('similarity_ivf', q_similarity_ivf, None, False),
+    ('multimodal_features', q_multimodal_features, None, True),
+    ('routing_route', q_routing_route, None, False),
+    ('routing_od_table', q_routing_od_table, None, False),
+    ('routing_isochrone', q_routing_isochrone, None, False),
+    ('events_stateful', q_events_stateful, None, False),
+    ('streaming_neardup_backfill', q_streaming_neardup_backfill, None, True),
+    ('similarity_ivfpq', q_similarity_ivfpq, None, True),
+    ('winnow_passages', q_winnow_passages, None, False),
+    ('d4_survivors_check', q_d4_survivors_check, _D4_SURVIVORS_SQL, False),
+    ('manifest_snapshot', q_manifest_snapshot, _MANIFEST_SNAPSHOT_SQL, False),
+    ('stream_manifest_check', q_stream_manifest_check,
+     _STREAM_MANIFEST_SQL, False),
+]
 
-    Round-4 rotation: the new oracled queries geo_transform_families
-    (round-trip check of the sterea/omerc/krovak projection families),
-    pii_scrub, domain_stats, image_phash_dedup (construction-oracled
-    PNG->pHash->Hamming-band->CC pipeline), html_extract (byte-exact
-    cross-engine boilerplate stripping), dsir_weights (importance
-    resampling) and video_metadata (construction-oracled ISO-BMFF
-    parse + frame-range planning) enter the window; oov_rate,
-    corpus_mix, pack_sequences, range_band_join, rollup_pricing,
-    pivot_priority_revenue and full_outer_priority (every one
-    driver-green in r03, most in r01-r03) move to the tail.
-
-    Round-5 rotation: the new construction-oracled warc_ingest
-    (segment round-trip: encode -> streamed read_warc -> documents
-    bridge, per-segment md5 check) and video_frame_dedup (MJPEG mux ->
-    ranged sample decode -> pHash -> Hamming band join -> CC) enter the
-    window, as do mojibake_fix (construction-oracled UTF-8-as-Latin-1
-    corruption repair, byte-exact md5 vs the uncorrupted text) and
-    url_canonical_dedup (URL-spelling collapse vs arithmetic oracle);
-    robots_filter (RFC 9309 parse + longest-match filter vs the
-    arithmetic oracle) and boilerplate_lines (CCNet corpus-frequent
-    line removal, md5-exact vs DuckDB replaying the same
-    count/filter/rebuild), nb_classifier (closed-form Naive Bayes
-    training replayed exactly by DuckDB — the classifier family's
-    value-checked member) and chunk_documents (overlapping
-    token-window passage splitter vs DuckDB list slicing) also enter;
-    displaced to the tail:
-    tpch_q12_late_lines, geo_rect_area, geo_line_length and
-    geo_buffer_area (driver-green r01/02-r04),
-    set_ops, sample_hash, bm25_search (driver-green r02-r04) and
-    profile_orders (driver-green r03-r04). The new rows-only quality_classifier also sits at the
-    tail.
-    Round-6 rotation: langid_nb (30-language char-n-gram NB language
-    identification, construction-oracled — every planted held-out
-    sentence must be classified correctly, truth fixed by doc_id
-    arithmetic) and quality_classifier (now VALUE-checked: every real
-    document must outrank its gibberish twin, pure-boolean output vs
-    the arithmetic oracle — replacing its former rows-only tail entry)
-    enter the window, as does warc_stream_ingest (the streaming
-    binaryFile->record-parser->documents front door, per-segment
-    md5-oracled across multiple availableNow micro-batches);
-    dedup_jaccard, repetition_ngrams and top_tokens (all driver-green
-    r02-r05) move to the tail. c4_filter (the published C4 cleaning
-    recipe, md5-exact vs the arithmetic construction) and
-    streaming_dedup_check (the streaming near-dup pipeline on planted
-    exact-copy pairs — cross-batch pairs prove the persistent-store
-    join executes; survivors are pure doc_id arithmetic) also enter,
-    displacing text_analysis and token_count_bpe (driver-green
-    r02-r05). Four planted-exact-copy construction gates
-    (simhash_check, embedding_lsh_check, minhash_cluster_check,
-    embedding_cluster_check) make the probabilistic dedup families
-    deterministic — identical inputs collide in every band/pigeonhole,
-    so recall is 1 by construction and exact verification pins
-    precision — displacing dedup_containment, corpus_health,
-    sample_stratified and sample_split (all driver-green r03-r05).
-    ann_rank1_check (planted identical-vector queries must come back
-    at rank 1 from BOTH lsh_topk and ivfpq_topk) and
-    passage_span_check (planted copied passages inside otherwise-
-    unique documents must surface exactly the planted pairs) also
-    enter, displacing pii_scrub and domain_stats (driver-green
-    r04-r05); readability (Flesch metrics, value-hashed UNROUNDED —
-    fixed-order per-row IEEE scalar arithmetic is bit-reproducible)
-    enters too, displacing lm_quality_score (driver-green r03-r05).
-
-    Round-7 rotation: four new construction gates enter the window —
-    events_stateful_check (applyInPandasWithState persistence across
-    mtime-ordered micro-batches: final per-user maxima equal corpus
-    totals ONLY if batch 2 read batch 1's state), bpe_merges_check
-    (the full greedy BPE trace on an engineered word multiset:
-    adjacency counts, merge application, lexicographic tie-breaks and
-    early stop are all closed-form in N), audio_features_check (real
-    WAV square waves with IEEE-exact RMS/ZCR, unrounded) and
-    multimodal_features_check (real PNGs with closed-form pixel
-    statistics through the full encode->decode->featurize path,
-    unrounded) — displacing token_divergence, dedup_cluster_sizes,
-    bpe_pair_stats (all driver-green r03-r06) and html_extract
-    (driver-green r04-r06). Two new curation operators also enter:
-    cap_per_domain (the C4/RefinedWeb domain-frequency cap as a
-    skew-aware two-phase operator, md5-hash-order kept set replayed
-    exactly by DuckDB ROW_NUMBER) and dedup_lines_within_doc
-    (within-document repeated-line removal, construction-oracled,
-    pure codegen) — displacing passage_dedup and
-    dedup_against_snapshot (both driver-green r04-r06).
-    Round-8 rotation (verdict ask #5 honored: no oracled query goes
-    more than 2 rounds without a fresh driver-green): the EIGHT r06-
-    displaced queries return to the window — html_extract,
-    token_divergence, passage_dedup, dedup_against_snapshot,
-    domain_filter, split_no_leakage, bpe_pair_stats and
-    dedup_cluster_sizes (all last driver-green r06) — plus two
-    round-8 newcomers: bitext_mine_check (Artetxe & Schwenk margin-
-    based bitext mining on planted exact translations: the kept pair
-    set is pure vec_id arithmetic) and geo_transform_registry (the
-    generated EPSG catalogue tail — World Mercator 9804, Japan CS I,
-    polar-aspect LAEA, GK CM variant — zero-error round trips plus the
-    4,000,000 m zone-vs-CM false-easting invariant DuckDB replays
-    exactly), tfrecord_roundtrip (TFRecord export/ingest: Example
-    protobuf + CRC-32C framing hand-implemented from the published
-    specs, md5-exact round trip with CRC verification on),
-    pack_bestfit_check (whole-document best-fit bin
-    packing on an exact-halves 60/40-token construction: every
-    sequence must fill to exactly 100 — pairing-independent, pure
-    rank arithmetic for DuckDB), and wds_roundtrip (WebDataset
-    tar-shard export/ingest round trip, md5-exact per document — the
-    training-loader interchange format). Displaced to the tail:
-    simhash_check, embedding_lsh_check, minhash_cluster_check,
-    embedding_cluster_check, ann_rank1_check, passage_span_check,
-    readability, image_phash_dedup, dsir_weights, video_metadata,
-    mojibake_fix, url_canonical_dedup and robots_filter (all
-    driver-green in at least two of r05-r07).
-    Round-9 rotation (verdict ask #1 — FRESHNESS): the window is now
-    packed STALEST-FIRST, mechanically enforced by
-    tools/check_rotation.py (no out-of-window oracled query may be
-    staler than any in-window one; freshness horizon K=4). The r09
-    window therefore leads with the 28 r1-era queries (the TPC-H /
-    window / set-op / events block — last driver-green r01), then the
-    11 r2-era (tpch_q1/q6, subset_dsl, lookup_customer, crossjoin_dims,
-    column_stats, window_top3_orders, asof_last_click, resample_locf,
-    percentile_prices, string_funcs), the round-9 newcomers
-    bitext_lsh_check (the bitext miner's declared 100 TB LSH retriever,
-    recall provably 1.0 on planted identical twins),
-    perplexity_rank_check (CCNet LM scoring), megatron_roundtrip (the
-    .bin/.idx binarized-token interchange format, full round trip),
-    ccnet_buckets_check (head/middle/tail per-language percent_rank
-    split), global_shuffle_check (deterministic md5 training-order
-    permutation, engine-portable), unimax_mix_check (UniMax
-    epoch-capped budget waterfill, n-independent construction),
-    stream_shards_roundtrip (the foreachBatch bridge from a curation
-    stream to the training sinks, md5-exact across micro-batch
-    boundaries) and sentence_split_check (rule-based sentence
-    segmentation, byte-exact planted constructions), and 4 of the 12
-    r3-era queries (pack_sequences, oov_rate, full_outer_priority,
-    pivot_priority_revenue, rollup_pricing, range_band_join,
-    events_sessionize and events_hourly defer to the r10 window, the
-    least-stale of the cohort — all still r03, so stalest-first
-    packing holds by tie). Everything last green r04+ moves to the
-    tail; the r10 window picks up the eight deferred r3-era queries
-    then the r4/r5/r7 cohorts.
-    Late round-9 additions: fim_transform_check (fill-in-the-middle
-    augmentation, md5-byte-exact vs DuckDB), chat_spans_check (SFT
-    ChatML rendering + loss-mask character spans),
-    compression_filter_check (zlib ratio quality band on planted
-    classes), curation_pipeline_check (the composed quality ->
-    compression -> PII -> dedup pipeline on a four-class planted
-    corpus, one class per stage), hard_negative_check (contrastive
-    hard-negative mining on planted angle geometry) and
-    span_corrupt_check (T5 masked-span denoising, inputs+targets
-    byte-replayed on the real documents), temperature_mix_check
-    (mT5 exponentiated-smoothing mixing, rational-quota construction)
-    avro_roundtrip (hand-rolled Avro OCF, md5-exact round trip,
-    cross-validated vs the reference Apache jar) ul2_mix_check
-    (UL2 mixture-of-denoisers, all three objectives byte-replayed)
-    audio_dedup_check (Haitsma-Kalker audio fingerprint dedup on
-    planted WAV twins) and domain_pagerank_check (link-graph
-    centrality, DuckDB replaying the power iterations as chained
-    CTEs) enter the window as never-green newcomers (stalest by
-    definition); the seven freshest in-window queries
-    (anti_join_no_urgent, scalar_subquery_acctbal, sketch_cardinality
-    — last green r03 — and string_funcs, percentile_prices,
-    resample_locf, asof_last_click, window_top3_orders, column_stats,
-    crossjoin_dims, lookup_customer — r02, the era the out-of-window
-    minimum then becomes, so stalest-first packing still holds by
-    tie) move to the head of the tail and rotate back in r10.
-    Round-10 rotation (verdict asks #1/#4 — drain the backlog): with
-    the entire r09 window green in CORRECTNESS_r09, the window is
-    repacked from scratch as the 50 STALEST out-of-window queries:
-    the full over-K backlog — the 8 r02-era (lookup_customer ...
-    string_funcs), 12 r03-era (anti_join_no_urgent ... oov_rate),
-    8 r04-era (profile_orders ... tpch_q12_late_lines) and 12 r05-era
-    (repetition_ngrams ... lm_quality_score) queries — plus 10 of the
-    13 r07-era (simhash_check ... video_metadata, registry order);
-    mojibake_fix, url_canonical_dedup and robots_filter (also r07, a
-    tie with the in-window max, so stalest-first holds) lead the tail
-    and rotate in r11 together with the r08 cohort. After this window
-    lands green the oldest out-of-window green is r07, completing the
-    K=4 drain the round-9 verdict scheduled. tools/check_rotation.py
-    verifies this ordering mechanically against the CORRECTNESS
-    ledger (including the round-boundary PRE-ROTATION grace state).
-    Newcomers added during round 10 (never driver-green, staleness 0)
-    enter the window displacing the freshest r07-era entries, which
-    rejoin the r11 cohort — ties keep stalest-first packing legal.
-    Final r10 state: 13 newcomers in-window (weighted_sample, zst x2,
-    npy, safetensors, semdedup, inverted-index x2, upsert, kneser-ney,
-    mmr, normalize-text, backfill-resume); all r07-era entries plus
-    top_tokens/token_count_bpe/text_analysis (r05, the over-K trio
-    check_rotation reports as correctly scheduled) lead the tail; the
-    r11 window = 13 r07s + 3 r05s + 34 r08s, exactly 50 (see
-    ROUND10_NOTES.md).
-
-    Round-11 rotation: SEVEN never-green oracled newcomers enter the
-    window — the three construction-oracled routing gates
-    (routing_route_check, od_table_check, isochrone_grid_check — the
-    mock-OSRM straight-line metrics made pure key arithmetic so DuckDB
-    replays them; SURVEY §2.7's first driver-green rows), the
-    watermarked stream-stream interval join (stream_join_attrib), D4
-    data selection (d4_check), Bloom-prefiltered decontamination
-    (bloom_decontaminate, oracle = the plain exact anti-join) and the
-    Zarr v2 roundtrip (zarr_roundtrip) — plus the 43 stalest per
-    check_rotation.py's printed repack (the r05 trio + 13 r07s + 27
-    r08s); the seven r08 entries displaced (chunk_documents,
-    langid_nb, geo_transform, geo_transform_families,
-    geo_transform_polar, geo_lonlat_detect, geo_buffer_dissolve) wait
-    for r12 with the remaining r08s + oldest r09s (26 r08s then remain
-    out-of-window — r12's 50 slots cover them all inside the K=4
-    horizon).
-
-    Round-12 rotation (verdict ask #1 — the hard freshness
-    obligation): the window is now composed MECHANICALLY — `base`
-    holds every registered query in its historical order and
-    `_R12_WINDOW` below lists the 50 gates of this round's window:
-    THREE never-green newcomers (d4_survivors_check, the survivor-SET
-    gate at a second knob setting, verdict ask #6; manifest_snapshot,
-    the dataset-level atomic-commit round trip with time travel and
-    rogue-file invisibility; stream_manifest_check, the exactly-once
-    streaming publish surviving a forced full replay) followed by the
-    first 47 of check_rotation.py's printed 50-stalest repack (the 26
-    out-of-window r08s that would cross the K=4 horizon at the r12
-    boundary, then the oldest r09s). The last three printed names
-    (window_running_revenue, events_sliding and events_json, all r09)
-    are displaced to r13 — inside the horizon.
-
-    Invariant maintained: every oracled query has a driver-green row in
-    some round's CORRECTNESS file, and the window always refreshes the
-    stalest queries first."""
-    base = {
-        # -- historical order (rotation windows are composed from
-        # -- _R12_WINDOW below; this dict just registers everything) --
-        'routing_route_check': q_routing_route_check,
-        'od_table_check': q_od_table_check,
-        'isochrone_grid_check': q_isochrone_grid_check,
-        'stream_join_attrib': q_stream_join_attrib,
-        'd4_check': q_d4_check,
-        'bloom_decontaminate': q_bloom_decontaminate,
-        'zarr_roundtrip': q_zarr_roundtrip,
-        'top_tokens': q_top_tokens,
-        'token_count_bpe': q_token_count_bpe,
-        'text_analysis': q_text_analysis,
-        'simhash_check': q_simhash_check,
-        'readability': q_readability,
-        'passage_span_check': q_passage_span_check,
-        'minhash_cluster_check': q_minhash_cluster_check,
-        'embedding_lsh_check': q_embedding_lsh_check,
-        'embedding_cluster_check': q_embedding_cluster_check,
-        'ann_rank1_check': q_ann_rank1_check,
-        'dsir_weights': q_dsir_weights,
-        'image_phash_dedup': q_image_phash_dedup,
-        'video_metadata': q_video_metadata,
-        'mojibake_fix': q_mojibake_fix,
-        'url_canonical_dedup': q_url_canonical_dedup,
-        'robots_filter': q_robots_filter,
-        'warc_ingest': q_warc_ingest,
-        'geo_line_buffer': q_geo_line_buffer,
-        'bitext_mine_check': q_bitext_mine_check,
-        'geo_transform_registry': q_geo_transform_registry,
-        'text_quality_filter': q_text_quality_filter,
-        'html_extract': q_html_extract,
-        'token_divergence': q_token_divergence,
-        'passage_dedup': q_passage_dedup,
-        'dedup_against_snapshot': q_dedup_against_snapshot,
-        'domain_filter': q_domain_filter,
-        'events_stateful_check': q_events_stateful_check,
-        'bpe_merges_check': q_bpe_merges_check,
-        'audio_features_check': q_audio_features_check,
-        'multimodal_features_check': q_multimodal_features_check,
-        'split_no_leakage': q_split_no_leakage,
-        'bpe_pair_stats': q_bpe_pair_stats,
-        'dedup_cluster_sizes': q_dedup_cluster_sizes,
-        'cap_per_domain': q_cap_per_domain,
-        'dedup_lines_within_doc': q_dedup_lines_within_doc,
-        'exactsubstr_cut': q_exactsubstr_cut,
-        'media_decode_mixed': q_media_decode_mixed,
-        'video_frame_dedup': q_video_frame_dedup,
-        'pack_bestfit_check': q_pack_bestfit_check,
-        'wds_roundtrip': q_wds_roundtrip,
-        'tfrecord_roundtrip': q_tfrecord_roundtrip,
-        'boilerplate_lines': q_boilerplate_lines,
-        'nb_classifier': q_nb_classifier,
-        'chunk_documents': q_chunk_documents,
-        'langid_nb': q_langid_nb,
-        # -- tail: driver-green in earlier rounds (see rotation notes) --
-        'geo_transform': q_geo_transform,
-        'geo_transform_families': q_geo_transform_families,
-        'lookup_customer': q_lookup_customer,
-        'crossjoin_dims': q_crossjoin_dims,
-        'column_stats': q_column_stats,
-        'window_top3_orders': q_window_top3,
-        'asof_last_click': q_asof_last_click,
-        'resample_locf': q_resample_locf,
-        'percentile_prices': q_percentile_prices,
-        'string_funcs': q_string_funcs,
-        'anti_join_no_urgent': q_anti_join,
-        'scalar_subquery_acctbal': q_scalar_subquery,
-        'sketch_cardinality': q_sketch_cardinality,
-        'events_hourly': q_events_hourly,
-        'events_sessionize': q_events_sessionize,
-        'range_band_join': q_range_band_join,
-        'full_outer_priority': q_full_outer_priority,
-        'pivot_priority_revenue': q_pivot_priority_revenue,
-        'rollup_pricing': q_rollup_pricing,
-        'corpus_mix': q_corpus_mix,
-        'pack_sequences': q_pack_sequences,
-        'oov_rate': q_oov_rate,
-        'profile_orders': q_profile_orders,
-        'geo_rect_area': q_geo_rect_area,
-        'geo_line_length': q_geo_line_length,
-        'geo_buffer_area': q_geo_buffer_area,
-        'sample_hash': q_sample_hash,
-        'bm25_search': q_bm25_search,
-        'set_ops': q_set_ops,
-        'tpch_q12_late_lines': q_tpch_q12,
-        'repetition_ngrams': q_repetition_ngrams,
-        'dedup_jaccard': q_dedup_jaccard,
-        'dedup_containment': q_dedup_containment,
-        'corpus_health': q_corpus_health,
-        'sample_stratified': q_sample_stratified,
-        'sample_split': q_sample_split,
-        'pii_scrub': q_pii_scrub,
-        'domain_stats': q_domain_stats,
-        'lm_quality_score': q_lm_quality_score,
-        'backfill_resume_check': q_backfill_resume_check,
-        'weighted_sample_check': q_weighted_sample_check,
-        'zst_roundtrip': q_zst_roundtrip,
-        'npy_roundtrip': q_npy_roundtrip,
-        'semdedup_check': q_semdedup_check,
-        'inverted_index_check': q_inverted_index_check,
-        'postings_lookup_check': q_postings_lookup_check,
-        'upsert_latest_check': q_upsert_latest_check,
-        'zst_stream_ingest': q_zst_stream_ingest,
-        'kneser_ney_check': q_kneser_ney_check,
-        'mmr_select_check': q_mmr_select_check,
-        'safetensors_roundtrip': q_safetensors_roundtrip,
-        'normalize_text_check': q_normalize_text_check,
-        'geo_transform_polar': q_geo_transform_polar,
-        'geo_lonlat_detect': q_geo_lonlat_detect,
-        'geo_buffer_dissolve': q_geo_buffer_dissolve,
-        'sjoin_points_rects': q_sjoin_points_rects,
-        'snearest_rect': q_snearest_rect,
-        'sjfull_geoms': q_sjfull_geoms,
-        'sagg_rect_demand': q_sagg_rect_demand,
-        'sfilter_outside': q_sfilter_outside,
-        'slookup_nation': q_slookup_nation,
-        'c4_filter': q_c4_filter,
-        'warc_stream_ingest': q_warc_stream_ingest,
-        'streaming_dedup_check': q_streaming_dedup_check,
-        'dedup_exact': q_dedup_exact,
-        'quality_classifier': q_quality_classifier,
-        'dedup_jaccard_ngram': q_dedup_jaccard_ngram,
-        'cluster_components_jaccard': q_cluster_components_jaccard,
-        'dedup_embedding': q_dedup_embedding,
-        'similarity_topk': q_similarity_topk,
-        'contamination_check': q_contamination,
-        'date_funcs': q_date_funcs,
-        'array_funcs': q_array_funcs,
-        'tpch_q3_topk': q_tpch_q3,
-        'tpch_q5_region_revenue': q_tpch_q5,
-        'tpch_q4_semijoin': q_tpch_q4,
-        'tpch_q13_custdist': q_tpch_q13,
-        'tpch_q18_bigorders': q_tpch_q18,
-        'tpch_q19_disjunctive': q_tpch_q19,
-        'tpch_q10_returns': q_tpch_q10,
-        'tpch_q2_min_supplier': q_tpch_q2,
-        'tpch_q7_nation_volume': q_tpch_q7,
-        'tpch_q8_mktshare': q_tpch_q8,
-        'tpch_q9_profit': q_tpch_q9,
-        'tpch_q11_important_parts': q_tpch_q11,
-        'tpch_q14_promo': q_tpch_q14_promo,
-        'tpch_q15_top_supplier': q_tpch_q15,
-        'tpch_q16_supplier_cnt': q_tpch_q16,
-        'tpch_q17_small_qty': q_tpch_q17,
-        'tpch_q20_heavy_shippers': q_tpch_q20,
-        'tpch_q21_waiting': q_tpch_q21,
-        'tpch_q22_idle_customers': q_tpch_q22,
-        'cube_orders': q_cube_orders,
-        'distinct_segments': q_distinct_segments,
-        'supplier_by_nation': q_supplier_by_nation,
-        'window_running_revenue': q_window_running,
-        'events_sliding': q_events_sliding,
-        'events_json': q_events_json,
-        'grouping_sets_orders': q_grouping_sets,
-        'tpch_q1_pricing': q_tpch_q1,
-        'tpch_q6_revenue': q_tpch_q6,
-        'subset_dsl': q_subset_dsl,
-        'span_corrupt_check': q_span_corrupt_check,
-        'temperature_mix_check': q_temperature_mix_check,
-        'avro_roundtrip': q_avro_roundtrip,
-        'ul2_mix_check': q_ul2_mix_check,
-        'audio_dedup_check': q_audio_dedup_check,
-        'domain_pagerank_check': q_domain_pagerank_check,
-        'hard_negative_check': q_hard_negative_check,
-        'curation_pipeline_check': q_curation_pipeline_check,
-        'bitext_lsh_check': q_bitext_lsh_check,
-        'fim_transform_check': q_fim_transform_check,
-        'chat_spans_check': q_chat_spans_check,
-        'compression_filter_check': q_compression_filter_check,
-        'perplexity_rank_check': q_perplexity_rank_check,
-        'megatron_roundtrip': q_megatron_roundtrip,
-        'ccnet_buckets_check': q_ccnet_buckets_check,
-        'global_shuffle_check': q_global_shuffle_check,
-        'unimax_mix_check': q_unimax_mix_check,
-        'stream_shards_roundtrip': q_stream_shards_roundtrip,
-        'sentence_split_check': q_sentence_split_check,
-        'text_winnow_pairs': q_text_winnow,
-        'audio_features': q_audio_features,
-        'bpe_train_merges': q_bpe_train_merges,
-        'dedup_minhash_lsh': q_dedup_minhash_lsh,
-        'dedup_simhash': q_dedup_simhash,
-        'dedup_embedding_lsh': q_dedup_embedding_lsh,
-        'dedup_embedding_clusters': q_dedup_embedding_clusters,
-        'dedup_clusters': q_dedup_clusters,
-        'similarity_lsh': q_similarity_lsh,
-        'similarity_ivf': q_similarity_ivf,
-        'multimodal_features': q_multimodal_features,
-        'routing_route': q_routing_route,
-        'routing_od_table': q_routing_od_table,
-        'routing_isochrone': q_routing_isochrone,
-        'events_stateful': q_events_stateful,
-        'streaming_neardup_backfill': q_streaming_neardup_backfill,
-        'similarity_ivfpq': q_similarity_ivfpq,
-        'winnow_passages': q_winnow_passages,
-        'd4_survivors_check': q_d4_survivors_check,
-        'manifest_snapshot': q_manifest_snapshot,
-        'stream_manifest_check': q_stream_manifest_check,
-    }
-    window = [k for k in _R12_WINDOW]
-    assert len(window) == 50 and len(set(window)) == 50
-    out = {k: base[k] for k in window}
-    out.update((k, v) for k, v in base.items() if k not in out)
-    return out
-
-
-#: the 50-query driver window for round 12 — 1 newcomer + the first 49
-#: of tools/check_rotation.py's printed stalest-first repack (see the
-#: queries() docstring for the composition rationale)
+#: the 50-query gate window, composed stalest-first from
+#: tools/check_rotation.py's printed repack; rotation history is in
+#: CHANGES.md
 _R12_WINDOW = [
     'd4_survivors_check', 'manifest_snapshot', 'stream_manifest_check',
     'chunk_documents', 'langid_nb', 'geo_transform',
@@ -7518,189 +7306,23 @@ _R12_WINDOW = [
 ]
 
 
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query, ``_R12_WINDOW`` first. Order matters: the
+    correctness gate checks the FIRST 50 entries positionally, so the
+    window must hold exactly those 50; the rest follow in table order."""
+    window = list(_R12_WINDOW)
+    assert len(window) == 50 and len(set(window)) == 50
+    base = {name: fn for name, fn, _, _ in QUERY_TABLE}
+    out = {k: base[k] for k in window}
+    out.update((k, v) for k, v in base.items() if k not in out)
+    return out
+
+
 def oracle_sql() -> dict[str, str]:
-    return {
-        'routing_route_check': _ROUTING_ROUTE_CHECK_SQL,
-        'od_table_check': _OD_TABLE_CHECK_SQL,
-        'isochrone_grid_check': _ISOCHRONE_GRID_CHECK_SQL,
-        'stream_join_attrib': _STREAM_JOIN_ATTRIB_SQL,
-        'd4_check': _D4_CHECK_SQL,
-        'd4_survivors_check': _D4_SURVIVORS_SQL,
-        'manifest_snapshot': _MANIFEST_SNAPSHOT_SQL,
-        'stream_manifest_check': _STREAM_MANIFEST_SQL,
-        'bloom_decontaminate': _BLOOM_DECON_SQL,
-        'zarr_roundtrip': _ZARR_ROUNDTRIP_SQL,
-        'warc_ingest': _WARC_INGEST_SQL,
-        'warc_stream_ingest': _WARC_INGEST_SQL,
-        'video_frame_dedup': _VIDEO_FRAME_DEDUP_SQL,
-        'mojibake_fix': _MOJIBAKE_SQL,
-        'url_canonical_dedup': _URL_CANON_SQL,
-        'robots_filter': _ROBOTS_SQL,
-        'boilerplate_lines': _BOILERPLATE_SQL,
-        'nb_classifier': _NB_SQL,
-        'langid_nb': _LANGID_SQL,
-        'c4_filter': _C4_FILTER_SQL,
-        'streaming_dedup_check': _STREAMING_DEDUP_CHECK_SQL,
-        'backfill_resume_check': _BACKFILL_RESUME_SQL,
-        'simhash_check': _SIMHASH_CHECK_SQL,
-        'embedding_lsh_check': _EMBEDDING_LSH_CHECK_SQL,
-        'minhash_cluster_check': _MINHASH_CLUSTER_CHECK_SQL,
-        'embedding_cluster_check': _EMBEDDING_CLUSTER_CHECK_SQL,
-        'ann_rank1_check': _ANN_RANK1_CHECK_SQL,
-        'passage_span_check': _PASSAGE_SPAN_CHECK_SQL,
-        'readability': _READABILITY_SQL,
-        'events_stateful_check': _EVENTS_STATEFUL_CHECK_SQL,
-        'cap_per_domain': _CAP_PER_DOMAIN_SQL,
-        'geo_transform_polar': _GEO_TRANSFORM_POLAR_SQL,
-        'exactsubstr_cut': _EXACTSUBSTR_CUT_SQL,
-        'dedup_lines_within_doc': _DEDUP_LINES_SQL,
-        'bitext_mine_check': _BITEXT_MINE_SQL,
-        'bitext_lsh_check': _BITEXT_LSH_SQL,
-        'perplexity_rank_check': _PERPLEXITY_RANK_SQL,
-        'megatron_roundtrip': _MEGATRON_ROUNDTRIP_SQL,
-        'ccnet_buckets_check': _CCNET_BUCKETS_SQL,
-        'global_shuffle_check': _GLOBAL_SHUFFLE_SQL,
-        'unimax_mix_check': _UNIMAX_MIX_SQL,
-        'stream_shards_roundtrip': _STREAM_SHARDS_SQL,
-        'sentence_split_check': _SENTENCE_SPLIT_SQL,
-        'fim_transform_check': _FIM_TRANSFORM_SQL,
-        'curation_pipeline_check': _CURATION_PIPELINE_SQL,
-        'span_corrupt_check': _SPAN_CORRUPT_SQL,
-        'temperature_mix_check': _TEMPERATURE_MIX_SQL,
-        'avro_roundtrip': _AVRO_ROUNDTRIP_SQL,
-        'ul2_mix_check': _UL2_MIX_SQL,
-        'audio_dedup_check': _AUDIO_DEDUP_SQL,
-        'domain_pagerank_check': _DOMAIN_PAGERANK_SQL,
-        'hard_negative_check': _HARD_NEGATIVE_SQL,
-        'chat_spans_check': _CHAT_SPANS_SQL,
-        'compression_filter_check': _COMPRESSION_FILTER_SQL,
-        'pack_bestfit_check': _PACK_BESTFIT_SQL,
-        'wds_roundtrip': _WDS_ROUNDTRIP_SQL,
-        'zst_roundtrip': _ZST_ROUNDTRIP_SQL,
-        'npy_roundtrip': _NPY_ROUNDTRIP_SQL,
-        'semdedup_check': _SEMDEDUP_SQL,
-        'inverted_index_check': _INVERTED_INDEX_SQL,
-        'postings_lookup_check': _POSTINGS_LOOKUP_SQL,
-        'upsert_latest_check': _UPSERT_LATEST_SQL,
-        'zst_stream_ingest': _ZST_STREAM_SQL,
-        'kneser_ney_check': _KNESER_NEY_SQL,
-        'mmr_select_check': _MMR_SELECT_SQL,
-        'safetensors_roundtrip': _SAFETENSORS_ROUNDTRIP_SQL,
-        'normalize_text_check': _NORMALIZE_TEXT_SQL,
-        'tfrecord_roundtrip': _TFRECORD_ROUNDTRIP_SQL,
-        'geo_transform_registry': _GEO_TRANSFORM_REGISTRY_SQL,
-        'bpe_merges_check': _BPE_MERGES_CHECK_SQL,
-        'audio_features_check': _AUDIO_CHECK_SQL,
-        'multimodal_features_check': _MULTIMODAL_CHECK_SQL,
-        'quality_classifier': _QUALITY_CLASSIFIER_SQL,
-        'chunk_documents': _CHUNK_SQL,
-        'tpch_q1_pricing': _Q1_SQL,
-        'tpch_q3_topk': _Q3_SQL,
-        'tpch_q5_region_revenue': _Q5_SQL,
-        'tpch_q6_revenue': _Q6_SQL,
-        'tpch_q4_semijoin': _Q4_SQL,
-        'tpch_q13_custdist': _Q13_SQL,
-        'tpch_q18_bigorders': _Q18_SQL,
-        'tpch_q19_disjunctive': _Q19_SQL,
-        'tpch_q10_returns': _Q10_SQL,
-        'tpch_q2_min_supplier': _Q2_SQL,
-        'tpch_q7_nation_volume': _Q7_SQL,
-        'tpch_q8_mktshare': _Q8_SQL,
-        'tpch_q9_profit': _Q9_SQL,
-        'tpch_q11_important_parts': _Q11_SQL,
-        'tpch_q12_late_lines': _Q12_SQL,
-        'tpch_q15_top_supplier': _Q15_SQL,
-        'tpch_q16_supplier_cnt': _Q16_SQL,
-        'tpch_q17_small_qty': _Q17_SQL,
-        'tpch_q20_heavy_shippers': _Q20_SQL,
-        'tpch_q21_waiting': _Q21_SQL,
-        'tpch_q22_idle_customers': _Q22_SQL,
-        'asof_last_click': _ASOF_SQL,
-        'resample_locf': _RESAMPLE_SQL,
-        'range_band_join': _RANGE_BAND_SQL,
-        'rollup_pricing': _ROLLUP_SQL,
-        'cube_orders': _CUBE_SQL,
-        'grouping_sets_orders': _GROUPING_SETS_SQL,
-        'pivot_priority_revenue': _PIVOT_SQL,
-        'percentile_prices': _PERCENTILE_SQL,
-        'string_funcs': _STRING_FUNCS_SQL,
-        'date_funcs': _DATE_FUNCS_SQL,
-        'array_funcs': _ARRAY_FUNCS_SQL,
-        'full_outer_priority': _FULL_OUTER_SQL,
-        'anti_join_no_urgent': _ANTI_SQL,
-        'scalar_subquery_acctbal': _SCALAR_SUB_SQL,
-        'subset_dsl': _SUBSET_SQL,
-        'lookup_customer': _LOOKUP_SQL,
-        'crossjoin_dims': _CROSSJOIN_SQL,
-        'column_stats': _STATS_SQL,
-        'window_top3_orders': _WINDOW_SQL,
-        'window_running_revenue': _WINDOW_RUNNING_SQL,
-        'sketch_cardinality': _SKETCH_SQL,
-        'distinct_segments': _DISTINCT_SQL,
-        'tpch_q14_promo': _Q14_SQL,
-        'supplier_by_nation': _SUPPLIER_SQL,
-        'events_hourly': _EVENTS_HOURLY_SQL,
-        'events_sliding': _EVENTS_SLIDING_SQL,
-        'events_json': _EVENTS_JSON_SQL,
-        'events_sessionize': _SESSIONIZE_SQL,
-        'geo_rect_area': _GEO_AREA_SQL,
-        'geo_line_length': _GEO_LENGTH_SQL,
-        'geo_buffer_area': _GEO_BUFFER_SQL,
-        'geo_transform': _GEO_TRANSFORM_SQL,
-        'geo_transform_families': _GEO_TRANSFORM_FAMILIES_SQL,
-        'image_phash_dedup': _IMAGE_PHASH_SQL,
-        'html_extract': _html_sql(),
-        'dsir_weights': _DSIR_SQL,
-        'video_metadata': _VIDEO_META_SQL,
-        'passage_dedup': _PASSAGE_DEDUP_SQL,
-        'dedup_against_snapshot': _DEDUP_AGAINST_SQL,
-        'split_no_leakage': _SPLIT_NO_LEAKAGE_SQL,
-        'media_decode_mixed': _MEDIA_DECODE_SQL,
-        'domain_filter': _DOMAIN_FILTER_SQL,
-        'sjoin_points_rects': _SJOIN_SQL,
-        'snearest_rect': _SNEAREST_SQL,
-        'sjfull_geoms': _SJFULL_SQL,
-        'geo_lonlat_detect': _LONLAT_SQL,
-        'set_ops': _SET_OPS_SQL,
-        'geo_buffer_dissolve': _BUFFER_DISSOLVE_SQL,
-        'geo_line_buffer': _LINE_BUFFER_SQL,
-        'sagg_rect_demand': _SAGG_SQL,
-        'sfilter_outside': _SFILTER_SQL,
-        'slookup_nation': _SLOOKUP_SQL,
-        'text_analysis': _TEXT_SQL,
-        'top_tokens': _TOP_TOKENS_SQL,
-        'token_count_bpe': _TOKEN_BPE_SQL,
-        'dedup_exact': _DEDUP_EXACT_SQL,
-        'dedup_jaccard': _DEDUP_JACCARD_SQL,
-        'dedup_jaccard_ngram': _DEDUP_JACCARD_NGRAM_SQL,
-        'dedup_containment': _DEDUP_CONTAIN_SQL,
-        'corpus_health': _corpus_health_sql(),
-        'cluster_components_jaccard': _CLUSTER_CC_SQL,
-        'dedup_embedding': _DEDUP_EMBEDDING_SQL,
-        'similarity_topk': _SIMILARITY_TOPK_SQL,
-        'text_quality_filter': _quality_filter_sql(),
-        'repetition_ngrams': _REPETITION_SQL,
-        'contamination_check': _CONTAMINATION_SQL,
-        'corpus_mix': _CORPUS_MIX_SQL,
-        'pack_sequences': _PACK_SQL,
-        'oov_rate': _OOV_SQL,
-        'bm25_search': _BM25_SQL,
-        'sample_hash': _SAMPLE_HASH_SQL,
-        'weighted_sample_check': _WEIGHTED_SAMPLE_SQL,
-        'sample_stratified': _SAMPLE_STRAT_SQL,
-        'sample_split': _SAMPLE_SPLIT_SQL,
-        'lm_quality_score': _LM_QUALITY_SQL,
-        'token_divergence': _TOKEN_DIVERGENCE_SQL,
-        'pii_scrub': _pii_sql(),
-        'domain_stats': _domain_stats_sql(),
-        'dedup_cluster_sizes': _DEDUP_CLUSTER_SIZES_SQL,
-        'bpe_pair_stats': _BPE_PAIR_SQL,
-        'profile_orders': _PROFILE_SQL,
-        # no oracle (approximate / external-service / not SQL-expressible):
-        # dedup_minhash_lsh, dedup_simhash, dedup_clusters (probabilistic
-        # LSH recall; their shared component machinery IS value-gated via
-        # cluster_components_jaccard), similarity_lsh, similarity_ivf,
-        # multimodal_features, routing_route, routing_od_table,
-        # routing_isochrone, events_stateful, text_winnow_pairs;
-        # geo queries listed above keep closed forms
-    }
+    """DuckDB equivalent of every SQL-expressible query."""
+    return {name: sql for name, _, sql, _ in QUERY_TABLE if sql is not None}
+
+
+def bench_queries() -> list[str]:
+    """bench.py's headline set, in table order."""
+    return [name for name, _, _, in_bench in QUERY_TABLE if in_bench]

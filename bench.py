@@ -35,150 +35,36 @@ dedups the same corpus without enumerating cliques — it is the 100 TB
 headline; the pairs op is kept as the verification-grade surface.
 """
 
+import glob
 import json
 import os
+import re
 import sys
 import time
 
 import __spark_entry__ as entry
 
 SF_DIR = os.environ.get('SPARK_GRAFT_SF_DIR', '/root/testdata/sf0.1')
-
-BENCH_QUERIES = [
-    'tpch_q1_pricing',
-    'tpch_q3_topk',
-    'tpch_q5_region_revenue',
-    'lookup_customer',
-    'column_stats',
-    'window_top3_orders',
-    'asof_last_click',
-    'resample_locf',
-    'range_band_join',
-    'rollup_pricing',
-    'percentile_prices',
-    'events_hourly',
-    'events_sessionize',
-    'events_json',
-    'geo_rect_area',
-    'geo_buffer_area',
-    'sjoin_points_rects',
-    'snearest_rect',
-    'sagg_rect_demand',
-    'sfilter_outside',
-    'text_analysis',
-    'top_tokens',
-    'token_count_bpe',
-    'text_quality_filter',
-    'repetition_ngrams',
-    'contamination_check',
-    'bm25_search',
-    'corpus_mix',
-    'pack_sequences',
-    'oov_rate',
-    'lm_quality_score',
-    'token_divergence',
-    'pii_scrub',
-    'domain_stats',
-    'html_extract',
-    'dsir_weights',
-    'dedup_exact',
-    'dedup_clusters',
-    'dedup_minhash_lsh',
-    'dedup_simhash',
-    'dedup_embedding_clusters',
-    'streaming_neardup_backfill',
-    'similarity_topk',
-    'similarity_lsh',
-    'similarity_ivfpq',
-    'multimodal_features',
-    'audio_features',
-    'image_phash_dedup',
-    'video_metadata',
-    'media_decode_mixed',
-    'warc_ingest',
-    'quality_classifier',
-    'video_frame_dedup',
-    'mojibake_fix',
-    'url_canonical_dedup',
-    'robots_filter',
-    'boilerplate_lines',
-    'nb_classifier',
-    'chunk_documents',
-    'langid_nb',
-    'warc_stream_ingest',
-    'c4_filter',
-    'readability',
-    'events_stateful_check',
-    'bpe_merges_check',
-    'audio_features_check',
-    'multimodal_features_check',
-    'cap_per_domain',
-    'dedup_lines_within_doc',
-    'geo_transform_polar',
-    'exactsubstr_cut',
-    'bitext_mine_check',
-    'bitext_lsh_check',
-    'perplexity_rank_check',
-    'geo_transform_registry',
-    'pack_bestfit_check',
-    'wds_roundtrip',
-    'tfrecord_roundtrip',
-    'megatron_roundtrip',
-    'ccnet_buckets_check',
-    'global_shuffle_check',
-    'unimax_mix_check',
-    'stream_shards_roundtrip',
-    'sentence_split_check',
-    'fim_transform_check',
-    'chat_spans_check',
-    'compression_filter_check',
-    'curation_pipeline_check',
-    'hard_negative_check',
-    'span_corrupt_check',
-    'temperature_mix_check',
-    'avro_roundtrip',
-    'ul2_mix_check',
-    'audio_dedup_check',
-    'domain_pagerank_check',
-    'routing_route_check',
-    'od_table_check',
-    'isochrone_grid_check',
-    'stream_join_attrib',
-    'd4_check',
-    'bloom_decontaminate',
-    'zarr_roundtrip',
-]
+REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
-#: every query name the round-12 stdout artifact carried: the driver's
-#: round-over-round diff reads a name missing from stdout as a dropped
-#: query, so the fit tier always packs these first (biggest-first)
-#: before spending budget on anything else
-_STDOUT_KEEP = frozenset([
-    'audio_dedup_check', 'audio_features', 'audio_features_check',
-    'avro_roundtrip', 'bitext_lsh_check', 'bitext_mine_check',
-    'bloom_decontaminate', 'bm25_search', 'bpe_merges_check',
-    'contamination_check', 'curation_pipeline_check', 'd4_check',
-    'dedup_clusters', 'dedup_embedding_clusters', 'dedup_minhash_lsh',
-    'dedup_simhash', 'domain_pagerank_check', 'dsir_weights',
-    'events_stateful_check', 'exactsubstr_cut', 'global_shuffle_check',
-    'hard_negative_check', 'image_phash_dedup', 'isochrone_grid_check',
-    'langid_nb', 'lm_quality_score', 'lookup_customer',
-    'media_decode_mixed', 'megatron_roundtrip', 'multimodal_features',
-    'multimodal_features_check', 'nb_classifier', 'od_table_check',
-    'pack_bestfit_check', 'perplexity_rank_check', 'quality_classifier',
-    'range_band_join', 'robots_filter', 'routing_route_check',
-    'sfilter_outside', 'similarity_ivfpq', 'similarity_lsh',
-    'similarity_topk', 'sjoin_points_rects', 'snearest_rect',
-    'span_corrupt_check', 'stream_join_attrib',
-    'stream_shards_roundtrip', 'streaming_neardup_backfill',
-    'temperature_mix_check', 'text_quality_filter', 'tfrecord_roundtrip',
-    'token_divergence', 'tpch_q1_pricing', 'tpch_q3_topk',
-    'tpch_q5_region_revenue', 'ul2_mix_check', 'unimax_mix_check',
-    'url_canonical_dedup', 'video_frame_dedup', 'video_metadata',
-    'warc_ingest', 'warc_stream_ingest', 'wds_roundtrip',
-    'zarr_roundtrip',
-])
+def _stdout_keep() -> frozenset:
+    """Every query name the latest stdout artifact in the repo
+    (``BENCH_r<N>.json``, highest N; the ``_c8`` core-count legs are not
+    round artifacts) carried: the round-over-round diff reads a name
+    missing from stdout as a dropped query, so the fit tier always
+    packs these first (biggest-first) before spending budget on anything
+    else. Empty when no artifact exists."""
+    rounds = {}
+    for path in glob.glob(os.path.join(REPO_DIR, 'BENCH_r*.json')):
+        m = re.fullmatch(r'BENCH_r(\d+)\.json', os.path.basename(path))
+        if m:
+            rounds[int(m.group(1))] = path
+    if not rounds:
+        return frozenset()
+    with open(rounds[max(rounds)]) as fh:
+        parsed = json.load(fh).get('parsed') or {}
+    return frozenset(parsed.get('queries', {}))
 
 
 def _sentinel_cpu():
@@ -215,6 +101,7 @@ def main():
     spark = get_spark(app_name='erde_spark_bench')
 
     qs = entry.queries()
+    names = entry.bench_queries()
     # warm the JVM and the Python-worker/Arrow paths once so per-query
     # numbers measure the queries, not session startup: tpch_q1 exercises
     # scan+shuffle codegen; the tiny pandas UDF spawns the Python worker
@@ -273,7 +160,7 @@ def main():
         lo, hi = spreads[name]
         return hi > 2.0 * lo + 0.05
 
-    for name in BENCH_QUERIES:
+    for name in names:
         runs, jobs = _time_query(name)
         timings[name] = round(min(runs), 3)
         # min/max band so the recorded file itself shows host noise —
@@ -305,8 +192,7 @@ def main():
     # band is REPLACED by the retry pass's so the artifact reflects
     # the settled measurement, and the retry counts land in the
     # payload.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    settled_path = os.path.join(repo_dir, 'BENCH_SETTLED.json')
+    settled_path = os.path.join(REPO_DIR, 'BENCH_SETTLED.json')
     cur_sf = float(SF_DIR.rstrip('/').rsplit('sf', 1)[-1])
     baseline = None
     baseline_sf = None
@@ -338,7 +224,7 @@ def main():
 
     retried = {}
     for _pass in range(2):
-        suspect = [k for k in BENCH_QUERIES
+        suspect = [k for k in names
                    if _spready(k) or _vs_extreme(k)]
         if not suspect:
             break
@@ -365,7 +251,7 @@ def main():
     # to be rediscovered
     host_settled = (sent_cpu[-1] / min(sent_cpu) - 1 <= 0.15
                     and not any(_spready(k) or _vs_extreme(k)
-                                for k in BENCH_QUERIES))
+                                for k in names))
 
     # Self-normalizing record (round-9 verdict ask #3): every query as
     # BOTH min-of-N seconds AND sentinel-normalized units
@@ -416,8 +302,7 @@ def main():
         vs_settled = {'baseline_total_norm': baseline.get('total_norm'),
                       'verdict': vs_verdict, 'ratios': ratios}
 
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           'BENCH_NORM.json'), 'w') as fh:
+    with open(os.path.join(REPO_DIR, 'BENCH_NORM.json'), 'w') as fh:
         json.dump({
             'sf': float(SF_DIR.rstrip('/').rsplit('sf', 1)[-1]),
             'runs_per_query': n_runs,
@@ -440,7 +325,7 @@ def main():
         # committed sf0.1 record (baseline_sf is None only when no
         # parseable baseline exists yet)
         import shutil as _sh
-        _sh.copyfile(os.path.join(repo_dir, 'BENCH_NORM.json'),
+        _sh.copyfile(os.path.join(REPO_DIR, 'BENCH_NORM.json'),
                      settled_path)
 
     sf = SF_DIR.rstrip('/').rsplit('sf', 1)[-1]
@@ -500,13 +385,11 @@ def main():
         if fit and vs is not None:
             # fit tier: the shortest self-interpretation that still
             # names the leaders; the full ratio map is BENCH_NORM.json
-            if vs == 'all within noise':
+            if not regressed:
                 vs = 'ok'
             else:
-                names = vs.split(': ', 1)[1].split(', ')
-                names = [n for n in names if n != '...']
                 vs = (f'REGRESSED({len(regressed)}): '
-                      + ', '.join(names[:2])
+                      + ', '.join(regressed[:2])
                       + (',..' if len(regressed) > 2 else ''))
         d = _base_dict(dp, slim, vs)
         if not fit:
@@ -517,8 +400,8 @@ def main():
         # bare driver-contract line with every query at 1dp is ~2.4k
         # chars against the driver's 2000-char stdout tail (measured
         # round 13), so some omission is structural. Priority: (1) the
-        # names the round-12 artifact carried, biggest-first — the
-        # round-over-round diff treats a name that disappears from
+        # names the latest BENCH_r<N> artifact carried, biggest-first —
+        # the round-over-round diff treats a name that disappears from
         # stdout as a dropped query, so the previous artifact's set
         # must stay covered; (2) anything else with drift signal
         # (>= 0.75 s) biggest-first; (3) the sub-threshold tail packed
@@ -533,7 +416,7 @@ def main():
         budget = 1980 - len(json.dumps(placeholder, separators=(',', ':')))
         ecost = {k: len(k) + len(json.dumps(_q(timings[k], dp))) + 4
                  for k in timings}
-        keep = _STDOUT_KEEP & set(timings)
+        keep = _stdout_keep() & set(timings)
         pri1 = sorted(keep, key=lambda k: (-timings[k], k))
         pri2 = sorted((k for k in timings
                        if k not in keep and timings[k] >= 0.75),

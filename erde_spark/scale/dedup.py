@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from erde_spark.scale.text import char_shingles, fingerprint, tokens
+from erde_spark.session import spread_to_cores
 
 
 def _units(text_col, shingles: int | None):
@@ -206,10 +207,13 @@ def minhash_signatures(df: DataFrame, id_col: str = 'doc_id', text_col: str = 't
                        shingles: int | None = None) -> DataFrame:
     """(id, sig: array<long>) MinHash signatures.
 
-    Token base hash = JVM ``xxhash64`` (deterministic across runs and
-    partitionings; never leaves the JVM as a string); permutations are
-    universal hashes (a*h + b) mod 2^61-1 with seeded coefficients,
-    vectorized per Arrow batch as a tokens x perms matrix min in numpy.
+    Token base hash h = JVM ``xxhash64`` (deterministic across runs and
+    partitionings; never leaves the JVM as a string), read as uint64.
+    Each permutation is ((a*h + b) mod 2^64) mod (2^61-1) with seeded
+    coefficients a, b < 2^61-1: the product and sum wrap in uint64
+    BEFORE the Mersenne reduction, so this is not the textbook
+    (a*h + b) mod 2^61-1 universal family. Vectorized per Arrow batch as
+    a tokens x perms matrix min in numpy.
     """
     return _sig_from_hashes(_hashed_token_sets(df, id_col, text_col, shingles),
                             num_perm, seed)
@@ -249,27 +253,14 @@ def _lsh_buckets(sig: DataFrame, bands: int, rows: int) -> DataFrame:
                .select('id', F.col('b.band').alias('band'), F.col('b.bh').alias('bh')))
 
 
-def _spread_scan(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a LOW-PARALLELISM input to the session's
-    core count before the compute-heavy tokenize/minhash kernels
-    (optimization guide §2.5 input skew): a single small parquet file —
-    the sf test corpora, or one micro-batch file on the streaming
-    path — scans as ONE partition, serializing the xxhash64 tokenize
-    and the (tokens x perms) signature kernel on one core. The
-    repartition moves only (id, text) rows once. Delegates to
-    :func:`erde_spark.session.spread_to_cores` (data-adaptive: no-op on
-    any multi-split input, file-index probe instead of ``df.rdd``,
-    streaming frames returned unchanged)."""
-    from erde_spark.session import spread_to_cores
-    return spread_to_cores(df)
-
-
 def _hashed_token_sets(df: DataFrame, id_col: str, text_col: str,
                        shingles: int | None = None) -> DataFrame:
     """(id, toks: array<long>) distinct 64-bit token hashes per document.
     Integer ``array_intersect`` is several times cheaper than string,
     identical up to ~1e-10/pair collisions."""
-    return _spread_scan(df).select(
+    # spread first: one small file (a test corpus, one micro-batch)
+    # scans as one partition and would serialize tokenize + minhash
+    return spread_to_cores(df).select(
         F.col(id_col).alias('id'),
         F.array_distinct(F.transform(_units(text_col, shingles),
                                      lambda t: F.xxhash64(t))).alias('toks'))

@@ -1192,7 +1192,7 @@ def test_ivfpq_codes_compress_and_recall(spark, embs):
     assert recall >= 0.9, recall
 
 
-def test_pq_codebooks_perdim_bit_identical():
+def test_pq_codebooks_perdim_fixed_seed_equal():
     """The per-dimension distance accumulation in _pq_codebooks (r12
     optimization: avoids the n x ks x sub broadcast temp) must produce
     codebooks equal to the reference formulation

@@ -17,7 +17,6 @@ import sys
 
 sys.path.insert(0, '.')
 import __spark_entry__ as entry  # noqa: E402
-from bench import BENCH_QUERIES  # noqa: E402
 
 #: ops whose SEMANTICS are an explicit all-pairs verification tier —
 #: a cartesian/BNL join there is the documented design, not a bug
@@ -62,7 +61,7 @@ def audit(spark, sf_dir, names):
 def main():
     from erde_spark.session import get_spark
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
-    names = sys.argv[2:] or [q for q in BENCH_QUERIES
+    names = sys.argv[2:] or [q for q in entry.bench_queries()
                              if q != 'streaming_neardup_backfill']
     spark = get_spark(app_name='plan_audit')
     bad = audit(spark, sf_dir, names)
