@@ -12,6 +12,7 @@ mirroring the reference (WKT in CSV, WKB toward PostGIS —
 
 from __future__ import annotations
 
+import itertools
 import math
 import struct
 
@@ -180,15 +181,18 @@ def st_coslat(col, crs: int = 4326):
 def st_buffer(col, radius, crs: int = 4326, resolution: int = 16):
     """Metric buffer, reference formula (`/root/reference/erde/op/buffer.py:44`):
     to 3857, buffer by ``radius / cos(lat)``, back to source CRS.
-    ``radius`` may be a scalar (metres) or a Column for per-row radii."""
-    radius_col = radius if hasattr(radius, '_jc') else F.lit(float(radius))
+    ``radius`` may be a scalar (metres) or a Column for per-row radii.
+
+    A scalar radius is closed over, so ``_buf`` takes the geometry alone:
+    Spark chains only single-argument pandas UDFs into one Arrow node, and
+    a literal radius column would split ``_buf`` from the UDF that
+    produced its geometry (e.g. ``st_try_geomfromtext`` at a CSV edge)."""
     # resolve on the driver: runtime-registered / dict CRS are not
     # visible to a worker-side int lookup
     fwd = O.resolve_transform(crs, 3857)
     back = O.resolve_transform(3857, crs)
 
-    @F.pandas_udf(T.BinaryType())
-    def _buf(wkb: pd.Series, rad: pd.Series) -> pd.Series:
+    def kernel(wkb, rad):
         out = []
         for v, r in zip(wkb, rad):
             if v is None or r is None:
@@ -202,7 +206,19 @@ def st_buffer(col, radius, crs: int = 4326, resolution: int = 16):
                 buf = back(buf)
             out.append(G.wkb_dumps(buf))
         return pd.Series(out)
-    return _buf(col, radius_col)
+
+    if hasattr(radius, '_jc'):
+        @F.pandas_udf(T.BinaryType())
+        def _buf(wkb: pd.Series, rad: pd.Series) -> pd.Series:
+            return kernel(wkb, rad)
+        return _buf(col, radius)
+
+    r = float(radius)
+
+    @F.pandas_udf(T.BinaryType())
+    def _buf(wkb: pd.Series) -> pd.Series:
+        return kernel(wkb, itertools.repeat(r))
+    return _buf(col)
 
 
 def st_metric_area(col, crs: int = 4326, nullify_irrelevant: bool = False):

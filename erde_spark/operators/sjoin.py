@@ -8,7 +8,9 @@ The reference delegates to GeoPandas' R-tree ``gpd.sjoin``; that is a
 single-machine index, so the distributed physical strategy here is the
 standard grid decomposition (cf. Sedona / SpatialSpark):
 
-1. compute each geometry's bbox (vectorized pandas UDF, one pass);
+1. compute each geometry's bbox (vectorized pandas UDF, chained into the
+   Arrow node of the UDFs that produced the geometry, so each side crosses
+   into Python once);
 2. explode each row to the integer grid cells its bbox covers;
 3. equi-join on ``(cell_x, cell_y)`` — a plain Spark shuffle join, so
    Catalyst/AQE pick broadcast vs shuffle and handle skewed cells
@@ -17,8 +19,8 @@ standard grid decomposition (cf. Sedona / SpatialSpark):
 5. **duplicate-free emission**: a candidate pair can meet in many cells; we
    keep it only in its *reference cell* — the cell containing the top-left
    corner of the bbox intersection — so no ``distinct`` shuffle is needed;
-6. exact predicate refine in an Arrow-batched pandas UDF (the only Python
-   step, applied to surviving candidates only).
+6. exact predicate refine in an Arrow-batched pandas UDF (the one other
+   Python step, applied to surviving candidates only).
 
 At 100 TB this plan shuffles each side once (by cell), never collects to
 the driver, and the per-cell fan-out is bounded by ``cell_size``: pick it
@@ -35,14 +37,45 @@ from erde_spark.functions.geo import st_bounds, st_predicate
 _OPS = ('intersects', 'within', 'contains')
 
 
-def _with_bounds(df: DataFrame, on: str, prefix: str) -> DataFrame:
-    b = st_bounds(df[on])
-    return (df.withColumn('__b', b)
-              .withColumn(f'{prefix}minx', F.col('__b.minx'))
-              .withColumn(f'{prefix}miny', F.col('__b.miny'))
-              .withColumn(f'{prefix}maxx', F.col('__b.maxx'))
-              .withColumn(f'{prefix}maxy', F.col('__b.maxy'))
-              .drop('__b'))
+def _sides(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: str,
+           pad: float = 0.0):
+    """``(lx, rx, overlap)``: both join sides in payload form plus the JVM
+    bbox-overlap condition between them.
+
+    Each side carries its row id (``__lid``/``__rid``, kept when the caller
+    already assigned one), its full row as a struct (``__lrow``/``__rrow``),
+    its geometry (``__lgeom``/``__rgeom``) and its bbox (``__l_minx`` ...)
+    from ONE ``st_bounds`` crossing. ``pad`` dilates the left bbox.
+
+    ``overlap`` is wrapped in ``coalesce(..., false)``. A bare
+    ``__l_minx <= __r_maxx`` is null-intolerant, so Catalyst's
+    InferFiltersFromConstraints derives ``isnotnull(__l_minx)`` from it and
+    pushes that filter below the projection computing the bounds, where it
+    becomes a second Arrow node re-running the side's whole UDF chain.
+    ``coalesce`` is not null-intolerant, so nothing is inferred; a null
+    bbox still overlaps nothing.
+    """
+    def side(df, on, t, delta):
+        rid = f'__{t}id'
+        cols = [c for c in df.columns if c != rid]
+        if rid not in df.columns:
+            # deterministic for a fixed scan partition layout; assigned
+            # directly over the scan so a re-use of this branch (e.g. the
+            # sagg join-back) sees identical ids
+            df = df.withColumn(rid, F.monotonically_increasing_id())
+        df = df.withColumn('__b', st_bounds(df[on]))
+        bounds = [(F.col(f'__b.{c}') + F.lit(d) if d else F.col(f'__b.{c}'))
+                  .alias(f'__{t}_{c}')
+                  for c, d in (('minx', -delta), ('miny', -delta),
+                               ('maxx', delta), ('maxy', delta))]
+        return df.select(rid, F.struct(*[F.col(c) for c in cols]).alias(f'__{t}row'),
+                         F.col(on).alias(f'__{t}geom'), *bounds)
+
+    overlap = F.coalesce((F.col('__l_minx') <= F.col('__r_maxx')) &
+                         (F.col('__r_minx') <= F.col('__l_maxx')) &
+                         (F.col('__l_miny') <= F.col('__r_maxy')) &
+                         (F.col('__r_miny') <= F.col('__l_maxy')), F.lit(False))
+    return side(left_df, left_on, 'l', pad), side(right_df, right_on, 'r', 0.0), overlap
 
 
 def _estimate_cell_size(left_b: DataFrame, right_b: DataFrame) -> float:
@@ -174,31 +207,7 @@ def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: s
     if op not in _OPS:
         raise ValueError(f'op must be one of {_OPS}, got {op!r}')
 
-    lcols = left_df.columns
-    rcols = right_df.columns
-    # monotonically_increasing_id is deterministic for a fixed scan partition
-    # layout; it is assigned pre-shuffle (directly over the scan) so re-use of
-    # the same plan branch (e.g. the how='left' join-back) sees identical ids.
-    left = left_df if '__lid' in lcols else \
-        left_df.withColumn('__lid', F.monotonically_increasing_id())
-    right = right_df if '__rid' in rcols else \
-        right_df.withColumn('__rid', F.monotonically_increasing_id())
-    lcols = [c for c in lcols if c != '__lid']
-    rcols = [c for c in rcols if c != '__rid']
-    left = _with_bounds(left, left_on, '__l_')
-    right = _with_bounds(right, right_on, '__r_')
-
-    lx = (left.withColumn('__lrow', F.struct(*[F.col(c) for c in lcols]))
-              .select('__lid', '__lrow', F.col(left_on).alias('__lgeom'),
-                      '__l_minx', '__l_miny', '__l_maxx', '__l_maxy'))
-    rx = (right.withColumn('__rrow', F.struct(*[F.col(c) for c in rcols]))
-               .select('__rid', '__rrow', F.col(right_on).alias('__rgeom'),
-                       '__r_minx', '__r_miny', '__r_maxx', '__r_maxy'))
-
-    bbox_overlap = ((F.col('__l_minx') <= F.col('__r_maxx')) &
-                    (F.col('__r_minx') <= F.col('__l_maxx')) &
-                    (F.col('__l_miny') <= F.col('__r_maxy')) &
-                    (F.col('__r_miny') <= F.col('__l_maxy')))
+    lx, rx, bbox_overlap = _sides(left_df, right_df, left_on, right_on)
 
     # small-side fast path: broadcast the small side whole and join on the
     # codegen'd bbox predicate (broadcast-nested-loop), then refine. No
@@ -214,11 +223,14 @@ def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: s
             return cand.select('__lid', '__rid', '__lrow', '__rrow')
 
     if cell_size is None:
-        cell_size = _estimate_cell_size(left, right)
+        cell_size = _estimate_cell_size(lx, rx)
 
     # Null geometry matches nothing: emit an empty cell array so the explode
-    # drops the row. (An isNotNull FILTER here would be predicate-pushed
-    # below the bounds projection and force a second UDF evaluation.)
+    # drops the row. No null filter and no null-intolerant comparison on a
+    # bbox column may reach the plan below the explode: Catalyst would
+    # push the filter (written, or inferred from the comparison) under the
+    # projection computing the bounds, as a second Arrow node re-running
+    # the side's UDF chain (see ``_sides``).
     n_l, cov_l = _covering_cells('__l_', cell_size)
     l_salt = F.pmod(F.hash('__lid'), F.lit(SENTINEL_SALTS))
     l_cells = (F.when(n_l <= MAX_CELLS_PER_GEOM,
@@ -255,11 +267,10 @@ def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: s
 
 
 def _flatten(pairs: DataFrame, lcols: list[str], rcols: list[str],
-             suffixes: tuple[str, str], keep_left_geom: str | None = 'geometry',
-             drop_right_geom: str | None = 'geometry') -> DataFrame:
+             suffixes: tuple[str, str], drop_right_geom: str | None) -> DataFrame:
     """Expand the __lrow/__rrow structs back to flat columns, suffixing
-    right-side collisions (reference keeps left geometry, drops right's,
-    like gpd.sjoin)."""
+    name collisions; ``drop_right_geom`` names the right column to leave
+    out (gpd.sjoin keeps the left geometry only; sjfull keeps both)."""
     cols = []
     for c in lcols:
         name = c + suffixes[0] if (c in rcols and suffixes[0]) else c
@@ -279,8 +290,8 @@ def sjoin(left_df: DataFrame, right_df: DataFrame, left_on: str = 'geometry',
     """Spatial join; left geometry kept, right geometry dropped (reference
     ``_sj`` / gpd.sjoin shape, `/root/reference/erde/op/sjoin.py:4-7`)."""
     lcols, rcols = left_df.columns, right_df.columns
-    pairs = _sj_pairs(left_df, right_df, left_on, right_on, op, cell_size)
     if how == 'inner':
+        pairs = _sj_pairs(left_df, right_df, left_on, right_on, op, cell_size)
         return _flatten(pairs, lcols, rcols, suffixes, drop_right_geom=right_on)
     if how == 'left':
         left = left_df.withColumn('__lid', F.monotonically_increasing_id())
@@ -311,16 +322,9 @@ def sjfull(left_df: DataFrame, right_df: DataFrame, left_on: str = 'geometry',
     """Spatial join keeping BOTH original geometries, as
     ``geometry<suffix0>`` and ``geometry<suffix1>``
     (reference `/root/reference/erde/op/sjoin.py:10-40`)."""
-    lcols, rcols = left_df.columns, right_df.columns
     pairs = _sj_pairs(left_df, right_df, left_on, right_on, op, cell_size)
-    cols = []
-    for c in lcols:
-        name = c + suffixes[0] if c in rcols else c
-        cols.append(F.col(f'__lrow.{c}').alias(name))
-    for c in rcols:
-        name = c + suffixes[1] if c in lcols else c
-        cols.append(F.col(f'__rrow.{c}').alias(name))
-    return pairs.select(*cols)
+    return _flatten(pairs, left_df.columns, right_df.columns, suffixes,
+                    drop_right_geom=None)
 
 
 def sagg(left_df: DataFrame, right_df: DataFrame, agg: dict,
@@ -354,6 +358,12 @@ def sagg(left_df: DataFrame, right_df: DataFrame, agg: dict,
         name = col + suffixes[1] if col in left_df.columns else col
         aggs.append(_AGG_FNS[how_](src, '__rid').alias(name))
     grouped = pairs.groupBy('__lid').agg(*aggs)
+    if _catalyst_size(left_df) <= BROADCAST_SIDE_BYTES:
+        # at most one row per left row: a small left side means a small
+        # grouped side. Catalyst sizes it from the candidate join's
+        # cross-product estimate instead and plans a sort-merge join-back,
+        # which AQE turns into a broadcast only after shuffling the left.
+        grouped = F.broadcast(grouped)
 
     return left.join(grouped, on='__lid', how=join).drop('__lid')
 
@@ -415,28 +425,9 @@ def snearest(left_df: DataFrame, right_df: DataFrame, max_distance: float,
 
     lcols, rcols = left_df.columns, right_df.columns
     cell = float(max_distance)
-    left = left_df.withColumn('__lid', F.monotonically_increasing_id())
-    right = right_df.withColumn('__rid', F.monotonically_increasing_id())
-    left = _with_bounds(left, left_on, '__l_')
-    right = _with_bounds(right, right_on, '__r_')
-
     # dilate the left bbox by the search radius; covering cells + ref-cell
     # dedup then work exactly as in the predicate join
-    for c, delta in (('__l_minx', -cell), ('__l_miny', -cell),
-                     ('__l_maxx', cell), ('__l_maxy', cell)):
-        left = left.withColumn(c, F.col(c) + F.lit(delta))
-
-    lx = (left.withColumn('__lrow', F.struct(*[F.col(c) for c in lcols]))
-              .select('__lid', '__lrow', F.col(left_on).alias('__lgeom'),
-                      '__l_minx', '__l_miny', '__l_maxx', '__l_maxy'))
-    rx = (right.withColumn('__rrow', F.struct(*[F.col(c) for c in rcols]))
-               .select('__rid', '__rrow', F.col(right_on).alias('__rgeom'),
-                       '__r_minx', '__r_miny', '__r_maxx', '__r_maxy'))
-
-    bbox_overlap = ((F.col('__l_minx') <= F.col('__r_maxx')) &
-                    (F.col('__r_minx') <= F.col('__l_maxx')) &
-                    (F.col('__l_miny') <= F.col('__r_maxy')) &
-                    (F.col('__r_miny') <= F.col('__l_maxy')))
+    lx, rx, bbox_overlap = _sides(left_df, right_df, left_on, right_on, pad=cell)
     if _catalyst_size(right_df) <= BROADCAST_SIDE_BYTES:
         # small-side fast path: broadcast-nested-loop on the (radius-
         # dilated) bbox predicate — no cell explode, pairs unique as-is
@@ -454,38 +445,45 @@ def snearest(left_df: DataFrame, right_df: DataFrame, max_distance: float,
         ref_cy = F.floor(F.greatest('__l_miny', '__r_miny') / F.lit(cell)).cast('long')
         cand = cand.filter((F.col('__cx') == ref_cx) & (F.col('__cy') == ref_cy))
 
-    cand = (cand.withColumn('__d', st_distance(F.col('__lgeom'), F.col('__rgeom')))
-            .filter(F.col('__d') <= F.lit(float(max_distance))))
+    cand = cand.withColumn('__d', st_distance(F.col('__lgeom'), F.col('__rgeom')))
+    # The radius test runs after the pick, not as a Filter over the distance
+    # projection: Catalyst pushes such a Filter below the projection by
+    # inlining st_distance into it, which evaluates the distance kernel in
+    # two Arrow nodes. Out-of-radius candidates rank after every in-radius
+    # one, so testing after the pick keeps the same rows.
+    within = F.col('__d') <= F.lit(cell)
 
     # tie-break on the right row CONTENT (lexicographic over its columns),
     # not an internal row id — reproducible across engines and runs
     pick = F.struct(F.col('__d'), F.col('__rrow'), F.col('__rid'))
+    # the left payload rides along with the pick, so an inner join never
+    # re-reads the left side (nor re-runs its UDF chain)
     if k == 1:
         # min-struct aggregate: map-side combining, no per-group sort
-        best = cand.groupBy('__lid').agg(F.min(pick).alias('__best'))
+        best = (cand.groupBy('__lid')
+                .agg(F.first('__lrow').alias('__lrow'),
+                     F.min(F.when(within, pick)).alias('__best'))
+                .filter(F.col('__best').isNotNull()))
     else:
         w = Window.partitionBy('__lid').orderBy('__d', '__rrow', '__rid')
         best = (cand.withColumn('__rn', F.row_number().over(w))
-                .filter(F.col('__rn') <= k)
-                .select('__lid', pick.alias('__best')))
+                .filter((F.col('__rn') <= k) & within)
+                .select('__lid', '__lrow', pick.alias('__best')))
+    if how == 'left':
+        # unmatched left rows return through a join-back on the row id,
+        # which re-reads the left side as sagg's join-back does
+        best = lx.select('__lid', '__lrow').join(best.drop('__lrow'), '__lid', 'left')
 
-    def _out_cols(nearest_struct):
-        cols = [F.col(f'__lrow.{c}').alias(
-                    c + suffixes[0] if (c in rcols and suffixes[0]) else c)
-                for c in lcols]
-        for c in rcols:
-            if c == right_on:
-                continue
-            name = c + suffixes[1] if c in lcols else c
-            cols.append(nearest_struct(f'__rrow.{c}').alias(name))
-        cols.append(nearest_struct('__d').alias(distance_col))
-        return cols
-
-    if how == 'inner':
-        lrows = lx.select('__lid', '__lrow').join(best, '__lid')
-        return lrows.select(*_out_cols(lambda p: F.col(f'__best.{p}')))
-    lrows = lx.select('__lid', '__lrow').join(best, '__lid', 'left')
-    return lrows.select(*_out_cols(lambda p: F.col(f'__best.{p}')))
+    cols = [F.col(f'__lrow.{c}').alias(
+                c + suffixes[0] if (c in rcols and suffixes[0]) else c)
+            for c in lcols]
+    for c in rcols:
+        if c == right_on:
+            continue
+        name = c + suffixes[1] if c in lcols else c
+        cols.append(F.col(f'__best.__rrow.{c}').alias(name))
+    cols.append(F.col('__best.__d').alias(distance_col))
+    return best.select(*cols)
 
 
 def sfilter(left_df: DataFrame, filter_df: DataFrame, left_on: str = 'geometry',

@@ -10,6 +10,7 @@ like behavior, not eyeballed.
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -51,3 +52,27 @@ def count_python_udf_passes(df: DataFrame) -> int:
     """Arrow boundary crossings — each is a JVM->Python->JVM round trip."""
     p = physical_plan(df)
     return p.count('ArrowEvalPython') + p.count('BatchEvalPython')
+
+
+def _arrow_nodes(plan: str) -> list[set[str]]:
+    """The UDF expressions of each ArrowEvalPython node, ``#id``s
+    stripped so one expression compares equal across nodes."""
+    nodes = []
+    for m in re.finditer(r'ArrowEvalPython \[', plan):
+        exprs, start, depth, i = set(), m.end(), 1, m.end()
+        while depth and i < len(plan):
+            ch = plan[i]
+            depth += (ch in '([') - (ch in ')]')
+            if depth == 0 or (depth == 1 and ch == ','):
+                exprs.add(re.sub(r'#\d+L?', '', plan[start:i]).strip())
+                start = i + 1
+            i += 1
+        nodes.append(exprs)
+    return nodes
+
+
+def duplicated_udfs(plan: str) -> list[str]:
+    """UDF expressions evaluated in more than one Arrow node of a physical
+    plan: each re-runs its Python work, and that of the UDFs under it."""
+    seen = Counter(e for node in _arrow_nodes(plan) for e in node)
+    return sorted(e for e, n in seen.items() if n > 1)

@@ -45,12 +45,56 @@ def test_lookup_is_broadcast_when_small(spark):
 
 
 def test_sjoin_udf_passes_bounded(spark):
-    """The grid spatial join must cross the Python boundary a bounded
-    number of times (geometry synthesis + bounds per side + one refine),
-    not once per plan node."""
+    """The spatial join crosses the Python boundary once per side
+    (geometry synthesis chained with its bounds in one Arrow node) plus
+    one refine: exactly 3 Arrow nodes."""
     import __spark_entry__ as E
     q = E.q_sjoin_points_rects(spark, SF)
-    assert count_python_udf_passes(q) <= 6
+    assert count_python_udf_passes(q) == 3
+
+
+@pytest.mark.parametrize('case', ['sjoin_points_rects', 'snearest_rect',
+                                  'sagg_rect_demand', 'sjoin_grid',
+                                  'snearest_k2', 'snearest_grid'])
+def test_spatial_join_crosses_once_per_side(spark, monkeypatch, case):
+    """Exactly 3 Arrow nodes (one crossing per side, the geometry's UDFs
+    chained with st_bounds, plus the refine) and no UDF expression
+    (``#id``s stripped) in two nodes. A null-intolerant bbox or radius
+    test lets Catalyst infer or push a filter below the projection
+    computing it, which re-runs that side's whole UDF chain in a second
+    node. sagg_rect_demand's left join-back adds no node: the query keeps
+    no rectangle geometry, so column pruning drops the UDF there (left and
+    anti shapes otherwise re-read the left side by design)."""
+    import __spark_entry__ as e
+    from erde_spark.operators import sjoin as sj
+    from erde_spark.plans.inspect import duplicated_udfs, physical_plan
+    if case in e.queries():
+        df = e.queries()[case](spark, SF)
+    else:
+        t = e._t(spark, SF, 'customer', 'nation')
+        pts, rects = e._cust_points(t['customer']), e._nation_rects(t['nation'])
+        if case == 'snearest_grid':
+            monkeypatch.setattr(sj, 'BROADCAST_SIDE_BYTES', -1)
+        df = {'sjoin_grid': lambda: sj.sjoin(pts, rects, op='within', cell_size=1.0),
+              'snearest_k2': lambda: sj.snearest(pts, rects, max_distance=0.5, k=2),
+              'snearest_grid': lambda: sj.snearest(pts, rects, max_distance=0.5),
+              }[case]()
+    assert count_python_udf_passes(df) == 3
+    assert duplicated_udfs(physical_plan(df)) == []
+
+
+def test_duplicated_udfs_parses_arrow_nodes():
+    """Expressions compare across nodes with ``#id``s stripped; nested
+    brackets stay inside one expression; a repeat inside one node is not
+    a duplicate."""
+    from erde_spark.plans.inspect import duplicated_udfs
+    plan = """
++- ArrowEvalPython [f(g(a#1, [1, 2])#5)#7, g(a#1, [1, 2])#5], [pythonUDF0#9, pythonUDF1#10], 200
+   +- Filter isnotnull(pythonUDF0#8.minx)
+      +- ArrowEvalPython [f(g(a#3, [1, 2])#6)#11, h(b#2)#12, h(b#4)#13], [pythonUDF0#8], 200
+"""
+    assert duplicated_udfs(plan) == ['f(g(a, [1, 2]))']
+    assert duplicated_udfs(plan.replace('f(g(a#3', 'k(g(a#3')) == []
 
 
 def test_sagg_shuffle_count(spark):
@@ -181,8 +225,8 @@ def test_snearest_small_side_broadcasts(spark):
     plan = physical_plan(df)
     assert 'BroadcastNestedLoopJoin' in plan
     assert 'CartesianProduct' not in plan
-    # bounds UDF per side + point/rect synthesis + one distance refine
-    assert count_python_udf_passes(df) <= 6
+    # point/rect synthesis chained with its bounds per side + one distance pass
+    assert count_python_udf_passes(df) == 3
 
 
 def test_sjoin_small_side_broadcasts(spark):

@@ -273,3 +273,54 @@ def test_estimate_cell_size_unbiased_on_sorted_input(spark):
     # uniform draw: mean extent ~0.5 -> cell ~1.0; stratum-biased would
     # be ~0.002
     assert 0.6 < cell < 1.6, cell
+
+
+def _jobs_during(spark, fn):
+    """Spark jobs launched while ``fn`` runs (it builds a plan, so only
+    eager work, such as cell sizing, shows up)."""
+    import uuid
+    sc, group = spark.sparkContext, f'call-{uuid.uuid4().hex}'
+    sc.setJobGroup(group, 'jobs launched at call time')
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty('spark.jobGroup.id', None)
+        sc.setLocalProperty('spark.job.description', None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize('how', ['left', 'right'])
+def test_sjoin_outer_sizes_grid_once(spark, pts, polys, monkeypatch, how):
+    """sjoin(how='left'|'right') on the grid path with cell_size=None
+    builds ONE candidate plan, so its eager cell sizing runs once: one
+    sampling job at call time, not a second one for a discarded inner
+    plan."""
+    from erde_spark.operators import sjoin as sj
+    monkeypatch.setattr(sj, 'BROADCAST_SIDE_BYTES', -1)   # force the grid
+    n_inner = _jobs_during(spark, lambda: sj.sjoin(pts, polys))
+    n_outer = _jobs_during(spark, lambda: sj.sjoin(pts, polys, how=how))
+    assert n_inner == n_outer == 1, (n_inner, n_outer)
+    got = sorted((r['name'], r['pname']) for r in sj.sjoin(pts, polys, how=how).collect()
+                 if r['name'] is not None and r['pname'] is not None)
+    assert got == [('A', 'X'), ('B', 'X'), ('C', 'X'), ('C', 'Y'), ('D', 'Y'),
+                   ('E', 'Z'), ('H', 'X'), ('I', 'Y')]
+
+
+def test_snearest_grid_matches_broadcast(spark, monkeypatch):
+    """The grid path (right side too large to broadcast) returns what the
+    broadcast path returns, k=1 and k=2, inner and left."""
+    from erde_spark.operators import sjoin as sj
+    pts = _pt_df(spark, [(0, 0, 'a'), (9.9, 9.9, 'b'), (500, 500, 'far'), (5, 5, 'c')])
+    sites = _pt_df(spark, [(1, 0, 's1'), (2, 0, 's2'), (10.1, 10.1, 's3'),
+                           (5, 6, 's4'), (6, 5, 's5'), (40, 0, 'sfar')])
+
+    def run(**kw):
+        return sorted((r['name'], r['name_right'], r['distance'])
+                      for r in sj.snearest(pts, sites, max_distance=1.5, **kw).collect())
+    cases = [{}, {'k': 2}, {'how': 'left'}, {'how': 'left', 'k': 2}]
+    want = [run(**kw) for kw in cases]
+    monkeypatch.setattr(sj, 'BROADCAST_SIDE_BYTES', -1)
+    assert [run(**kw) for kw in cases] == want
+    assert want[0] == [('a', 's1', 1.0), ('b', 's3', pytest.approx(2 ** 0.5 * 0.2)),
+                       ('c', 's4', 1.0)]
+    assert ('far', None, None) in want[2]

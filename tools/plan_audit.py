@@ -3,10 +3,12 @@
 For every headline query, capture the optimized physical plan and
 count the structures that matter at 100 TB: exchanges (shuffles),
 Python evaluation nodes (Arrow/batch UDF boundaries), cartesian
-products, broadcast joins/nested loops. Prints one row per query and
-flags hard red lines (a CartesianProduct outside the explicitly
-brute-force verification ops, or row-at-a-time BatchEvalPython
-anywhere).
+products, broadcast joins/nested loops, and ``dup``: UDF expressions
+evaluated in more than one Arrow node (a side's geometry chain re-run).
+Prints one row per query and flags hard red lines (a CartesianProduct
+outside the explicitly brute-force verification ops, or row-at-a-time
+BatchEvalPython anywhere). ``dup`` is informational, not a red line:
+``sagg``'s left join-back legitimately re-evaluates the left side.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 Exit 1 when a red line trips.
@@ -17,6 +19,7 @@ import sys
 
 sys.path.insert(0, '.')
 import __spark_entry__ as entry  # noqa: E402
+from erde_spark.plans.inspect import duplicated_udfs  # noqa: E402
 
 #: ops whose SEMANTICS are an explicit all-pairs verification tier —
 #: a cartesian/BNL join there is the documented design, not a bug
@@ -28,7 +31,7 @@ def audit(spark, sf_dir, names):
     qs = entry.queries()
     bad = []
     print(f"{'query':28s} {'exch':>4} {'pyeval':>6} {'bnl':>3} "
-          f"{'cart':>4} {'bcast':>5}")
+          f"{'cart':>4} {'bcast':>5} {'dup':>3}")
     for name in names:
         try:
             plan = (qs[name](spark, sf_dir)
@@ -46,13 +49,14 @@ def audit(spark, sf_dir, names):
         cart = len(re.findall(r'CartesianProduct', plan))
         bcast = len(re.findall(r'BroadcastHashJoin|BroadcastExchange',
                                plan))
+        dup = len(duplicated_udfs(plan))
         flags = []
         if pyeval:
             flags.append('ROW-AT-A-TIME-PYTHON')
         if cart and name not in CARTESIAN_OK:
             flags.append('CARTESIAN')
         print(f'{name:28s} {exch:4d} {pyeval:4d}/{arrow:1d} {bnl:3d} '
-              f'{cart:4d} {bcast:5d} {" ".join(flags)}')
+              f'{cart:4d} {bcast:5d} {dup:3d} {" ".join(flags)}')
         if flags:
             bad.append((name, flags))
     return bad
