@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from erde_spark.scale.text import tokens
+from erde_spark.session import driver_frame
 
 #: vocabularies at or under this row count train on the driver
 BPE_COLLECT_CAP = 500_000
@@ -164,7 +165,7 @@ def merges_df(spark, merges: list[tuple[str, str, int]]) -> DataFrame:
         T.StructField('count', T.LongType()),
     ])
     rows = [(i, a, b, a + b, int(c)) for i, (a, b, c) in enumerate(merges)]
-    return spark.createDataFrame(rows, schema)
+    return driver_frame(spark, rows, schema)
 
 
 def _encode_word(word: str, rank: dict) -> list[str]:

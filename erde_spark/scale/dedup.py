@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from erde_spark.scale.text import char_shingles, fingerprint, tokens
-from erde_spark.session import spread_to_cores
+from erde_spark.session import driver_frame, spread_to_cores
 
 
 def _units(text_col, shingles: int | None):
@@ -283,6 +283,20 @@ def _use_sig_prefilter(tok: DataFrame, num_perm: int) -> bool:
     return mean_sz >= 8 * num_perm
 
 
+def _doc_state(df: DataFrame, id_col: str, text_col: str,
+               shingles: int | None, num_perm: int,
+               seed: int) -> tuple[DataFrame, DataFrame]:
+    """(tok, sig) = ((id, toks), (id, sig)) off ONE eager checkpoint of
+    (id, toks, sig). Tokenize-hash-minhash is a single narrow pipeline
+    and per-job overhead dominates small inputs, so one materialization
+    job replaces a checkpoint per table; both feed 2+ plan branches, so
+    the Python signature kernel runs once either way."""
+    base = _sig_from_hashes(_hashed_token_sets(df, id_col, text_col, shingles),
+                            num_perm, seed, keep_toks=True) \
+        .localCheckpoint(eager=True)
+    return base.select('id', 'toks'), base.select('id', 'sig')
+
+
 def _verify_jaccard(cand: DataFrame, sig: DataFrame, tok: DataFrame,
                     threshold: float, num_perm: int, small,
                     prefilter: bool | None = None) -> DataFrame:
@@ -347,7 +361,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'te
 
     Pair-level cost is unavoidable; DOC-level tables (signatures, token
     sets) are only ever joined onto pairs. Both are eagerly materialized
-    (``localCheckpoint``) before the self-joins: each feeds 2+ plan
+    in one ``localCheckpoint`` before the self-joins: each feeds 2+ plan
     branches, and re-running the Python signature/tokenize kernels per
     branch would quadruple the Arrow traffic — the linear precompute is
     exactly what a production dedup does with its signature table.
@@ -363,9 +377,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'te
     if broadcast_docs is None:
         broadcast_docs = _should_broadcast(df)
     small = F.broadcast if broadcast_docs else (lambda x: x)
-    tok = _hashed_token_sets(df, id_col, text_col, shingles) \
-        .localCheckpoint(eager=True)
-    sig = _sig_from_hashes(tok, num_perm, seed).localCheckpoint(eager=True)
+    tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
     pf = _use_sig_prefilter(tok, num_perm)
 
     buckets = _lsh_buckets(sig, bands, rows)
@@ -408,9 +420,7 @@ def minhash_spanning_edges(df: DataFrame, id_col: str = 'doc_id', text_col: str 
     if broadcast_docs is None:
         broadcast_docs = _should_broadcast(df)
     small = F.broadcast if broadcast_docs else (lambda x: x)
-    tok = _hashed_token_sets(df, id_col, text_col, shingles) \
-        .localCheckpoint(eager=True)
-    sig = _sig_from_hashes(tok, num_perm, seed).localCheckpoint(eager=True)
+    tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
     pf = _use_sig_prefilter(tok, num_perm)
     buckets = _lsh_buckets(sig, bands, rows)
     cand = _bucket_star_edges(buckets)
@@ -567,32 +577,76 @@ _MICROBATCH_BUCKET_CAP = 150_000
 _MICROBATCH_CAND_CAP = 250_000
 
 
+#: driver-known id lists up to this size filter with a literal ``isin``
+#: (an InSet that stays in codegen and needs no broadcast job); larger
+#: lists join a driver frame instead — a huge IN-list costs more
+#: Catalyst analysis time than the join
+_ISIN_MAX = 5000
+
+
+def _keep_ids(df: DataFrame, col: str, ids: list) -> DataFrame:
+    """Rows of ``df`` whose ``col`` is in the driver-known list ``ids``."""
+    if len(ids) <= _ISIN_MAX:
+        return df.filter(F.col(col).isin(ids))
+    keep = driver_frame(df.sparkSession, [(i,) for i in ids], T.StructType(
+        [T.StructField(col, df.schema[col].dataType)]))
+    return df.join(keep, col, 'left_semi')
+
+
+def _rep_pair_candidates(bmap: dict, touched: set | None) -> set | None:
+    """Driver-side rep-pair candidates from {(band, bh): set of reps}: ALL
+    pairs per bucket up to :func:`_bucket_all_pairs`' ``max_bucket=64``,
+    star edges from the bucket minimum above it; with ``touched``, only
+    pairs involving a touched rep. ``None`` once the set exceeds
+    ``_MICROBATCH_CAND_CAP`` (the caller falls back to Spark)."""
+    cand: set = set()
+    for reps in bmap.values():
+        if len(reps) < 2 or (touched is not None and not reps & touched):
+            continue
+        rs = sorted(reps)
+        if len(rs) <= 64:
+            pairs = [(rs[i], rs[j]) for i in range(len(rs))
+                     for j in range(i + 1, len(rs))]
+        else:  # oversized hash-collision bucket: star edges
+            pairs = [(rs[0], x) for x in rs[1:]]
+        cand.update(p for p in pairs if touched is None
+                    or p[0] in touched or p[1] in touched)
+        if len(cand) > _MICROBATCH_CAND_CAP:
+            return None
+    return cand
+
+
 def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
                                   edges: DataFrame, buckets: DataFrame,
                                   sig: DataFrame, tok: DataFrame,
                                   threshold: float, num_perm: int,
-                                  small, pf: bool,
-                                  merge_rounds: int) -> DataFrame | None:
-    """Driver-orchestrated spanning-cluster dedup for DRIVER-BOUNDED
-    micro-batches, or ``None`` when any bound is exceeded (caller falls
-    back to the distributed path — identical semantics, more jobs).
+                                  small, pf: bool, merge_rounds: int,
+                                  state_out: dict | None = None
+                                  ) -> DataFrame | None:
+    """Driver-orchestrated spanning-cluster dedup for a BOUNDED input, or
+    ``None`` when any bound is exceeded (caller falls back to the
+    distributed path — identical semantics, more jobs). ``dedup_clusters``
+    tries it on every call, batch or micro-batch.
 
     The distributed merge loop costs ~2 eager actions per round plus a
     CC probe and label checkpoint — ~6 Spark actions whose payloads are
-    a few thousand rows each; on micro-batches the per-action overhead
+    a few thousand rows each; on inputs this size the per-action overhead
     (Catalyst analysis + AQE stage jobs) dominates end-to-end latency.
     Here everything EXCEPT exact-Jaccard verification moves to the
     driver: collect the verified star edges (bounded by
-    ``_MERGE_COLLECT_CAP``) and the (id, band, bh) bucket table
+    ``_MERGE_COLLECT_CAP``; ``edges`` is already checkpointed, so the
+    probe reads cached blocks) and the (id, band, bh) bucket table
     (bounded by ``_MICROBATCH_BUCKET_CAP``), then per merge round build
     the rep-pair candidates in memory — all pairs per bucket under the
     same ``max_bucket=64`` cap with the same star-edge fallback as
     :func:`_bucket_all_pairs`, the same touched-rep pruning — and spend
     exactly ONE Spark action verifying them against the checkpointed
     (sig, toks) base. Zero candidates in a round = zero Spark actions.
+    The kept ids (component minima) end as a driver list, handed to
+    ``state_out['kept_ids']`` when given.
     Output is row-identical to the distributed path (parity-tested in
     tests/test_scale.py); only job count differs. At 100 TB the bounds
-    never hold and the distributed loop below remains the scale path.
+    never hold and the distributed loop remains the scale path.
     """
     edge_rows = edges.limit(_MERGE_COLLECT_CAP + 1).collect()
     if len(edge_rows) > _MERGE_COLLECT_CAP:
@@ -600,6 +654,8 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
     bucket_rows = buckets.limit(_MICROBATCH_BUCKET_CAP + 1).collect()
     if len(bucket_rows) > _MICROBATCH_BUCKET_CAP:
         return None
+    spark = sig.sparkSession
+    itype = sig.schema['id'].dataType
     remap = _union_find_min([(r['id_a'], r['id_b']) for r in edge_rows])
     comp_of = {}
     for r in bucket_rows:  # every doc appears (sig always explodes)
@@ -610,29 +666,13 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
         bmap: dict = {}
         for r in bucket_rows:
             bmap.setdefault((r['band'], r['bh']), set()).add(comp_of[r['id']])
-        cand = set()
-        for reps in bmap.values():
-            if len(reps) < 2:
-                continue
-            if touched is not None and not (reps & touched):
-                continue
-            rs = sorted(reps)
-            if len(rs) <= 64:  # _bucket_all_pairs max_bucket
-                pairs = [(rs[i], rs[j]) for i in range(len(rs))
-                         for j in range(i + 1, len(rs))]
-            else:  # oversized hash-collision bucket: star edges
-                pairs = [(rs[0], x) for x in rs[1:]]
-            for p in pairs:
-                if touched is None or p[0] in touched or p[1] in touched:
-                    cand.add(p)
-            if len(cand) > _MICROBATCH_CAND_CAP:
-                return None  # degenerate: let the distributed loop pay
+        cand = _rep_pair_candidates(bmap, touched)
+        if cand is None:
+            return None  # degenerate: let the distributed loop pay
         if not cand:
             break
-        itype = sig.schema['id'].dataType
-        cand_df = sig.sparkSession.createDataFrame(
-            sorted(cand), T.StructType([T.StructField('id_a', itype),
-                                        T.StructField('id_b', itype)]))
+        cand_df = driver_frame(spark, sorted(cand), T.StructType(
+            [T.StructField('id_a', itype), T.StructField('id_b', itype)]))
         merges = _verify_jaccard(cand_df, sig, tok, threshold, num_perm,
                                  small, pf).select('id_a', 'id_b').collect()
         if not merges:
@@ -644,35 +684,37 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
     sizes: dict = {}
     for c in comp_of.values():
         sizes[c] = sizes.get(c, 0) + 1
-    itype = sig.schema['id'].dataType
-    reps_df = sig.sparkSession.createDataFrame(
-        sorted(sizes.items()),
-        T.StructType([T.StructField(id_col, itype),
-                      T.StructField('cluster_size', T.LongType())]))
+    if state_out is not None:
+        state_out['kept_ids'] = sorted(sizes)
+    reps_df = driver_frame(spark, sorted(sizes.items()), T.StructType(
+        [T.StructField(id_col, itype),
+         T.StructField('cluster_size', T.LongType())]))
     return df.join(F.broadcast(reps_df), id_col, 'inner')
 
 
 def connected_components(pairs: DataFrame, ids: DataFrame,
                          max_iterations: int = 12,
-                         collect_cap: int | None = None,
-                         probe_first: bool = False) -> DataFrame:
+                         collect_cap: int | None = None) -> DataFrame:
     """(id, component) — connected components over an undirected edge list
     (columns ``id_a``/``id_b``): min-label propagation with pointer
     jumping, so rounds grow the reached radius exponentially
     (O(log diameter) rounds instead of O(diameter)).
 
-    Edge sets at or under ``collect_cap`` (default ``_MERGE_COLLECT_CAP``)
-    take a driver fast path: one bounded ``limit(cap+1)`` probe, then
-    union-find in memory — identical min-label output, replacing ~10
-    iterative Spark jobs with one. Verified near-dup edges are SPARSE
-    relative to the corpus (the spanning strategy emits O(docs x bands)
-    candidates and only true near-dups survive verification), but at
-    100 TB they still exceed any driver cap, so the distributed
-    iteration below remains the scale path; the probe itself terminates
-    early and never materializes more than cap+1 rows. By default the
-    edge pipeline is checkpointed BEFORE the probe so expensive
-    upstreams run exactly once; ``probe_first=True`` lets micro-batch
-    callers (the streaming path) skip that checkpoint job.
+    The edge pipeline is checkpointed FIRST and the probe reads the
+    materialized frame: the upstream (typically the LSH bucket/verify
+    chain, whose shuffles ``limit()`` cannot short-circuit) is evaluated
+    exactly once whether the input lands under or over the cap. Edge
+    sets at or under ``collect_cap`` (default ``_MERGE_COLLECT_CAP``)
+    then take a driver fast path: one bounded ``limit(cap+1)`` probe,
+    then union-find in memory — identical min-label output, replacing
+    ~10 iterative Spark jobs with one. Verified near-dup edges are
+    SPARSE relative to the corpus (the spanning strategy emits
+    O(docs x bands) candidates and only true near-dups survive
+    verification), but at 100 TB they still exceed any driver cap, so
+    the distributed iteration remains the scale path; the probe itself
+    terminates early and never materializes more than cap+1 rows.
+    ``collect_cap=0`` skips checkpoint and probe (the edges are read
+    once, by the iteration's own edge checkpoint).
 
     Only nodes that appear in an edge enter the iteration — in a dedup
     corpus most documents are singletons, and carrying them through every
@@ -688,29 +730,27 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     one aggregation on the already-checkpointed labels instead of a
     join-and-compare against the previous round.
     """
+    base = pairs.select('id_a', 'id_b')
+    if collect_cap != 0:
+        base = base.localCheckpoint(eager=True)
+    return _components(base, ids, max_iterations, collect_cap)
+
+
+def _components(base: DataFrame, ids: DataFrame, max_iterations: int = 12,
+                collect_cap: int | None = None) -> DataFrame:
+    """:func:`connected_components` over ``base`` (id_a, id_b) that is
+    already materialized, or read only once (``collect_cap=0``)."""
     if collect_cap is None:
         collect_cap = _MERGE_COLLECT_CAP
-    base = pairs.select('id_a', 'id_b')
+    itype = base.schema['id_a'].dataType
     if collect_cap:
-        # Default: checkpoint FIRST, probe the materialized frame — the
-        # upstream pipeline (typically the LSH bucket/verify chain,
-        # whose shuffles limit() cannot short-circuit) is evaluated
-        # exactly once whether the input lands under or over the cap;
-        # the probe then reads cached blocks. ``probe_first=True`` is
-        # the opt-in for callers that KNOW their input is micro-batch-
-        # sized (the streaming path): it skips the checkpoint job on
-        # the under-cap fast path — one bounded probe job total — at
-        # the cost of a double evaluation if the batch overflows the
-        # cap after all (round-7 ADVICE).
-        if not probe_first:
-            base = base.localCheckpoint(eager=True)
         probe = base.limit(collect_cap + 1).collect()
         if len(probe) <= collect_cap:
             edge_list = [(r['id_a'], r['id_b']) for r in probe]
             remap = _union_find_min(edge_list)
             nodes = {x for e in edge_list for x in e}
-            itype = pairs.schema['id_a'].dataType
-            labels = pairs.sparkSession.createDataFrame(
+            labels = driver_frame(
+                base.sparkSession,
                 [(x, remap.get(x, x)) for x in sorted(nodes)],
                 T.StructType([T.StructField('id', itype),
                               T.StructField('component', itype)]))
@@ -718,18 +758,13 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
                        .join(labels.select('id'), 'id', 'left_anti')
                        .select('id', F.col('id').alias('component')))
             return labels.unionByName(singles)
-        # over cap on the probe-first path: materialize once before the
-        # double reference below (already checkpointed on the default
-        # path)
-        if probe_first:
-            base = base.localCheckpoint(eager=True)
     edges = base.union(base.select(F.col('id_b').alias('id_a'),
                                    F.col('id_a').alias('id_b')))
     edges = edges.localCheckpoint(eager=True)
     # sum-shortcut only for integral ids: a fractional label decrease
     # smaller than 1 could leave the truncated decimal sum unchanged and
     # terminate propagation early; float/decimal ids use the join-compare
-    numeric = isinstance(pairs.schema['id_a'].dataType, T.IntegralType)
+    numeric = isinstance(itype, T.IntegralType)
     # On the numeric path each round's checkpoint is LAZY and the
     # convergence sum right after it is what materializes the frame —
     # the sum's partial-aggregate stage scans every partition, so the
@@ -778,7 +813,6 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                    threshold: float = 0.8, pair_strategy: str = 'spanning',
                    merge_rounds: int = 2, shingles: int | None = None,
                    _state_out: dict | None = None,
-                   cc_probe_first: bool = False,
                    prefilter: bool | None = None,
                    **lsh_kw) -> DataFrame:
     """One representative per near-duplicate cluster: MinHash-LSH edges ->
@@ -804,16 +838,16 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
     LSH recall and the oversized-bucket fallback (a true pair shares
     ~b·t^r buckets, so it escapes only if every one is oversized).
 
-    ``cc_probe_first=True`` is the micro-batch opt-in forwarded to
-    :func:`connected_components`: probe the edge count before
-    checkpointing (one job saved when the edges fit the driver cap, a
-    double evaluation if they don't — only the streaming path, whose
-    batches are bounded, should set it). (Making the merge loop's
-    label/bucket checkpoints lazy under the same flag was tried and
-    measured 15-35% SLOWER on sf0.1 micro-batches, counterbalanced
-    ABBA, round 7: the re-analysis + recompute of the multiply-
-    referenced comp/rep_buckets plans exceeds the per-job overhead the
-    skipped checkpoints save. They stay eager in every mode.)
+    The verified star edges are checkpointed once. When they, the
+    (id, band, bh) bucket table and every merge round's candidate pairs
+    fit the driver bounds (``_MERGE_COLLECT_CAP``,
+    ``_MICROBATCH_BUCKET_CAP``, ``_MICROBATCH_CAND_CAP``), components and
+    the merge pass run on the driver
+    (:func:`_microbatch_spanning_clusters`: one Spark action per merge
+    round, for the Jaccard verify) and ``_state_out['kept_ids']`` holds
+    the kept ids as a driver list. Over any bound, the distributed
+    connected components and merge loop run on the same checkpointed
+    edges, with row-identical output.
 
     ``prefilter=None`` probes the mean token-set size once per call to
     decide whether the signature pre-filter pays for itself (see
@@ -825,8 +859,7 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
     if pair_strategy == 'pairs':
         pairs = minhash_lsh_pairs(df, id_col, text_col, threshold,
                                   shingles=shingles, **lsh_kw)
-        comp = connected_components(pairs, df.select(id_col),
-                                    probe_first=cc_probe_first)
+        comp = connected_components(pairs, df.select(id_col))
     elif pair_strategy == 'spanning':
         num_perm = lsh_kw.get('num_perm', 96)
         bands = lsh_kw.get('bands') or _threshold_bands(num_perm, threshold)
@@ -838,17 +871,9 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
         if broadcast_docs is None:
             broadcast_docs = _should_broadcast(df)
         small = F.broadcast if broadcast_docs else (lambda x: x)
-        # ONE materialization of (id, toks, sig): tokenize-hash-minhash
-        # is a single narrow pipeline, and per-job overhead dominates
-        # small batches (the streaming micro-batch path), so fusing the
-        # former tok/sig/buckets checkpoint trio into one job is a
-        # measured win; buckets stay a lazy explode over the
-        # checkpointed base (recompute is narrow and tiny vs a job)
-        base = _sig_from_hashes(
-            _hashed_token_sets(df, id_col, text_col, shingles),
-            num_perm, seed, keep_toks=True).localCheckpoint(eager=True)
-        tok = base.select('id', 'toks')
-        sig = base.select('id', 'sig')
+        # buckets stay a lazy explode over the checkpointed base
+        # (recompute is narrow and tiny vs a job)
+        tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
         pf = prefilter if prefilter is not None \
             else _use_sig_prefilter(tok, num_perm)
         buckets = _lsh_buckets(sig, bands, rows)
@@ -860,18 +885,14 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
             _state_out.update(tok=tok, sig=sig, buckets=buckets,
                               bands=bands, rows=rows, prefilter=pf)
         edges = _verify_jaccard(_bucket_star_edges(buckets), sig, tok,
-                                threshold, num_perm, small, pf)
-        if cc_probe_first:
-            # micro-batch opt-in: the whole CC + merge loop runs on the
-            # driver (one Spark action per merge round, for the Jaccard
-            # verify) when edges and buckets fit the driver bounds
-            out = _microbatch_spanning_clusters(
-                df, id_col, edges, buckets, sig, tok, threshold,
-                num_perm, small, pf, merge_rounds)
-            if out is not None:
-                return out
-        comp = connected_components(edges, df.select(id_col),
-                                    probe_first=cc_probe_first) \
+                                threshold, num_perm, small, pf) \
+            .select('id_a', 'id_b').localCheckpoint(eager=True)
+        out = _microbatch_spanning_clusters(
+            df, id_col, edges, buckets, sig, tok, threshold, num_perm,
+            small, pf, merge_rounds, _state_out)
+        if out is not None:
+            return out
+        comp = _components(edges, df.select(id_col)) \
             .localCheckpoint(eager=True)
         touched = None  # round 1 checks all rep pairs; later rounds prune
         touched_vals = None  # driver-known touched labels (bounded list)
@@ -893,7 +914,7 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                 # unchanged rep's bucket set is itself unchanged. Restrict
                 # to buckets holding a touched rep BEFORE the quadratic
                 # pair step, then to pairs involving a touched rep.
-                if touched_vals is not None and len(touched_vals) <= 5000:
+                if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
                     # small driver-known list: a literal isin stays in
                     # codegen and beats any join
                     hot = (rep_buckets.filter(F.col('rid').isin(touched_vals))
@@ -921,34 +942,17 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                 probe = rep_buckets.limit(
                     _MICROBATCH_BUCKET_CAP + 1).collect()
                 if len(probe) <= _MICROBATCH_BUCKET_CAP:
-                    tset = set(touched_vals)
                     bmap: dict = {}
                     for r in probe:
                         bmap.setdefault((r['band'], r['bh']),
                                         set()).add(r['rid'])
-                    cand = set()
-                    overflow = False
-                    for reps_in_b in bmap.values():
-                        if len(reps_in_b) < 2:
-                            continue
-                        rs = sorted(reps_in_b)
-                        if len(rs) <= 64:  # _bucket_all_pairs max_bucket
-                            pp = [(rs[i], rs[j]) for i in range(len(rs))
-                                  for j in range(i + 1, len(rs))]
-                        else:  # oversized bucket: star edges
-                            pp = [(rs[0], x) for x in rs[1:]]
-                        for p in pp:
-                            if p[0] in tset or p[1] in tset:
-                                cand.add(p)
-                        if len(cand) > _MICROBATCH_CAND_CAP:
-                            overflow = True
-                            break
-                    if not overflow:
+                    cand = _rep_pair_candidates(bmap, set(touched_vals))
+                    if cand is not None:
                         if not cand:
                             break
                         ctype0 = comp.schema['component'].dataType
-                        rep_cand = comp.sparkSession.createDataFrame(
-                            sorted(cand),
+                        rep_cand = driver_frame(
+                            comp.sparkSession, sorted(cand),
                             T.StructType([T.StructField('id_a', ctype0),
                                           T.StructField('id_b', ctype0)]))
                         # falls through to the shared verify/apply below;
@@ -964,7 +968,7 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                 rep_buckets = rep_buckets.localCheckpoint(eager=True)
                 rep_cand = _bucket_all_pairs(rep_buckets, member_col='rid')
             if touched is not None:
-                if touched_vals is not None and len(touched_vals) <= 5000:
+                if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
                     rep_cand = rep_cand.filter(
                         F.col('id_a').isin(touched_vals) |
                         F.col('id_b').isin(touched_vals))
@@ -1008,13 +1012,13 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                 if not remap:
                     break
                 ctype = comp.schema['component'].dataType
-                map_df = comp.sparkSession.createDataFrame(
-                    list(remap.items()),
+                map_df = driver_frame(
+                    comp.sparkSession, list(remap.items()),
                     T.StructType([T.StructField('component', ctype),
                                   T.StructField('__super', ctype)]))
                 t_vals = sorted({v for kv in remap.items() for v in kv})
-                touched = comp.sparkSession.createDataFrame(
-                    [(v,) for v in t_vals],
+                touched = driver_frame(
+                    comp.sparkSession, [(v,) for v in t_vals],
                     T.StructType([T.StructField('t', ctype)]))
                 # driver-known: the use sites pick isin (small lists,
                 # stays in codegen) or an explicit broadcast join
@@ -1098,6 +1102,13 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
     regardless of store size. Candidates are verified with exact Jaccard
     before anything is dropped (precision exact, recall = LSH).
 
+    The survivor set (batch-kept ids minus store duplicates) feeds the
+    three writes (output, store token sets, store buckets). When the
+    batch fits ``dedup_clusters``' driver bounds its kept ids are a
+    driver list, so the store duplicates are collected and subtracted
+    on the driver and the store join and the writes filter on that list;
+    over the bounds the set is computed in Spark and checkpointed once.
+
     State and output are written under ``batch=<id>`` subdirectories with
     overwrite, so a replayed micro-batch (foreachBatch's at-least-once
     contract) lands idempotently instead of duplicating rows. The store
@@ -1111,6 +1122,9 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
         raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
     rows = num_perm // bands
     import os
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     # the prefilter decision depends on the corpus token profile, not
     # the batch: decide on the first micro-batch, reuse on the rest
@@ -1134,26 +1148,33 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
                               pair_strategy='spanning', num_perm=num_perm,
                               bands=bands, seed=seed, shingles=shingles,
                               _state_out=state,
-                              # micro-batch edges fit the driver cap:
-                              # probe-first saves the checkpoint job
-                              cc_probe_first=True,
                               prefilter=pf_memo.get('pf')
                               ).drop('cluster_size')
         pf_memo['pf'] = state['prefilter']
         # reuse the tokenize/minhash/bucket state dedup_clusters already
-        # materialized for the whole batch: the final survivor-id set is
-        # materialized ONCE (it is micro-batch-bounded and id-only), so
-        # each of the three writes below is a single semi-join off a
-        # checkpointed/parquet frame instead of re-deriving the whole
-        # kept chain per write (r12 profile: the writes phase re-ran the
-        # rep join + anti-join 3x = 12-19 jobs per batch)
-        kept_ids = kept.select(F.col(id_col).alias('id'))
+        # materialized for the whole batch: each of the three writes
+        # below is a single filter on the survivor-id set instead of
+        # re-deriving the whole kept chain per write. On the bounded
+        # driver path the kept ids are already a driver list, so the
+        # survivor set stays on the driver (an isin filter: no
+        # checkpoint, no broadcast job); the distributed fallback
+        # checkpoints it once and semi-joins it
+        survivors = state.get('kept_ids')
+        kept_ids = (kept.select(F.col(id_col).alias('id'))
+                    if survivors is None else None)
+
+        def _keep(frame, col='id'):
+            if survivors is not None:
+                return _keep_ids(frame, col, survivors)
+            return frame.join(kept_ids.withColumnRenamed('id', col), col,
+                              'left_semi')
+
         _label('store join')
         if os.path.isdir(os.path.join(state_dir, 'buckets')):
             sb = sess.read.parquet(os.path.join(state_dir, 'buckets')).drop('batch')
             st = sess.read.parquet(os.path.join(state_dir, 'toks')).drop('batch')
-            bk_kept = state['buckets'].join(kept_ids, 'id', 'left_semi')
-            tok_kept = state['tok'].join(kept_ids, 'id', 'left_semi')
+            bk_kept = _keep(state['buckets'])
+            tok_kept = _keep(state['tok'])
             cand = (bk_kept.join(sb.withColumnRenamed('id', 'sid'), ['band', 'bh'])
                     .filter(F.col('id') != F.col('sid'))
                     .select(F.col('id').alias('id_a'), F.col('sid').alias('id_b'))
@@ -1168,32 +1189,44 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
                                     - F.col('inter')))
                        .filter(F.col('j') >= threshold)
                        .select(F.col('id_a').alias('id')).distinct())
-            # dup_ids is consumed exactly once below (folded into the
-            # survivor-id set), so it needs no checkpoint of its own
-            kept_ids = kept_ids.join(dup_ids, 'id', 'left_anti')
-        kept_ids = kept_ids.localCheckpoint(eager=True)
-        kept = batch_df.join(kept_ids.withColumnRenamed('id', id_col),
-                             id_col, 'left_semi')
-        tok = state['tok'].join(kept_ids, 'id', 'left_semi')
-        bk = state['buckets'].join(kept_ids, 'id', 'left_semi')
+            if survivors is None:
+                kept_ids = kept_ids.join(dup_ids, 'id', 'left_anti')
+            else:
+                # store duplicates are a subset of the batch's kept ids:
+                # collect them (bounded) and subtract on the driver
+                dups = {r['id'] for r in dup_ids.collect()}
+                survivors = [i for i in survivors if i not in dups]
+        if survivors is None:
+            kept_ids = kept_ids.localCheckpoint(eager=True)
+        kept = _keep(batch_df, id_col)
+        tok = _keep(state['tok'])
+        bk = _keep(state['buckets'])
+        if survivors is not None:
+            # a batch within the driver bounds is small: one file per
+            # store table per batch (every later batch re-reads the
+            # store, so its file count is read cost), as the shuffled
+            # semi-join of the fallback leaves it after AQE coalescing
+            tok, bk = tok.coalesce(1), bk.coalesce(1)
         _label('writes')
         # three independent sinks (different directories, disjoint
         # plans off materialized inputs): overlap them so the tail of
-        # one write back-fills cores freed by another (guide §2.6);
-        # job descriptions are thread-local, so re-label per thread
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write(df_path):
-            df_, path = df_path
-            _label('writes')
+        # one write back-fills cores freed by another (guide §2.6).
+        # inheritable_thread_target is pyspark's thread-target wrapper
+        # for pinned-thread mode: the writer thread inherits this
+        # thread's local properties (job description, query job group).
+        # It clones them when it WRAPS, so wrap once per write: threads
+        # sharing one clone would overwrite each other's SQL execution id
+        def _write(df_, path):
             df_.write.mode('overwrite').parquet(path)
 
+        writes = [(inheritable_thread_target(sess)(_write), df_, path)
+                  for df_, path in (
+                      (kept, os.path.join(out_dir, f'batch={batch_id}')),
+                      (tok, os.path.join(state_dir, 'toks', f'batch={batch_id}')),
+                      (bk, os.path.join(state_dir, 'buckets', f'batch={batch_id}')))]
         with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(_write, [
-                (kept, os.path.join(out_dir, f'batch={batch_id}')),
-                (tok, os.path.join(state_dir, 'toks', f'batch={batch_id}')),
-                (bk, os.path.join(state_dir, 'buckets', f'batch={batch_id}')),
-            ]))
+            for f in [pool.submit(*w) for w in writes]:
+                f.result()
         sc.setJobDescription(None)
 
     reader = spark.readStream.schema(schema)

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from erde_spark.scale.text import tokens
+from erde_spark.session import driver_frame
 
 #: gram-part separator (never produced by the tokenizer, which only
 #: emits [a-z0-9] runs)
@@ -126,8 +127,8 @@ def train_ngram_lm(docs: DataFrame, text_col: str = 'text', n: int = 3,
                               | ~F.col('gram').contains(SEP))
     if n > 1:
         spark = docs.sparkSession
-        bos_rows = spark.createDataFrame(
-            [(SEP.join([BOS] * j), n_docs) for j in range(1, n)],
+        bos_rows = driver_frame(
+            spark, [(SEP.join([BOS] * j), n_docs) for j in range(1, n)],
             'gram string, count long')
         counts = counts.unionByName(bos_rows)
     return NgramLM(counts, n, n_tokens, n_docs, alpha)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from erde_spark.scale.text import token_count, tokens
+from erde_spark.session import driver_frame
 
 
 def bm25_scores(docs: DataFrame, query_terms: list[str],
@@ -208,7 +209,7 @@ def read_postings(spark, path: str, terms: list[str],
             f"at {path!r} (written with buckets={meta['buckets']}); a "
             'mismatched probe would silently return empty')
     lo = [t.lower() for t in terms]
-    tdf = spark.createDataFrame([(t,) for t in lo], 'term string')
+    tdf = driver_frame(spark, [(t,) for t in lo], 'term string')
     wanted = [r[0] for r in
               tdf.select(F.pmod(F.xxhash64('term'),
                                 F.lit(buckets))).distinct().collect()]

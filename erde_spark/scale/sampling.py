@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from erde_spark.session import driver_frame
+
 
 def sample_key(id_col: Column | str, salt: str = '') -> Column:
     """Deterministic 4-hex-digit (16-bit) bucket of a row id: the first 4
@@ -324,8 +326,8 @@ def shuffle_deterministic(df: DataFrame, id_col: str, salt: str = '',
     # create_map literal: a map of `buckets` entries is re-evaluated
     # per row and blows codegen limits past ~1k groups (measured 6x
     # slower at 4096 buckets / 1M rows than the join)
-    off = F.broadcast(df.sparkSession.createDataFrame(
-        offsets, '_g int, _off long'))
+    off = F.broadcast(driver_frame(df.sparkSession, offsets,
+                                   '_g int, _off long'))
     w = Window.partitionBy('_g').orderBy(F.col('_h').asc(),
                                          F.col(id_col).asc())
     pos = F.col('_off') + F.row_number().over(w) - 1

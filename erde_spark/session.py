@@ -117,6 +117,25 @@ def spread_to_cores(df):
     return df.repartition(cores)
 
 
+def driver_frame(spark: SparkSession, rows, schema):
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` field
+    order; ``schema`` is a StructType or a DDL string), built from a
+    pandas frame through the session's Arrow path.
+
+    ``createDataFrame(<python list>)`` goes through ``sc.parallelize``
+    and a pickled PythonRDD, so every job that scans the frame starts
+    Python workers on every slice, and Catalyst sizes it at
+    ``Long.MaxValue``. The Arrow path plans a ``LocalTableScan`` with a
+    real size: no Python on scan, and a broadcast of it needs no job.
+    (Empty ``rows`` fall back to the list path inside pyspark.)"""
+    import pandas as pd
+    from pyspark.sql import types as T
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    pdf = pd.DataFrame.from_records(list(rows), columns=schema.fieldNames())
+    return spark.createDataFrame(pdf, schema)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Load parquet tables from a testdata scale-factor dir as a dict.
 

@@ -794,6 +794,89 @@ def test_streaming_neardup_cold_restart_resume(spark, docs, tmp_path):
     assert {r['doc_id'] for r in fresh.collect()} <= set(kept_ids)
 
 
+def test_streaming_neardup_driver_survivors_parity(spark, docs, tmp_path,
+                                                   monkeypatch):
+    """Each micro-batch's survivor set stays on the driver when the batch
+    fits dedup_clusters' driver bounds (store duplicates subtracted from
+    the kept-id list, writes filtered by it). Forcing the distributed
+    fallback through the bucket bound, and the driver list's join branch
+    through the IN-list bound, must write the same output and store rows
+    over two batches (the second joins the store)."""
+    import erde_spark.scale.dedup as D
+    sample = docs.limit(80).select('doc_id', 'text')
+    in_dir = str(tmp_path / 'in')
+    sample.filter('doc_id < 50').write.parquet(in_dir)
+    replay = (sample.filter('doc_id < 20')
+              .selectExpr('doc_id + 100000 AS doc_id', 'text'))
+    (sample.filter('doc_id >= 50').unionByName(replay)
+     .write.mode('append').parquet(in_dir))
+
+    def run(tag):
+        root = tmp_path / tag
+        D.streaming_neardup_dedup(
+            spark, in_dir, sample.schema, str(root / 'out'),
+            str(root / 'ck'), str(root / 'state'), threshold=0.9,
+            max_files_per_trigger=1)
+        return {sub: sorted(tuple(r) for r in
+                            spark.read.parquet(str(root / sub)).collect())
+                for sub in ('out', 'state/toks', 'state/buckets')}
+
+    default = run('default')
+    assert len(default['out']) < 80  # the replays were dropped
+    # the store is re-read by every batch: one file per table per batch
+    for table in ('toks', 'buckets'):
+        for b in (0, 1):
+            part = tmp_path / 'default' / 'state' / table / f'batch={b}'
+            assert len(list(part.glob('*.parquet'))) == 1, (table, b)
+    with monkeypatch.context() as m:
+        m.setattr(D, '_ISIN_MAX', 0)
+        assert run('join') == default
+    with monkeypatch.context() as m:
+        m.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
+        assert run('distributed') == default
+
+
+def test_streaming_neardup_no_jvm_thread_growth(spark, docs, tmp_path):
+    """A long stream must not grow the JVM threads that serve Python
+    threads: each micro-batch runs its three sink writes on Python
+    threads, and in pinned-thread mode every Python thread that calls
+    into the JVM gets a py4j peer thread there. Six one-file
+    micro-batches (two runs on one checkpoint: batches 1-2, then 3-6):
+    the py4j peer-thread count after batch 6 is at most the count after
+    batch 2 plus a small constant. (Spark's own exchange pools also grow
+    the total live-thread count over the first batches, up to their
+    fixed caps, so the total is not the measure.)"""
+    from erde_spark.scale.dedup import streaming_neardup_dedup
+    sample = docs.limit(120).select('doc_id', 'text')
+    in_dir = str(tmp_path / 'in')
+    kw = dict(out_dir=str(tmp_path / 'out'),
+              checkpoint_dir=str(tmp_path / 'ck'),
+              state_dir=str(tmp_path / 'state'),
+              threshold=0.9, max_files_per_trigger=1)
+
+    def add_file(lo):
+        (sample.filter(f'doc_id >= {lo} AND doc_id < {lo + 20}')
+         .coalesce(1).write.mode('append').parquet(in_dir))
+
+    def py4j_threads():
+        traces = spark._jvm.java.lang.Thread.getAllStackTraces()
+        return sum(any(f.getClassName().startswith('py4j.')
+                       for f in traces.get(t))
+                   for t in traces.keySet().toArray())
+
+    for lo in (0, 20):
+        add_file(lo)
+    streaming_neardup_dedup(spark, in_dir, sample.schema, **kw)
+    after2 = py4j_threads()
+    for lo in (40, 60, 80, 100):
+        add_file(lo)
+    streaming_neardup_dedup(spark, in_dir, sample.schema, **kw)
+    after6 = py4j_threads()
+    out = spark.read.parquet(kw['out_dir'])
+    assert out.select('batch').distinct().count() == 6
+    assert after6 <= after2 + 2, (after2, after6)
+
+
 # ---------------------------------------------------------------- clustering
 
 def test_connected_components_matches_union_find(spark):
@@ -832,14 +915,14 @@ def test_connected_components_matches_union_find(spark):
                for r in connected_components(pairs, ids,
                                              collect_cap=cap).collect()}
         assert got == exp, f'collect_cap={cap}'
-    # probe_first (streaming micro-batch opt-in, round-7 ADVICE) must be
-    # output-identical on both sides of the cap: under (driver path) and
-    # over (falls through to the distributed iteration)
+    # checkpoint-then-probe must be output-identical on both sides of
+    # the cap: under (driver path) and over (the probe falls through to
+    # the distributed iteration on the checkpointed edges)
     for cap in (1000, 5):
         got = {r['id']: r['component']
-               for r in connected_components(pairs, ids, collect_cap=cap,
-                                             probe_first=True).collect()}
-        assert got == exp, f'probe_first cap={cap}'
+               for r in connected_components(pairs, ids,
+                                             collect_cap=cap).collect()}
+        assert got == exp, f'probed cap={cap}'
 
 
 def test_connected_components_fractional_ids(spark):
@@ -852,6 +935,12 @@ def test_connected_components_fractional_ids(spark):
     got = {r['id']: r['component']
            for r in connected_components(pairs, ids).collect()}
     assert got == {1.5: 1.5, 2.25: 1.5, 3.5: 1.5, 9.75: 9.75}
+
+
+#: Spark jobs of dedup_clusters(_clique_corpus) on the driver path,
+#: collect included (measured 15 on Spark 4.1.2, local[4]; the
+#: distributed path launches 32-33)
+DRIVER_PATH_JOBS = 15
 
 
 def _clique_corpus(spark):
@@ -896,62 +985,123 @@ def test_dedup_clusters_keeps_no_neardup_pair(spark):
                              for r in leftovers]
 
 
-def test_dedup_clusters_driver_path_parity(spark, monkeypatch):
-    """The micro-batch driver-orchestrated merge loop (cc_probe_first)
-    must be ROW-IDENTICAL to the distributed path — on sf0.01's
-    dup-dense corpus (multi-round merges fire) and on the synthetic
-    clique — and must fall back to the distributed path with identical
-    output when either driver bound is exceeded."""
+def _kept_sizes(df, **kw):
+    from erde_spark.scale.dedup import dedup_clusters
+    return sorted((r['doc_id'], r['cluster_size']) for r in
+                  dedup_clusters(df, threshold=0.9, pair_strategy='spanning',
+                                 **kw).collect())
+
+
+def _spy_driver_path(monkeypatch):
+    """Wrap _microbatch_spanning_clusters; the returned dict records
+    whether the last call took the driver path."""
     import erde_spark.scale.dedup as D
+    orig, seen = D._microbatch_spanning_clusters, {}
+
+    def spy(*a, **kw):
+        out = orig(*a, **kw)
+        seen['driver_path'] = out is not None
+        return out
+
+    monkeypatch.setattr(D, '_microbatch_spanning_clusters', spy)
+    return seen
+
+
+def test_dedup_clusters_driver_path_parity(spark, monkeypatch):
+    """The default, the bounded driver-orchestrated cluster path, must be
+    ROW-IDENTICAL to the distributed path forced through the bounds — on
+    sf0.01's dup-dense corpus (multi-round merges fire) and on the
+    synthetic clique — and each bound, exceeded, must fall back to the
+    distributed path with identical output."""
+    import erde_spark.scale.dedup as D
+    seen = _spy_driver_path(monkeypatch)
     for docs in (_clique_corpus(spark),
                  spark.read.parquet('/root/testdata/sf0.01/documents.parquet')):
-        dist = sorted((r['doc_id'], r['cluster_size']) for r in
-                      D.dedup_clusters(docs, threshold=0.9,
-                                       pair_strategy='spanning').collect())
-        drv = sorted((r['doc_id'], r['cluster_size']) for r in
-                     D.dedup_clusters(docs, threshold=0.9,
-                                      pair_strategy='spanning',
-                                      cc_probe_first=True).collect())
+        drv = _kept_sizes(docs)
+        assert seen['driver_path'] is True
+        with monkeypatch.context() as m:
+            m.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
+            dist = _kept_sizes(docs)
+        assert seen['driver_path'] is False
         assert drv == dist
     # force each driver bound to 0: _microbatch_spanning_clusters must
     # return None and the distributed fallback must produce the same rows
+    # (the clique's star edges merge it whole, so no merge round builds
+    # candidates and the candidate cap never binds: parity only there)
     docs = _clique_corpus(spark)
-    exp = sorted((r['doc_id'], r['cluster_size']) for r in
-                 D.dedup_clusters(docs, threshold=0.9,
-                                  pair_strategy='spanning').collect())
+    exp = _kept_sizes(docs)
     for attr in ('_MERGE_COLLECT_CAP', '_MICROBATCH_BUCKET_CAP',
                  '_MICROBATCH_CAND_CAP'):
-        monkeypatch.setattr(D, attr, 0 if attr != '_MERGE_COLLECT_CAP' else 1)
-        got = sorted((r['doc_id'], r['cluster_size']) for r in
-                     D.dedup_clusters(docs, threshold=0.9,
-                                      pair_strategy='spanning',
-                                      cc_probe_first=True).collect())
+        with monkeypatch.context() as m:
+            m.setattr(D, attr, 0 if attr != '_MERGE_COLLECT_CAP' else 1)
+            got = _kept_sizes(docs)
+        if attr != '_MICROBATCH_CAND_CAP':
+            assert seen['driver_path'] is False, attr
         assert got == exp, attr
-        monkeypatch.undo()
+
+
+def test_dedup_clusters_driver_path_job_count(spark, monkeypatch):
+    """Pin: with no argument, dedup_clusters on the clique corpus takes
+    the bounded driver path and launches at most the measured number of
+    Spark jobs (collect of the result included)."""
+    seen = _spy_driver_path(monkeypatch)
+    docs = _clique_corpus(spark).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    sc.setJobGroup('dedup_driver_pin', 'dedup_clusters job-count pin')
+    try:
+        _kept_sizes(docs)
+    finally:
+        sc.setJobGroup(None, None)
+    assert seen['driver_path'] is True
+    jobs = sc.statusTracker().getJobIdsForGroup('dedup_driver_pin')
+    assert len(jobs) <= DRIVER_PATH_JOBS, len(jobs)
+
+
+def test_driver_frame_skips_python_rdd(spark):
+    """Pin: driver_frame builds through the Arrow path — its lineage has
+    no PythonRDD (the list path's parallelize + pickled map) and it plans
+    as a local scan Catalyst can size."""
+    from pyspark.sql import types as T
+
+    from erde_spark.session import driver_frame
+    rows = [(i, i * 2) for i in range(300)]
+    schema = T.StructType([T.StructField('id', T.LongType()),
+                           T.StructField('v', T.LongType())])
+    df = driver_frame(spark, rows, schema)
+    assert 'PythonRDD' not in df._jdf.rdd().toDebugString()
+    assert 'PythonRDD' in spark.createDataFrame(rows, schema) \
+        ._jdf.rdd().toDebugString()  # the path it replaces
+    assert sorted(tuple(r) for r in df.collect()) == rows
+    ddl = driver_frame(spark, [(1, 'a')], 'k int, s string')
+    assert ddl.schema.simpleString() == 'struct<k:int,s:string>'
+    assert [tuple(r) for r in ddl.collect()] == [(1, 'a')]
 
 
 def test_dedup_clusters_driver_merge_rounds_parity(spark, monkeypatch):
-    """r13: merge rounds AFTER the first with a driver-known touched set
-    build rep-pair candidates in memory (bounded collect of the
-    hot-restricted rep-bucket table) instead of the distributed
-    _bucket_all_pairs chain. Forcing the probe cap to 0 disables the
-    driver rounds (every round distributed); both modes must be
-    row-identical on the dup-dense corpus where multi-round merges
-    fire, and on the synthetic clique."""
+    """r13: in the distributed merge loop, rounds AFTER the first with a
+    driver-known touched set build rep-pair candidates in memory (bounded
+    collect of the hot-restricted rep-bucket table) instead of the
+    distributed _bucket_all_pairs chain. A bucket cap one below the
+    corpus's bucket rows (docs x bands) turns off the whole-input driver
+    path but keeps those rounds; a cap of 0 makes every round
+    distributed. Both must be row-identical to each other and to the
+    default driver path, on the dup-dense corpus where multi-round
+    merges fire and on the synthetic clique."""
     import erde_spark.scale.dedup as D
+    seen = _spy_driver_path(monkeypatch)
+    bands = D._threshold_bands(96, 0.9)
     for docs in (_clique_corpus(spark),
                  spark.read.parquet('/root/testdata/sf0.01/documents.parquet')):
-        drv = sorted((r['doc_id'], r['cluster_size']) for r in
-                     D.dedup_clusters(docs, threshold=0.9,
-                                      pair_strategy='spanning',
-                                      merge_rounds=3).collect())
-        monkeypatch.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
-        dist = sorted((r['doc_id'], r['cluster_size']) for r in
-                      D.dedup_clusters(docs, threshold=0.9,
-                                       pair_strategy='spanning',
-                                       merge_rounds=3).collect())
-        monkeypatch.undo()
-        assert drv == dist
+        default = _kept_sizes(docs, merge_rounds=3)
+        assert seen['driver_path'] is True
+        with monkeypatch.context() as m:
+            m.setattr(D, '_MICROBATCH_BUCKET_CAP', docs.count() * bands - 1)
+            drv = _kept_sizes(docs, merge_rounds=3)
+        assert seen['driver_path'] is False
+        with monkeypatch.context() as m:
+            m.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
+            dist = _kept_sizes(docs, merge_rounds=3)
+        assert drv == dist == default
 
 
 def test_dedup_clusters_rejects_bad_bands(spark):
@@ -1983,8 +2133,7 @@ def test_microbatch_merge_bounds_cap_edge_parity(spark, monkeypatch):
     monkeypatch.setattr(D, '_microbatch_spanning_clusters', spy)
     exp = sorted((r['doc_id'], r['cluster_size']) for r in
                  D.dedup_clusters(docs, threshold=0.9,
-                                  pair_strategy='spanning',
-                                  cc_probe_first=True).collect())
+                                  pair_strategy='spanning').collect())
     monkeypatch.undo()
     assert counts['edges'] > 1 and counts['buckets'] > 1
 
@@ -2003,8 +2152,7 @@ def test_microbatch_merge_bounds_cap_edge_parity(spark, monkeypatch):
             engaged.clear()
             got = sorted((r['doc_id'], r['cluster_size']) for r in
                          D.dedup_clusters(docs, threshold=0.9,
-                                          pair_strategy='spanning',
-                                          cc_probe_first=True).collect())
+                                          pair_strategy='spanning').collect())
             assert got == exp, (attr, cap)
             assert engaged['driver_path'] is want_engaged, (attr, cap)
             monkeypatch.undo()

@@ -1,11 +1,13 @@
-"""Measure the driver merge-loop bounds at their edges (round-7 verdict
-ask #6): latency + driver memory of the micro-batch driver path as the
-(id, band, bh) bucket table approaches _MICROBATCH_BUCKET_CAP (500k) and
-just past it (fallback engages), vs the distributed path on the same
-corpus. Bucket rows = docs x bands, so the bucket bound binds first on
-real batches (edges need a dup-dense corpus to approach 100k).
+"""Measure the driver merge-loop bounds at their edges: latency + driver
+memory of dedup_clusters' bounded driver path as the (id, band, bh)
+bucket table approaches _MICROBATCH_BUCKET_CAP and just past it
+(fallback engages), vs the distributed path on the same corpus, forced
+by setting _MICROBATCH_BUCKET_CAP to 0. Bucket rows = docs x bands, so
+the bucket bound binds first on real batches (edges need a dup-dense
+corpus to approach 100k).
 
-Usage: python tools/measure_merge_bounds.py   -> markdown rows for SCALE.md
+Usage: python tools/measure_merge_bounds.py [n_docs ...]
+  -> markdown rows for SCALE.md (default sizes straddle the bucket cap)
 """
 import sys
 import time
@@ -35,8 +37,9 @@ def main():
     seen = {}
 
     def spy(df, id_col, edges, buckets, *a, **kw):
-        seen['buckets'] = buckets.count()
-        seen['edges'] = edges.count()
+        if not seen:  # count once per size, outside the timed runs
+            seen['buckets'] = buckets.count()
+            seen['edges'] = edges.count()
         out = orig(df, id_col, edges, buckets, *a, **kw)
         seen['engaged'] = out is not None
         return out
@@ -48,33 +51,40 @@ def main():
     print('| docs | bucket rows | edge rows | path | wall s | '
           'driver peak MB | distributed s |')
     print('|---|---|---|---|---|---|---|')
-    for n_docs in (4_000, 12_000, int(500_000 // bands),
-                   int(500_000 // bands) + 2_000):
+    cap = D._MICROBATCH_BUCKET_CAP
+    sizes = [int(a) for a in sys.argv[1:]] or [
+        4_000, 12_000, cap // bands, cap // bands + 2_000]
+
+    def run():
+        return D.dedup_clusters(docs, threshold=0.9,
+                                pair_strategy='spanning').count()
+
+    for n_docs in sizes:
         docs = corpus(spark, n_docs).localCheckpoint(eager=True)
-        # warm
-        D.dedup_clusters(docs, threshold=0.9, pair_strategy='spanning',
-                         cc_probe_first=True).count()
-        best, peak = float('inf'), 0
-        for _ in range(3):
-            seen.clear()
-            tracemalloc.start()
+        run()  # warm
+        # peak from one traced run: tracemalloc slows the driver path's
+        # Python several-fold, so the timed runs below go untraced
+        seen.clear()
+        tracemalloc.start()
+        run()
+        _, peak = tracemalloc.get_traced_memory()
+        tracemalloc.stop()
+        engaged, n_buckets, n_edges = (seen.get('engaged'), seen['buckets'],
+                                       seen['edges'])
+        best, dist_best = float('inf'), float('inf')
+        for _ in range(3):  # alternate the two paths
             t0 = time.perf_counter()
-            D.dedup_clusters(docs, threshold=0.9,
-                             pair_strategy='spanning',
-                             cc_probe_first=True).count()
-            dt = time.perf_counter() - t0
-            _, pk = tracemalloc.get_traced_memory()
-            tracemalloc.stop()
-            best, peak = min(best, dt), max(peak, pk)
-        dist_best = float('inf')
-        for _ in range(3):
-            t0 = time.perf_counter()
-            D.dedup_clusters(docs, threshold=0.9,
-                             pair_strategy='spanning',
-                             cc_probe_first=False).count()
-            dist_best = min(dist_best, time.perf_counter() - t0)
-        path = 'driver' if seen.get('engaged') else 'FALLBACK'
-        print(f'| {n_docs} | {seen["buckets"]} | {seen["edges"]} | {path} '
+            run()
+            best = min(best, time.perf_counter() - t0)
+            D._MICROBATCH_BUCKET_CAP = 0  # distributed path
+            try:
+                t0 = time.perf_counter()
+                run()
+                dist_best = min(dist_best, time.perf_counter() - t0)
+            finally:
+                D._MICROBATCH_BUCKET_CAP = cap
+        path = 'driver' if engaged else 'FALLBACK'
+        print(f'| {n_docs} | {n_buckets} | {n_edges} | {path} '
               f'| {best:.2f} | {peak / 1e6:.0f} | {dist_best:.2f} |')
         docs.unpersist()
 
