@@ -27,6 +27,7 @@ import math
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -266,7 +267,15 @@ def _hashed_token_sets(df: DataFrame, id_col: str, text_col: str,
                                      lambda t: F.xxhash64(t))).alias('toks'))
 
 
-def _use_sig_prefilter(tok: DataFrame, num_perm: int) -> bool:
+def _token_profile(tok: DataFrame) -> tuple[float, int]:
+    """(mean token-set size, document count) of an (id, toks) table —
+    one bounded agg job."""
+    mean_sz, n = tok.agg(F.avg(F.size('toks')), F.count(F.lit(1))).first()
+    return mean_sz or 0.0, n
+
+
+def _use_sig_prefilter(tok: DataFrame, num_perm: int,
+                       mean_sz: float | None = None) -> bool:
     """Whether the signature pre-filter pays for itself, decided from the
     MEAN token-set size (one bounded agg on the doc-level token table —
     the same planning-probe discipline as ``_should_broadcast``).
@@ -278,8 +287,10 @@ def _use_sig_prefilter(tok: DataFrame, num_perm: int) -> bool:
     only wins when token sets are long enough (e.g. char-shingle units,
     thousands of elements) that per-pair set intersection dominates the
     fixed signature compare; the 8x-num_perm threshold is the measured
-    crossover's order of magnitude."""
-    mean_sz = tok.agg(F.avg(F.size('toks'))).first()[0] or 0.0
+    crossover's order of magnitude. ``mean_sz`` from a
+    :func:`_token_profile` the caller already took skips the agg."""
+    if mean_sz is None:
+        mean_sz = _token_profile(tok)[0]
     return mean_sz >= 8 * num_perm
 
 
@@ -579,18 +590,9 @@ _MICROBATCH_CAND_CAP = 250_000
 
 #: driver-known id lists up to this size filter with a literal ``isin``
 #: (an InSet that stays in codegen and needs no broadcast job); larger
-#: lists join a driver frame instead — a huge IN-list costs more
-#: Catalyst analysis time than the join
+#: sets take a join — a huge IN-list costs more Catalyst analysis time
+#: than the join
 _ISIN_MAX = 5000
-
-
-def _keep_ids(df: DataFrame, col: str, ids: list) -> DataFrame:
-    """Rows of ``df`` whose ``col`` is in the driver-known list ``ids``."""
-    if len(ids) <= _ISIN_MAX:
-        return df.filter(F.col(col).isin(ids))
-    keep = driver_frame(df.sparkSession, [(i,) for i in ids], T.StructType(
-        [T.StructField(col, df.schema[col].dataType)]))
-    return df.join(keep, col, 'left_semi')
 
 
 def _rep_pair_candidates(bmap: dict, touched: set | None) -> set | None:
@@ -617,10 +619,11 @@ def _rep_pair_candidates(bmap: dict, touched: set | None) -> set | None:
 
 
 def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
-                                  edges: DataFrame, buckets: DataFrame,
+                                  edge_rows: list, buckets: DataFrame,
                                   sig: DataFrame, tok: DataFrame,
                                   threshold: float, num_perm: int,
                                   small, pf: bool, merge_rounds: int,
+                                  n_buckets: int | None = None,
                                   state_out: dict | None = None
                                   ) -> DataFrame | None:
     """Driver-orchestrated spanning-cluster dedup for a BOUNDED input, or
@@ -633,10 +636,12 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
     a few thousand rows each; on inputs this size the per-action overhead
     (Catalyst analysis + AQE stage jobs) dominates end-to-end latency.
     Here everything EXCEPT exact-Jaccard verification moves to the
-    driver: collect the verified star edges (bounded by
-    ``_MERGE_COLLECT_CAP``; ``edges`` is already checkpointed, so the
-    probe reads cached blocks) and the (id, band, bh) bucket table
-    (bounded by ``_MICROBATCH_BUCKET_CAP``), then per merge round build
+    driver: take the verified star edges (``edge_rows``, the caller's
+    ``limit(_MERGE_COLLECT_CAP + 1)`` probe of the checkpointed edges,
+    which its connected-components fallback reuses) and collect the
+    (id, band, bh) bucket table (bounded by ``_MICROBATCH_BUCKET_CAP``;
+    a known row count ``n_buckets`` over the bound returns ``None``
+    before any collect), then per merge round build
     the rep-pair candidates in memory — all pairs per bucket under the
     same ``max_bucket=64`` cap with the same star-edge fallback as
     :func:`_bucket_all_pairs`, the same touched-rep pruning — and spend
@@ -648,8 +653,9 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
     tests/test_scale.py); only job count differs. At 100 TB the bounds
     never hold and the distributed loop remains the scale path.
     """
-    edge_rows = edges.limit(_MERGE_COLLECT_CAP + 1).collect()
     if len(edge_rows) > _MERGE_COLLECT_CAP:
+        return None
+    if n_buckets is not None and n_buckets > _MICROBATCH_BUCKET_CAP:
         return None
     bucket_rows = buckets.limit(_MICROBATCH_BUCKET_CAP + 1).collect()
     if len(bucket_rows) > _MICROBATCH_BUCKET_CAP:
@@ -737,14 +743,18 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
 
 
 def _components(base: DataFrame, ids: DataFrame, max_iterations: int = 12,
-                collect_cap: int | None = None) -> DataFrame:
+                collect_cap: int | None = None,
+                probe: list | None = None) -> DataFrame:
     """:func:`connected_components` over ``base`` (id_a, id_b) that is
-    already materialized, or read only once (``collect_cap=0``)."""
+    already materialized, or read only once (``collect_cap=0``).
+    ``probe``: the rows of a ``base.limit(collect_cap + 1)`` collect the
+    caller already holds."""
     if collect_cap is None:
         collect_cap = _MERGE_COLLECT_CAP
     itype = base.schema['id_a'].dataType
     if collect_cap:
-        probe = base.limit(collect_cap + 1).collect()
+        if probe is None:
+            probe = base.limit(collect_cap + 1).collect()
         if len(probe) <= collect_cap:
             edge_list = [(r['id_a'], r['id_b']) for r in probe]
             remap = _union_find_min(edge_list)
@@ -838,16 +848,20 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
     LSH recall and the oversized-bucket fallback (a true pair shares
     ~b·t^r buckets, so it escapes only if every one is oversized).
 
-    The verified star edges are checkpointed once. When they, the
+    The verified star edges are checkpointed once and probed once (a
+    ``limit(_MERGE_COLLECT_CAP + 1)`` collect). When they, the
     (id, band, bh) bucket table and every merge round's candidate pairs
     fit the driver bounds (``_MERGE_COLLECT_CAP``,
     ``_MICROBATCH_BUCKET_CAP``, ``_MICROBATCH_CAND_CAP``), components and
     the merge pass run on the driver
     (:func:`_microbatch_spanning_clusters`: one Spark action per merge
     round, for the Jaccard verify) and ``_state_out['kept_ids']`` holds
-    the kept ids as a driver list. Over any bound, the distributed
-    connected components and merge loop run on the same checkpointed
-    edges, with row-identical output.
+    the kept ids as a driver list. Over any bound, connected components
+    (on the same edge probe) and the distributed merge loop run on the
+    same checkpointed edges, with row-identical output. The bucket table
+    has docs x bands rows, and with ``prefilter=None`` the prefilter
+    probe counts the documents, so an input over the bucket bound falls
+    back without collecting buckets.
 
     ``prefilter=None`` probes the mean token-set size once per call to
     decide whether the signature pre-filter pays for itself (see
@@ -874,8 +888,14 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
         # buckets stay a lazy explode over the checkpointed base
         # (recompute is narrow and tiny vs a job)
         tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
-        pf = prefilter if prefilter is not None \
-            else _use_sig_prefilter(tok, num_perm)
+        n_buckets, pf = None, prefilter
+        if pf is None:
+            # the prefilter probe's agg also counts documents, and every
+            # document explodes into exactly ``bands`` bucket rows: the
+            # bucket bound is then decided without collecting buckets
+            mean_sz, n_docs = _token_profile(tok)
+            pf = _use_sig_prefilter(tok, num_perm, mean_sz)
+            n_buckets = n_docs * bands
         buckets = _lsh_buckets(sig, bands, rows)
         if _state_out is not None:
             # hand the already-materialized per-document state to callers
@@ -887,12 +907,16 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
         edges = _verify_jaccard(_bucket_star_edges(buckets), sig, tok,
                                 threshold, num_perm, small, pf) \
             .select('id_a', 'id_b').localCheckpoint(eager=True)
+        # one bounded edge probe serves both paths: the driver path's
+        # edge list and the connected-components fast path of the fallback
+        edge_rows = edges.limit(_MERGE_COLLECT_CAP + 1).collect()
         out = _microbatch_spanning_clusters(
-            df, id_col, edges, buckets, sig, tok, threshold, num_perm,
-            small, pf, merge_rounds, _state_out)
+            df, id_col, edge_rows, buckets, sig, tok, threshold, num_perm,
+            small, pf, merge_rounds, n_buckets=n_buckets,
+            state_out=_state_out)
         if out is not None:
             return out
-        comp = _components(edges, df.select(id_col)) \
+        comp = _components(edges, df.select(id_col), probe=edge_rows) \
             .localCheckpoint(eager=True)
         touched = None  # round 1 checks all rep pairs; later rounds prune
         touched_vals = None  # driver-known touched labels (bounded list)
@@ -1104,10 +1128,11 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
 
     The survivor set (batch-kept ids minus store duplicates) feeds the
     three writes (output, store token sets, store buckets). When the
-    batch fits ``dedup_clusters``' driver bounds its kept ids are a
-    driver list, so the store duplicates are collected and subtracted
-    on the driver and the store join and the writes filter on that list;
-    over the bounds the set is computed in Spark and checkpointed once.
+    batch fits ``dedup_clusters``' driver bounds and keeps at most
+    ``_ISIN_MAX`` ids, its kept ids are a driver list: the store
+    duplicates are collected and subtracted on the driver, and the store
+    join and the writes filter on that list with ``isin``. Otherwise the
+    set is computed in Spark, checkpointed once and semi-joined.
 
     State and output are written under ``batch=<id>`` subdirectories with
     overwrite, so a replayed micro-batch (foreachBatch's at-least-once
@@ -1123,8 +1148,6 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
     rows = num_perm // bands
     import os
     from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
 
     # the prefilter decision depends on the corpus token profile, not
     # the batch: decide on the first micro-batch, reuse on the rest
@@ -1155,17 +1178,19 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
         # materialized for the whole batch: each of the three writes
         # below is a single filter on the survivor-id set instead of
         # re-deriving the whole kept chain per write. On the bounded
-        # driver path the kept ids are already a driver list, so the
-        # survivor set stays on the driver (an isin filter: no
-        # checkpoint, no broadcast job); the distributed fallback
-        # checkpoints it once and semi-joins it
+        # driver path the kept ids are already a driver list, so a
+        # survivor set within the IN-list bound stays on the driver (an
+        # isin filter: no checkpoint, no broadcast job); otherwise it is
+        # checkpointed once and semi-joined
         survivors = state.get('kept_ids')
+        if survivors is not None and len(survivors) > _ISIN_MAX:
+            survivors = None
         kept_ids = (kept.select(F.col(id_col).alias('id'))
                     if survivors is None else None)
 
         def _keep(frame, col='id'):
             if survivors is not None:
-                return _keep_ids(frame, col, survivors)
+                return frame.filter(F.col(col).isin(survivors))
             return frame.join(kept_ids.withColumnRenamed('id', col), col,
                               'left_semi')
 
@@ -1215,11 +1240,17 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
         # for pinned-thread mode: the writer thread inherits this
         # thread's local properties (job description, query job group).
         # It clones them when it WRAPS, so wrap once per write: threads
-        # sharing one clone would overwrite each other's SQL execution id
+        # sharing one clone would overwrite each other's SQL execution id.
+        # Outside pinned-thread mode it returns the session itself, and
+        # the plain function runs
         def _write(df_, path):
             df_.write.mode('overwrite').parquet(path)
 
-        writes = [(inheritable_thread_target(sess)(_write), df_, path)
+        def _inheriting(fn):
+            wrap = inheritable_thread_target(sess)
+            return fn if wrap is sess else wrap(fn)
+
+        writes = [(_inheriting(_write), df_, path)
                   for df_, path in (
                       (kept, os.path.join(out_dir, f'batch={batch_id}')),
                       (tok, os.path.join(state_dir, 'toks', f'batch={batch_id}')),

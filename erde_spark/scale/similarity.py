@@ -35,8 +35,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from erde_spark.session import driver_frame
-
 
 @F.pandas_udf(T.DoubleType())
 def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -758,4 +756,4 @@ def mmr_select(candidates: DataFrame, k: int = 10, lam: float = 0.5,
                       float(score[best])))
         taken[best] = True
         max_sim = np.maximum(max_sim, m @ m[best])
-    return driver_frame(spark, picks, out_schema)
+    return spark.createDataFrame(picks, out_schema)

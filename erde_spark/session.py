@@ -127,7 +127,10 @@ def driver_frame(spark: SparkSession, rows, schema):
     Python workers on every slice, and Catalyst sizes it at
     ``Long.MaxValue``. The Arrow path plans a ``LocalTableScan`` with a
     real size: no Python on scan, and a broadcast of it needs no job.
-    (Empty ``rows`` fall back to the list path inside pyspark.)"""
+    (Empty ``rows`` fall back to the list path inside pyspark.)
+    The pandas conversion masks nulls with ``isnull``, so a float NaN
+    becomes SQL NULL: keep ``createDataFrame(<list>)`` for rows whose
+    floats may be NaN."""
     import pandas as pd
     from pyspark.sql import types as T
     if isinstance(schema, str):

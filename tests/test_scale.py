@@ -799,9 +799,12 @@ def test_streaming_neardup_driver_survivors_parity(spark, docs, tmp_path,
     """Each micro-batch's survivor set stays on the driver when the batch
     fits dedup_clusters' driver bounds (store duplicates subtracted from
     the kept-id list, writes filtered by it). Forcing the distributed
-    fallback through the bucket bound, and the driver list's join branch
-    through the IN-list bound, must write the same output and store rows
-    over two batches (the second joins the store)."""
+    fallback through the bucket bound, and the checkpointed survivor
+    semi-join through the IN-list bound (clustering still on the driver),
+    must write the same output and store rows over two batches (the
+    second joins the store). So must the writer outside pinned-thread
+    mode, where inheritable_thread_target returns its argument (the
+    session) instead of a wrapper."""
     import erde_spark.scale.dedup as D
     sample = docs.limit(80).select('doc_id', 'text')
     in_dir = str(tmp_path / 'in')
@@ -830,10 +833,13 @@ def test_streaming_neardup_driver_survivors_parity(spark, docs, tmp_path,
             assert len(list(part.glob('*.parquet'))) == 1, (table, b)
     with monkeypatch.context() as m:
         m.setattr(D, '_ISIN_MAX', 0)
-        assert run('join') == default
+        assert run('semi_join') == default
     with monkeypatch.context() as m:
         m.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
         assert run('distributed') == default
+    with monkeypatch.context() as m:
+        m.setattr(D, 'inheritable_thread_target', lambda f: f)
+        assert run('unpinned') == default
 
 
 def test_streaming_neardup_no_jvm_thread_growth(spark, docs, tmp_path):
@@ -2125,10 +2131,12 @@ def test_microbatch_merge_bounds_cap_edge_parity(spark, monkeypatch):
     counts = {}
     orig = D._microbatch_spanning_clusters
 
-    def spy(df, id_col, edges, buckets, *a, **kw):
-        counts['edges'] = edges.count()
+    def spy(df, id_col, edge_rows, buckets, *a, **kw):
+        counts['edges'] = len(edge_rows)
         counts['buckets'] = buckets.count()
-        return orig(df, id_col, edges, buckets, *a, **kw)
+        # the bucket bound is decided from docs x bands when known
+        counts['n_buckets'] = kw['n_buckets']
+        return orig(df, id_col, edge_rows, buckets, *a, **kw)
 
     monkeypatch.setattr(D, '_microbatch_spanning_clusters', spy)
     exp = sorted((r['doc_id'], r['cluster_size']) for r in
@@ -2136,6 +2144,7 @@ def test_microbatch_merge_bounds_cap_edge_parity(spark, monkeypatch):
                                   pair_strategy='spanning').collect())
     monkeypatch.undo()
     assert counts['edges'] > 1 and counts['buckets'] > 1
+    assert counts['n_buckets'] == counts['buckets']
 
     engaged = {}
 
