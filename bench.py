@@ -48,23 +48,28 @@ SF_DIR = os.environ.get('SPARK_GRAFT_SF_DIR', '/root/testdata/sf0.1')
 REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
-def _stdout_keep() -> frozenset:
-    """Every query name the latest stdout artifact in the repo
+def latest_round_queries() -> dict:
+    """Name -> seconds of the latest stdout artifact in the repo
     (``BENCH_r<N>.json``, highest N; the ``_c8`` core-count legs are not
-    round artifacts) carried: the round-over-round diff reads a name
-    missing from stdout as a dropped query, so the fit tier always
-    packs these first (biggest-first) before spending budget on anything
-    else. Empty when no artifact exists."""
+    round artifacts). Empty when no artifact exists."""
     rounds = {}
     for path in glob.glob(os.path.join(REPO_DIR, 'BENCH_r*.json')):
         m = re.fullmatch(r'BENCH_r(\d+)\.json', os.path.basename(path))
         if m:
             rounds[int(m.group(1))] = path
     if not rounds:
-        return frozenset()
+        return {}
     with open(rounds[max(rounds)]) as fh:
         parsed = json.load(fh).get('parsed') or {}
-    return frozenset(parsed.get('queries', {}))
+    return parsed.get('queries', {})
+
+
+def _stdout_keep() -> frozenset:
+    """Every query name the latest stdout artifact carried: the
+    round-over-round diff reads a name missing from stdout as a dropped
+    query, so the fit tier always packs these first (biggest-first)
+    before spending budget on anything else."""
+    return frozenset(latest_round_queries())
 
 
 def _sentinel_cpu():
@@ -96,23 +101,69 @@ def _sentinel_spark(spark):
     return time.perf_counter() - t0
 
 
-def main():
-    from erde_spark.session import get_spark
-    spark = get_spark(app_name='erde_spark_bench')
-
-    qs = entry.queries()
-    names = entry.bench_queries()
-    # warm the JVM and the Python-worker/Arrow paths once so per-query
-    # numbers measure the queries, not session startup: tpch_q1 exercises
-    # scan+shuffle codegen; the tiny pandas UDF spawns the Python worker
-    # daemon and imports pandas/numpy in every worker before timing starts
-    qs['tpch_q1_pricing'](spark, SF_DIR).count()
+def warm_up(spark, sf_dir):
+    """Warm the JVM and the Python-worker/Arrow paths once so per-query
+    numbers measure the queries, not session startup: tpch_q1 exercises
+    scan+shuffle codegen; the tiny pandas UDF spawns the Python worker
+    daemon and imports pandas/numpy in every worker before timing
+    starts."""
+    entry.queries()['tpch_q1_pricing'](spark, sf_dir).count()
     from pyspark.sql import functions as F, types as T
 
     @F.pandas_udf(T.LongType())
     def _warm(x):
         return x + 1
     spark.range(0, 1024, 1, 32).select(_warm('id')).count()
+
+
+def release(spark):
+    """Drop leftover localCheckpoint blocks and cached plans. Run after
+    EVERY timed run, not just every query: checkpoint-heavy pipelines
+    (the streaming backfill) accumulate blocks across their own repeats
+    and ran ~30-40% slower on runs 2-3 than with per-run cleanup
+    (measured round 7; the round-2/3 between-queries cleanup had the
+    same root cause). Cleanup happens OUTSIDE the timed window."""
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+    spark.catalog.clearCache()
+
+
+def last_job_id(spark) -> int:
+    """Highest job id the app status store has seen: ids are monotonic
+    +1 per job, so a before/after delta = jobs a run spawned
+    (jobsList(None) covers every job group, including
+    streaming/foreachBatch) — and a max-id delta stays correct past the
+    spark.ui.retainedJobs retention limit. Waits for the listener bus
+    first, so a job whose start event is still queued is not counted in
+    the next run."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30_000)
+    jl = sc.statusStore().jobsList(None)
+    return jl.apply(0).jobId() if jl.size() else -1
+
+
+def time_runs(spark, fn, sf_dir, n_runs, mark=last_job_id):
+    """``n_runs`` timed ``fn(spark, sf_dir).count()`` runs, each followed
+    by :func:`release`. One (wall_s, rows, mark_before, mark_after) per
+    run; ``mark(spark)`` is read outside the timed window."""
+    out = []
+    for _ in range(n_runs):
+        m0 = mark(spark)
+        t0 = time.perf_counter()
+        rows = fn(spark, sf_dir).count()
+        wall = time.perf_counter() - t0
+        out.append((wall, rows, m0, mark(spark)))
+        release(spark)
+    return out
+
+
+def main():
+    from erde_spark.session import get_spark
+    spark = get_spark(app_name='erde_spark_bench')
+
+    qs = entry.queries()
+    names = entry.bench_queries()
+    warm_up(spark, SF_DIR)
 
     n_runs = max(1, int(os.environ.get('SPARK_GRAFT_BENCH_RUNS', '3')))
     sent_cpu = [_sentinel_cpu()]
@@ -121,36 +172,9 @@ def main():
     spreads = {}
     job_counts = {}
 
-    def _n_jobs():
-        # highest job id the app status store has seen: ids are
-        # monotonic +1 per job, so a before/after delta = jobs this run
-        # spawned (jobsList(None) covers every job group, including
-        # streaming/foreachBatch) — and a max-id delta stays correct
-        # past the spark.ui.retainedJobs retention limit
-        jl = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-        return jl.apply(0).jobId() if jl.size() else -1
-
     def _time_query(name):
-        runs = []
-        jobs = []
-        for _ in range(n_runs):
-            j0 = _n_jobs()
-            t0 = time.perf_counter()
-            df = qs[name](spark, SF_DIR)
-            df.count()
-            runs.append(time.perf_counter() - t0)
-            jobs.append(_n_jobs() - j0)
-            # drop leftover localCheckpoint blocks and cached plans
-            # after EVERY run, not just every query: checkpoint-heavy
-            # pipelines (the streaming backfill) accumulate blocks
-            # across their own repeats and ran ~30-40% slower on runs
-            # 2-3 than with per-run cleanup (measured round 7; the
-            # round-2/3 between-queries cleanup had the same root
-            # cause). Cleanup happens OUTSIDE the timed window.
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-            spark.catalog.clearCache()
-        return runs, jobs
+        runs = time_runs(spark, qs[name], SF_DIR, n_runs)
+        return [w for w, _, _, _ in runs], [j1 - j0 for _, _, j0, j1 in runs]
 
     def _spready(name):
         # a warm best-of-N whose max exceeds 2x its min was measured on

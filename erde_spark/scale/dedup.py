@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from erde_spark.scale.text import char_shingles, fingerprint, tokens
-from erde_spark.session import driver_frame, spread_to_cores
+from erde_spark.session import driver_frame, phase, spread_to_cores
 
 
 def _units(text_col, shingles: int | None):
@@ -344,8 +344,7 @@ def _verify_jaccard(cand: DataFrame, sig: DataFrame, tok: DataFrame,
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text',
                       threshold: float = 0.6, num_perm: int = 96, bands: int | None = None,
-                      seed: int = 42, broadcast_docs: bool | None = None,
-                      shingles: int | None = None) -> DataFrame:
+                      seed: int = 42, shingles: int | None = None) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, verified with exact
     token-set Jaccard (output precision is exact; recall is the LSH
     collision probability, ~1-(1-t^r)^b).
@@ -376,18 +375,16 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'te
     branches, and re-running the Python signature/tokenize kernels per
     branch would quadruple the Arrow traffic — the linear precompute is
     exactly what a production dedup does with its signature table.
-    ``broadcast_docs=None`` decides adaptively (docs <= 2M broadcast,
-    map-side join, no pair shuffle; larger corpora fall back to shuffle
-    joins which AQE re-plans).
+    The doc tables are broadcast when :func:`_should_broadcast` says the
+    corpus is small enough (map-side join, no pair shuffle); larger
+    corpora fall back to shuffle joins which AQE re-plans.
     """
     if bands is None:
         bands = _threshold_bands(num_perm, threshold)
     if num_perm % bands != 0:
         raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
     rows = num_perm // bands
-    if broadcast_docs is None:
-        broadcast_docs = _should_broadcast(df)
-    small = F.broadcast if broadcast_docs else (lambda x: x)
+    small = F.broadcast if _should_broadcast(df) else (lambda x: x)
     tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
     pf = _use_sig_prefilter(tok, num_perm)
 
@@ -408,7 +405,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'te
 def minhash_spanning_edges(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text',
                            threshold: float = 0.6, num_perm: int = 96,
                            bands: int | None = None, seed: int = 42,
-                           broadcast_docs: bool | None = None,
                            shingles: int | None = None) -> DataFrame:
     """Verified near-duplicate edges sufficient to CONNECT each cluster,
     without enumerating every pair of a duplicate clique.
@@ -428,9 +424,7 @@ def minhash_spanning_edges(df: DataFrame, id_col: str = 'doc_id', text_col: str 
     if num_perm % bands != 0:
         raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
     rows = num_perm // bands
-    if broadcast_docs is None:
-        broadcast_docs = _should_broadcast(df)
-    small = F.broadcast if broadcast_docs else (lambda x: x)
+    small = F.broadcast if _should_broadcast(df) else (lambda x: x)
     tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
     pf = _use_sig_prefilter(tok, num_perm)
     buckets = _lsh_buckets(sig, bands, rows)
@@ -577,7 +571,7 @@ def _union_find_min(edges: list[tuple]) -> dict:
 #: micro-batch driver path bound on collected (id, band, bh) rows —
 #: docs x bands; 150k rows ~= a 12.5k-doc batch at 12 bands. Over it,
 #: the distributed merge loop runs instead. MEASURED at the edges
-#: (tools/measure_merge_bounds.py, round 8): the driver path wins
+#: (round 8's forced-fallback size sweep, SCALE.md): the driver path wins
 #: below ~12k docs on both dup-dense and all-unique corpora (2.3-4.1 s
 #: vs 3.1-4.8 s distributed) but INVERTS well before the old 500k cap
 #: (at 42k docs / 500k bucket rows: 11.8 s driver vs 5.0 s distributed,
@@ -590,8 +584,13 @@ _MICROBATCH_CAND_CAP = 250_000
 
 #: driver-known id lists up to this size filter with a literal ``isin``
 #: (an InSet that stays in codegen and needs no broadcast job); larger
-#: sets take a join — a huge IN-list costs more Catalyst analysis time
-#: than the join
+#: sets take a join. A long list costs on the Python side, not in
+#: Catalyst: pyspark builds one py4j literal per id, and building
+#: ``F.col('id').isin(ids)`` took 0.027 / 0.139 / 0.427 / 0.875 s at
+#: 50 / 300 / 1,000 / 3,000 ids, while a ``driver_frame`` of the same ids
+#: took 0.012-0.017 s at every size (Spark 4.1.2, 4 vCPU, one process).
+#: The join runs one more job, so the crossover sits well below this
+#: bound; it has not been measured end to end yet
 _ISIN_MAX = 5000
 
 
@@ -775,17 +774,16 @@ def _components(base: DataFrame, ids: DataFrame, max_iterations: int = 12,
     # smaller than 1 could leave the truncated decimal sum unchanged and
     # terminate propagation early; float/decimal ids use the join-compare
     numeric = isinstance(itype, T.IntegralType)
-    # On the numeric path each round's checkpoint is LAZY and the
-    # convergence sum right after it is what materializes the frame —
-    # the sum's partial-aggregate stage scans every partition, so the
-    # checkpoint completes in the SAME job instead of paying a separate
-    # materialization action per round (one job saved per round + one
-    # at init; r13, guide §5 driver-side actions). The non-numeric path
-    # keeps eager checkpoints: its change-probe is a limit(1) that can
+    # Each round's checkpoint is LAZY and the convergence test right
+    # after it is what materializes the frame: the label sum, or on the
+    # non-numeric path a full count of changed labels, scans every
+    # partition, so the checkpoint completes in the SAME job instead of
+    # paying a separate materialization action per round (guide §5
+    # driver-side actions). The count must be full: a limit(1) probe can
     # short-circuit and leave a lazy checkpoint partially computed.
     labels = (edges.select(F.col('id_a').alias('id')).distinct()
               .select('id', F.col('id').alias('component'))
-              .localCheckpoint(eager=not numeric))
+              .localCheckpoint(eager=False))
     # decimal sum: long-id sums overflow int64 on large corpora
     label_sum = (lambda df_: df_.agg(
         F.sum(F.col('component').cast(T.DecimalType(38, 0)))).first()[0])
@@ -802,14 +800,14 @@ def _components(base: DataFrame, ids: DataFrame, max_iterations: int = 12,
         jumped = (stepped.join(ptr, stepped['component'] == ptr['pid'], 'left')
                   .select('id', F.least('component', F.coalesce('pcomp', 'component'))
                           .alias('component'))
-                  .localCheckpoint(eager=not numeric))
+                  .localCheckpoint(eager=False))
         if numeric:
             cur_sum = label_sum(jumped)
             changed = cur_sum != prev_sum
             prev_sum = cur_sum
         else:
             changed = (jumped.join(labels.withColumnRenamed('component', 'old'), 'id')
-                       .filter(F.col('component') != F.col('old')).limit(1).count()) > 0
+                       .filter(F.col('component') != F.col('old')).count()) > 0
         labels = jumped
         if not changed:
             break
@@ -881,204 +879,216 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
             raise ValueError(f'num_perm={num_perm} must be divisible by bands={bands}')
         rows = num_perm // bands
         seed = lsh_kw.get('seed', 42)
-        broadcast_docs = lsh_kw.get('broadcast_docs')
-        if broadcast_docs is None:
-            broadcast_docs = _should_broadcast(df)
-        small = F.broadcast if broadcast_docs else (lambda x: x)
-        # buckets stay a lazy explode over the checkpointed base
-        # (recompute is narrow and tiny vs a job)
-        tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
-        n_buckets, pf = None, prefilter
-        if pf is None:
-            # the prefilter probe's agg also counts documents, and every
-            # document explodes into exactly ``bands`` bucket rows: the
-            # bucket bound is then decided without collecting buckets
-            mean_sz, n_docs = _token_profile(tok)
-            pf = _use_sig_prefilter(tok, num_perm, mean_sz)
-            n_buckets = n_docs * bands
-        buckets = _lsh_buckets(sig, bands, rows)
-        if _state_out is not None:
-            # hand the already-materialized per-document state to callers
-            # that need it downstream (the streaming signature-store
-            # writer) so they don't re-run the tokenize/minhash/bucket
-            # pass over the kept subset
-            _state_out.update(tok=tok, sig=sig, buckets=buckets,
-                              bands=bands, rows=rows, prefilter=pf)
-        edges = _verify_jaccard(_bucket_star_edges(buckets), sig, tok,
-                                threshold, num_perm, small, pf) \
-            .select('id_a', 'id_b').localCheckpoint(eager=True)
-        # one bounded edge probe serves both paths: the driver path's
-        # edge list and the connected-components fast path of the fallback
-        edge_rows = edges.limit(_MERGE_COLLECT_CAP + 1).collect()
-        out = _microbatch_spanning_clusters(
-            df, id_col, edge_rows, buckets, sig, tok, threshold, num_perm,
-            small, pf, merge_rounds, n_buckets=n_buckets,
-            state_out=_state_out)
+        small = F.broadcast if _should_broadcast(df) else (lambda x: x)
+        with phase('dedup_clusters: edges'):
+            # buckets stay a lazy explode over the checkpointed base
+            # (recompute is narrow and tiny vs a job)
+            tok, sig = _doc_state(df, id_col, text_col, shingles, num_perm, seed)
+            n_buckets, pf = None, prefilter
+            if pf is None:
+                # the prefilter probe's agg also counts documents, and every
+                # document explodes into exactly ``bands`` bucket rows: the
+                # bucket bound is then decided without collecting buckets
+                mean_sz, n_docs = _token_profile(tok)
+                pf = _use_sig_prefilter(tok, num_perm, mean_sz)
+                n_buckets = n_docs * bands
+            buckets = _lsh_buckets(sig, bands, rows)
+            if _state_out is not None:
+                # hand the already-materialized per-document state to callers
+                # that need it downstream (the streaming signature-store
+                # writer) so they don't re-run the tokenize/minhash/bucket
+                # pass over the kept subset
+                _state_out.update(tok=tok, sig=sig, buckets=buckets,
+                                  bands=bands, rows=rows, prefilter=pf)
+            edges = _verify_jaccard(_bucket_star_edges(buckets), sig, tok,
+                                    threshold, num_perm, small, pf) \
+                .select('id_a', 'id_b').localCheckpoint(eager=True)
+            # one bounded edge probe serves both paths: the driver path's
+            # edge list and the connected-components fast path of the fallback
+            edge_rows = edges.limit(_MERGE_COLLECT_CAP + 1).collect()
+        with phase('dedup_clusters: driver rounds'):
+            out = _microbatch_spanning_clusters(
+                df, id_col, edge_rows, buckets, sig, tok, threshold, num_perm,
+                small, pf, merge_rounds, n_buckets=n_buckets,
+                state_out=_state_out)
         if out is not None:
             return out
-        comp = _components(edges, df.select(id_col), probe=edge_rows) \
-            .localCheckpoint(eager=True)
-        touched = None  # round 1 checks all rep pairs; later rounds prune
-        touched_vals = None  # driver-known touched labels (bounded list)
-        for _ in range(merge_rounds):
-            # representatives (= component labels) back into their buckets;
-            # ALL pairs of representatives sharing a bucket are verified
-            # (star edges would miss pairs whose shared buckets all have a
-            # third, non-matching rep as their min). Reps per bucket are
-            # few — members that verified already merged — so the
-            # per-bucket product is bounded.
-            rep_buckets = (buckets.join(comp, 'id')
-                           .select(F.col('component').alias('rid'), 'band', 'bh')
-                           .distinct())
-            if touched is not None:
-                # rounds after the first only need pairs involving a rep
-                # whose component changed last round: every pair of
-                # UNCHANGED reps sharing a bucket was already verified
-                # (and refuted) by the previous all-pairs round — and an
-                # unchanged rep's bucket set is itself unchanged. Restrict
-                # to buckets holding a touched rep BEFORE the quadratic
-                # pair step, then to pairs involving a touched rep.
-                if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
-                    # small driver-known list: a literal isin stays in
-                    # codegen and beats any join
-                    hot = (rep_buckets.filter(F.col('rid').isin(touched_vals))
-                           .select('band', 'bh').distinct())
-                else:
-                    # larger sets: broadcast-hash semi join (explicit hint
-                    # when the set is driver-bounded by the collect cap)
-                    tb = touched.withColumnRenamed('t', 'rid')
-                    if touched_vals is not None:
-                        tb = F.broadcast(tb)
-                    hot = (rep_buckets.join(tb, 'rid', 'left_semi')
-                           .select('band', 'bh').distinct())
-                rep_buckets = rep_buckets.join(hot, ['band', 'bh'], 'left_semi')
-            rep_cand = None
-            if touched_vals is not None:
-                # rounds after the first with a DRIVER-KNOWN touched set:
-                # the hot-restricted rep-bucket table is bounded (touched
-                # reps x bands buckets, whole buckets kept), so build the
-                # candidate pairs in memory — same max_bucket=64 split,
-                # star fallback and touched filter as the distributed
-                # _bucket_all_pairs branch below — and spend Spark
-                # actions only on the exact-Jaccard verify (r13: replaces
-                # the rep_buckets checkpoint + 4-branch pair chain, ~8
-                # AQE stage jobs per round; zero candidates = zero jobs)
-                probe = rep_buckets.limit(
-                    _MICROBATCH_BUCKET_CAP + 1).collect()
-                if len(probe) <= _MICROBATCH_BUCKET_CAP:
-                    bmap: dict = {}
-                    for r in probe:
-                        bmap.setdefault((r['band'], r['bh']),
-                                        set()).add(r['rid'])
-                    cand = _rep_pair_candidates(bmap, set(touched_vals))
-                    if cand is not None:
-                        if not cand:
-                            break
-                        ctype0 = comp.schema['component'].dataType
-                        rep_cand = driver_frame(
-                            comp.sparkSession, sorted(cand),
-                            T.StructType([T.StructField('id_a', ctype0),
-                                          T.StructField('id_b', ctype0)]))
-                        # falls through to the shared verify/apply below;
-                        # the touched isin re-filter there is a no-op on
-                        # this already-filtered local relation
-            if rep_cand is None:
-                # materialize: the bucket-size split inside
-                # _bucket_all_pairs references this plan four times —
-                # uncheckpointed, Catalyst re-analyzes the join+distinct
-                # per branch per round (lazy variants measured 15-35%
-                # SLOWER on micro-batches, ABBA round 7 — the
-                # recompute+re-analysis exceeds the job cost)
-                rep_buckets = rep_buckets.localCheckpoint(eager=True)
-                rep_cand = _bucket_all_pairs(rep_buckets, member_col='rid')
-            if touched is not None:
-                if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
-                    rep_cand = rep_cand.filter(
-                        F.col('id_a').isin(touched_vals) |
-                        F.col('id_b').isin(touched_vals))
-                else:
-                    # one linear pass: flag both endpoints via two hash
-                    # left joins and filter the OR — no union, no pair
-                    # distinct, no double-reference of the pair DAG
-                    # (previously two semi-joins + distinct, the source
-                    # of the superlinear shuffle term in SCALE.md)
-                    bhint = (F.broadcast if touched_vals is not None
-                             else (lambda x: x))
-                    ta = touched.select(F.col('t').alias('id_a'),
-                                        F.lit(True).alias('_ta'))
-                    tb2 = touched.select(F.col('t').alias('id_b'),
-                                         F.lit(True).alias('_tb'))
-                    rep_cand = (rep_cand
-                                .join(bhint(ta), 'id_a', 'left')
-                                .join(bhint(tb2), 'id_b', 'left')
-                                .filter(F.col('_ta').isNotNull() |
-                                        F.col('_tb').isNotNull())
-                                .drop('_ta', '_tb'))
-            merges = _verify_jaccard(rep_cand, sig, tok, threshold,
-                                     num_perm, small, pf) \
-                .select('id_a', 'id_b')
-            # probe-collect directly: in the common (bounded) path the
-            # merge edges are consumed on the driver and the frame is
-            # never re-read, so a checkpoint would be a wasted job; the
-            # degenerate over-cap path re-materializes below
-            edge_rows = merges.limit(_MERGE_COLLECT_CAP + 1).collect()
-            if not edge_rows:
-                break
-            if len(edge_rows) <= _MERGE_COLLECT_CAP:
-                # merge edges are representative REPAIRS — tiny relative
-                # to the corpus by construction (bounded by rep count).
-                # Union-find on the driver + one broadcast-mapped join
-                # replaces a whole distributed CC round (~10 jobs) with
-                # one; the distributed path below remains for the
-                # degenerate huge-merge case.
-                remap = _union_find_min(
-                    [(r['id_a'], r['id_b']) for r in edge_rows])
-                if not remap:
-                    break
-                ctype = comp.schema['component'].dataType
-                map_df = driver_frame(
-                    comp.sparkSession, list(remap.items()),
-                    T.StructType([T.StructField('component', ctype),
-                                  T.StructField('__super', ctype)]))
-                t_vals = sorted({v for kv in remap.items() for v in kv})
-                touched = driver_frame(
-                    comp.sparkSession, [(v,) for v in t_vals],
-                    T.StructType([T.StructField('t', ctype)]))
-                # driver-known: the use sites pick isin (small lists,
-                # stays in codegen) or an explicit broadcast join
-                # (larger — a huge IN-list would dwarf the join in
-                # Catalyst analysis time)
-                touched_vals = t_vals
-                comp = (comp.join(F.broadcast(map_df), 'component', 'left')
-                        .select('id', F.coalesce('__super', 'component')
-                                .alias('component'))
-                        .localCheckpoint(eager=True))
-                continue
-            merges = merges.localCheckpoint(eager=True)
-            rep_map = (connected_components(
-                merges, comp.select(F.col('component')).distinct(),
-                collect_cap=0)  # known > cap: skip the probe
-                .withColumnRenamed('component', 'supercomp')
-                .withColumnRenamed('id', 'component'))
-            # reps whose label changed (absorbed into another component)
-            # plus the absorbing labels themselves
-            touched = (rep_map
-                       .filter(F.col('component') != F.col('supercomp'))
-                       .select(F.col('component').alias('t'))
-                       .unionByName(rep_map
-                                    .filter(F.col('component') != F.col('supercomp'))
-                                    .select(F.col('supercomp').alias('t')))
-                       .distinct().localCheckpoint(eager=True))
-            touched_vals = None
-            comp = (comp.join(rep_map, 'component')
-                    .select('id', F.col('supercomp').alias('component'))
-                    .localCheckpoint(eager=True))
+        with phase('dedup_clusters: fallback'):
+            comp = _components(edges, df.select(id_col), probe=edge_rows) \
+                .localCheckpoint(eager=True)
+            comp = _merge_reps(comp, buckets, sig, tok, threshold, num_perm,
+                               small, pf, merge_rounds)
     else:
         raise ValueError(f'unknown pair_strategy {pair_strategy!r}')
     reps = comp.groupBy('component').agg(F.min('id').alias('keep_id'),
                                          F.count(F.lit(1)).alias('cluster_size'))
     return (df.join(reps.select(F.col('keep_id').alias(id_col), 'cluster_size'),
                     id_col, 'inner'))
+
+
+def _merge_reps(comp: DataFrame, buckets: DataFrame, sig: DataFrame,
+                tok: DataFrame, threshold: float, num_perm: int, small,
+                pf: bool, merge_rounds: int) -> DataFrame:
+    """The distributed representative-merge pass of :func:`dedup_clusters`
+    over component labels ``comp`` (id, component): up to
+    ``merge_rounds`` rounds of verifying rep pairs that share an LSH
+    bucket and merging their components. Returns the merged labels."""
+    touched = None  # round 1 checks all rep pairs; later rounds prune
+    touched_vals = None  # driver-known touched labels (bounded list)
+    for _ in range(merge_rounds):
+        # representatives (= component labels) back into their buckets;
+        # ALL pairs of representatives sharing a bucket are verified
+        # (star edges would miss pairs whose shared buckets all have a
+        # third, non-matching rep as their min). Reps per bucket are
+        # few — members that verified already merged — so the
+        # per-bucket product is bounded.
+        rep_buckets = (buckets.join(comp, 'id')
+                       .select(F.col('component').alias('rid'), 'band', 'bh')
+                       .distinct())
+        if touched is not None:
+            # rounds after the first only need pairs involving a rep
+            # whose component changed last round: every pair of
+            # UNCHANGED reps sharing a bucket was already verified
+            # (and refuted) by the previous all-pairs round — and an
+            # unchanged rep's bucket set is itself unchanged. Restrict
+            # to buckets holding a touched rep BEFORE the quadratic
+            # pair step, then to pairs involving a touched rep.
+            if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
+                # small driver-known list: a literal isin stays in
+                # codegen and beats any join
+                hot = (rep_buckets.filter(F.col('rid').isin(touched_vals))
+                       .select('band', 'bh').distinct())
+            else:
+                # larger sets: broadcast-hash semi join (explicit hint
+                # when the set is driver-bounded by the collect cap)
+                tb = touched.withColumnRenamed('t', 'rid')
+                if touched_vals is not None:
+                    tb = F.broadcast(tb)
+                hot = (rep_buckets.join(tb, 'rid', 'left_semi')
+                       .select('band', 'bh').distinct())
+            rep_buckets = rep_buckets.join(hot, ['band', 'bh'], 'left_semi')
+        rep_cand = None
+        if touched_vals is not None:
+            # rounds after the first with a DRIVER-KNOWN touched set:
+            # the hot-restricted rep-bucket table is bounded (touched
+            # reps x bands buckets, whole buckets kept), so build the
+            # candidate pairs in memory — same max_bucket=64 split,
+            # star fallback and touched filter as the distributed
+            # _bucket_all_pairs branch below — and spend Spark
+            # actions only on the exact-Jaccard verify (r13: replaces
+            # the rep_buckets checkpoint + 4-branch pair chain, ~8
+            # AQE stage jobs per round; zero candidates = zero jobs)
+            probe = rep_buckets.limit(
+                _MICROBATCH_BUCKET_CAP + 1).collect()
+            if len(probe) <= _MICROBATCH_BUCKET_CAP:
+                bmap: dict = {}
+                for r in probe:
+                    bmap.setdefault((r['band'], r['bh']),
+                                    set()).add(r['rid'])
+                cand = _rep_pair_candidates(bmap, set(touched_vals))
+                if cand is not None:
+                    if not cand:
+                        break
+                    ctype0 = comp.schema['component'].dataType
+                    rep_cand = driver_frame(
+                        comp.sparkSession, sorted(cand),
+                        T.StructType([T.StructField('id_a', ctype0),
+                                      T.StructField('id_b', ctype0)]))
+                    # falls through to the shared verify/apply below;
+                    # the touched isin re-filter there is a no-op on
+                    # this already-filtered local relation
+        if rep_cand is None:
+            # materialize: the bucket-size split inside
+            # _bucket_all_pairs references this plan four times —
+            # uncheckpointed, Catalyst re-analyzes the join+distinct
+            # per branch per round (lazy variants measured 15-35%
+            # SLOWER on micro-batches, ABBA round 7 — the
+            # recompute+re-analysis exceeds the job cost)
+            rep_buckets = rep_buckets.localCheckpoint(eager=True)
+            rep_cand = _bucket_all_pairs(rep_buckets, member_col='rid')
+        if touched is not None:
+            if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
+                rep_cand = rep_cand.filter(
+                    F.col('id_a').isin(touched_vals) |
+                    F.col('id_b').isin(touched_vals))
+            else:
+                # one linear pass: flag both endpoints via two hash
+                # left joins and filter the OR — no union, no pair
+                # distinct, no double-reference of the pair DAG
+                # (previously two semi-joins + distinct, the source
+                # of the superlinear shuffle term in SCALE.md)
+                bhint = (F.broadcast if touched_vals is not None
+                         else (lambda x: x))
+                ta = touched.select(F.col('t').alias('id_a'),
+                                    F.lit(True).alias('_ta'))
+                tb2 = touched.select(F.col('t').alias('id_b'),
+                                     F.lit(True).alias('_tb'))
+                rep_cand = (rep_cand
+                            .join(bhint(ta), 'id_a', 'left')
+                            .join(bhint(tb2), 'id_b', 'left')
+                            .filter(F.col('_ta').isNotNull() |
+                                    F.col('_tb').isNotNull())
+                            .drop('_ta', '_tb'))
+        merges = _verify_jaccard(rep_cand, sig, tok, threshold,
+                                 num_perm, small, pf) \
+            .select('id_a', 'id_b')
+        # probe-collect directly: in the common (bounded) path the
+        # merge edges are consumed on the driver and the frame is
+        # never re-read, so a checkpoint would be a wasted job; the
+        # degenerate over-cap path re-materializes below
+        edge_rows = merges.limit(_MERGE_COLLECT_CAP + 1).collect()
+        if not edge_rows:
+            break
+        if len(edge_rows) <= _MERGE_COLLECT_CAP:
+            # merge edges are representative REPAIRS — tiny relative
+            # to the corpus by construction (bounded by rep count).
+            # Union-find on the driver + one broadcast-mapped join
+            # replaces a whole distributed CC round (~10 jobs) with
+            # one; the distributed path below remains for the
+            # degenerate huge-merge case.
+            remap = _union_find_min(
+                [(r['id_a'], r['id_b']) for r in edge_rows])
+            if not remap:
+                break
+            ctype = comp.schema['component'].dataType
+            map_df = driver_frame(
+                comp.sparkSession, list(remap.items()),
+                T.StructType([T.StructField('component', ctype),
+                              T.StructField('__super', ctype)]))
+            t_vals = sorted({v for kv in remap.items() for v in kv})
+            touched = driver_frame(
+                comp.sparkSession, [(v,) for v in t_vals],
+                T.StructType([T.StructField('t', ctype)]))
+            # driver-known: the use sites pick isin (small lists,
+            # stays in codegen) or an explicit broadcast join
+            # (larger — a huge IN-list would dwarf the join in
+            # Catalyst analysis time)
+            touched_vals = t_vals
+            comp = (comp.join(F.broadcast(map_df), 'component', 'left')
+                    .select('id', F.coalesce('__super', 'component')
+                            .alias('component'))
+                    .localCheckpoint(eager=True))
+            continue
+        merges = merges.localCheckpoint(eager=True)
+        rep_map = (connected_components(
+            merges, comp.select(F.col('component')).distinct(),
+            collect_cap=0)  # known > cap: skip the probe
+            .withColumnRenamed('component', 'supercomp')
+            .withColumnRenamed('id', 'component'))
+        # reps whose label changed (absorbed into another component)
+        # plus the absorbing labels themselves
+        touched = (rep_map
+                   .filter(F.col('component') != F.col('supercomp'))
+                   .select(F.col('component').alias('t'))
+                   .unionByName(rep_map
+                                .filter(F.col('component') != F.col('supercomp'))
+                                .select(F.col('supercomp').alias('t')))
+                   .distinct().localCheckpoint(eager=True))
+        touched_vals = None
+        comp = (comp.join(rep_map, 'component')
+                .select('id', F.col('supercomp').alias('component'))
+                .localCheckpoint(eager=True))
+    return comp
 
 
 # ---------------------------------------------------------------- streaming
@@ -1158,21 +1168,17 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
         if batch_df.isEmpty():
             return
         sess = batch_df.sparkSession
-        sc = sess.sparkContext
-
-        def _label(step: str):
-            # job labels per optimization-guide §1.5 so the UI/status
-            # store attributes per-batch time to pipeline phases
-            sc.setJobDescription(f'neardup b{batch_id}: {step}')
-
-        _label('batch dedup')
+        # job labels per optimization-guide §1.5 so the status store
+        # attributes per-batch time to pipeline phases
+        label = f'neardup b{batch_id}'
         state: dict = {}
-        kept = dedup_clusters(batch_df, id_col, text_col, threshold,
-                              pair_strategy='spanning', num_perm=num_perm,
-                              bands=bands, seed=seed, shingles=shingles,
-                              _state_out=state,
-                              prefilter=pf_memo.get('pf')
-                              ).drop('cluster_size')
+        with phase(f'{label}: batch dedup'):
+            kept = dedup_clusters(batch_df, id_col, text_col, threshold,
+                                  pair_strategy='spanning', num_perm=num_perm,
+                                  bands=bands, seed=seed, shingles=shingles,
+                                  _state_out=state,
+                                  prefilter=pf_memo.get('pf')
+                                  ).drop('cluster_size')
         pf_memo['pf'] = state['prefilter']
         # reuse the tokenize/minhash/bucket state dedup_clusters already
         # materialized for the whole batch: each of the three writes
@@ -1194,35 +1200,36 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
             return frame.join(kept_ids.withColumnRenamed('id', col), col,
                               'left_semi')
 
-        _label('store join')
-        if os.path.isdir(os.path.join(state_dir, 'buckets')):
-            sb = sess.read.parquet(os.path.join(state_dir, 'buckets')).drop('batch')
-            st = sess.read.parquet(os.path.join(state_dir, 'toks')).drop('batch')
-            bk_kept = _keep(state['buckets'])
-            tok_kept = _keep(state['tok'])
-            cand = (bk_kept.join(sb.withColumnRenamed('id', 'sid'), ['band', 'bh'])
-                    .filter(F.col('id') != F.col('sid'))
-                    .select(F.col('id').alias('id_a'), F.col('sid').alias('id_b'))
-                    .distinct())
-            ta = tok_kept.select(F.col('id').alias('id_a'), F.col('toks').alias('toks_a'))
-            tb = st.select(F.col('id').alias('id_b'), F.col('toks').alias('toks_b'))
-            dup_ids = (cand.join(ta, 'id_a').join(tb, 'id_b')
-                       .withColumn('inter',
-                                   F.size(F.array_intersect('toks_a', 'toks_b')))
-                       .withColumn('j', F.col('inter') /
-                                   (F.size('toks_a') + F.size('toks_b')
-                                    - F.col('inter')))
-                       .filter(F.col('j') >= threshold)
-                       .select(F.col('id_a').alias('id')).distinct())
+        with phase(f'{label}: store join'):
+            if os.path.isdir(os.path.join(state_dir, 'buckets')):
+                sb = sess.read.parquet(os.path.join(state_dir, 'buckets')).drop('batch')
+                st = sess.read.parquet(os.path.join(state_dir, 'toks')).drop('batch')
+                bk_kept = _keep(state['buckets'])
+                tok_kept = _keep(state['tok'])
+                cand = (bk_kept.join(sb.withColumnRenamed('id', 'sid'), ['band', 'bh'])
+                        .filter(F.col('id') != F.col('sid'))
+                        .select(F.col('id').alias('id_a'), F.col('sid').alias('id_b'))
+                        .distinct())
+                ta = tok_kept.select(F.col('id').alias('id_a'),
+                                     F.col('toks').alias('toks_a'))
+                tb = st.select(F.col('id').alias('id_b'), F.col('toks').alias('toks_b'))
+                dup_ids = (cand.join(ta, 'id_a').join(tb, 'id_b')
+                           .withColumn('inter',
+                                       F.size(F.array_intersect('toks_a', 'toks_b')))
+                           .withColumn('j', F.col('inter') /
+                                       (F.size('toks_a') + F.size('toks_b')
+                                        - F.col('inter')))
+                           .filter(F.col('j') >= threshold)
+                           .select(F.col('id_a').alias('id')).distinct())
+                if survivors is None:
+                    kept_ids = kept_ids.join(dup_ids, 'id', 'left_anti')
+                else:
+                    # store duplicates are a subset of the batch's kept ids:
+                    # collect them (bounded) and subtract on the driver
+                    dups = {r['id'] for r in dup_ids.collect()}
+                    survivors = [i for i in survivors if i not in dups]
             if survivors is None:
-                kept_ids = kept_ids.join(dup_ids, 'id', 'left_anti')
-            else:
-                # store duplicates are a subset of the batch's kept ids:
-                # collect them (bounded) and subtract on the driver
-                dups = {r['id'] for r in dup_ids.collect()}
-                survivors = [i for i in survivors if i not in dups]
-        if survivors is None:
-            kept_ids = kept_ids.localCheckpoint(eager=True)
+                kept_ids = kept_ids.localCheckpoint(eager=True)
         kept = _keep(batch_df, id_col)
         tok = _keep(state['tok'])
         bk = _keep(state['buckets'])
@@ -1232,7 +1239,6 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
             # store, so its file count is read cost), as the shuffled
             # semi-join of the fallback leaves it after AQE coalescing
             tok, bk = tok.coalesce(1), bk.coalesce(1)
-        _label('writes')
         # three independent sinks (different directories, disjoint
         # plans off materialized inputs): overlap them so the tail of
         # one write back-fills cores freed by another (guide §2.6).
@@ -1250,15 +1256,16 @@ def streaming_neardup_dedup(spark, in_dir: str, schema, out_dir: str,
             wrap = inheritable_thread_target(sess)
             return fn if wrap is sess else wrap(fn)
 
-        writes = [(_inheriting(_write), df_, path)
-                  for df_, path in (
-                      (kept, os.path.join(out_dir, f'batch={batch_id}')),
-                      (tok, os.path.join(state_dir, 'toks', f'batch={batch_id}')),
-                      (bk, os.path.join(state_dir, 'buckets', f'batch={batch_id}')))]
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [pool.submit(*w) for w in writes]:
-                f.result()
-        sc.setJobDescription(None)
+        with phase(f'{label}: writes'):
+            # wrapped inside the phase, so the writer threads inherit it
+            writes = [(_inheriting(_write), df_, path)
+                      for df_, path in (
+                          (kept, os.path.join(out_dir, f'batch={batch_id}')),
+                          (tok, os.path.join(state_dir, 'toks', f'batch={batch_id}')),
+                          (bk, os.path.join(state_dir, 'buckets', f'batch={batch_id}')))]
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                for f in [pool.submit(*w) for w in writes]:
+                    f.result()
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:

@@ -8,8 +8,16 @@ local-mode-specific except the master default.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+
+def _default_driver_mem() -> str:
+    """min(48g, half the host's physical memory), in MiB."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys // 2 // (1 << 20))}m"
 
 
 def get_spark(app_name: str = "erde_spark", master: str | None = None,
@@ -27,11 +35,11 @@ def get_spark(app_name: str = "erde_spark", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # off by default (bench noise); tools that read the /api/v1 stage
-        # metrics (tools/scale_check.py) opt in via the env var
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
+        # job, stage and SQL metrics stay readable from the status stores
+        # with the UI off (tools/profile.py reads them there)
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -41,6 +49,24 @@ def get_spark(app_name: str = "erde_spark", master: str | None = None,
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def phase(name: str):
+    """Label every Spark job the body launches with ``name`` (the job
+    description the status store and ``tools/profile.py`` report), nested
+    under the enclosing phase's label if there is one. The previous
+    description is restored even when the body raises."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        yield
+        return
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"{prev} / {name}" if prev else name)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
 
 
 def _bytes_conf(v: str) -> int:
@@ -126,7 +152,9 @@ def driver_frame(spark: SparkSession, rows, schema):
     and a pickled PythonRDD, so every job that scans the frame starts
     Python workers on every slice, and Catalyst sizes it at
     ``Long.MaxValue``. The Arrow path plans a ``LocalTableScan`` with a
-    real size: no Python on scan, and a broadcast of it needs no job.
+    real size, so no Python runs on scan. Joining it is not free: a
+    semi-join of a 3,000-row frame ran 3 Spark jobs (the broadcast
+    exchange among them), against 2 for the same filter as an ``isin``.
     (Empty ``rows`` fall back to the list path inside pyspark.)
     The pandas conversion masks nulls with ``isnull``, so a float NaN
     becomes SQL NULL: keep ``createDataFrame(<list>)`` for rows whose

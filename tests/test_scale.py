@@ -883,6 +883,56 @@ def test_streaming_neardup_no_jvm_thread_growth(spark, docs, tmp_path):
     assert after6 <= after2 + 2, (after2, after6)
 
 
+def test_phase_restores_description_after_raise(spark):
+    """session.phase labels the jobs of its body, nests under an enclosing
+    phase, and puts the previous description back even when the body
+    raises (a failed micro-batch must not label every later job)."""
+    from erde_spark.session import phase
+    sc = spark.sparkContext
+    sc.setJobDescription('outer')
+    try:
+        with pytest.raises(RuntimeError):
+            with phase('step'):
+                assert sc.getLocalProperty('spark.job.description') \
+                    == 'outer / step'
+                raise RuntimeError('batch failed')
+        assert sc.getLocalProperty('spark.job.description') == 'outer'
+    finally:
+        sc.setJobDescription(None)
+    with phase('alone'):
+        assert sc.getLocalProperty('spark.job.description') == 'alone'
+    assert sc.getLocalProperty('spark.job.description') is None
+
+
+def test_profile_record(spark):
+    """tools/profile.py's record: the keys of a batch query's and a
+    streaming pipeline's record, per-run job counts from the same counter
+    bench.py reads, and one progress entry per micro-batch (the backfill
+    stages its documents as 2 one-file micro-batches)."""
+    import importlib.util
+    import os
+    spec = importlib.util.spec_from_file_location(
+        'erde_profile', os.path.join(os.path.dirname(__file__), '..',
+                                     'tools', 'profile.py'))
+    prof = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(prof)
+    keys = {'name', 'sf', 'rows', 'runs', 'jobs', 'job_union_s',
+            'driver_gap_s', 'top_jobs', 'stages', 'python', 'jvm', 'skew',
+            'streaming'}
+    q1 = prof.record(spark, 'tpch_q1_pricing', SF, runs=2)
+    assert set(q1) == keys
+    assert len(q1['runs']) == len(q1['jobs']) == len(q1['job_union_s']) == 2
+    assert all(n >= 1 for n in q1['jobs']) and q1['streaming'] == []
+    assert q1['jvm']['scan_b'] > 0 and q1['stages']['stages'] >= 1
+    bf = prof.record(spark, 'streaming_neardup_backfill', SF, runs=1)
+    assert set(bf) == keys
+    assert [p['batch'] for p in bf['streaming']] == [0, 1]
+    assert all(p['rows'] > 0 and p['durations_ms']['triggerExecution'] > 0
+               for p in bf['streaming'])
+    assert bf['jvm']['files_written'] >= 6  # 3 sinks x 2 batches
+    assert any('neardup b' in j[2] for j in bf['top_jobs'])
+
+
 # ---------------------------------------------------------------- clustering
 
 def test_connected_components_matches_union_find(spark):
@@ -929,6 +979,38 @@ def test_connected_components_matches_union_find(spark):
                for r in connected_components(pairs, ids,
                                              collect_cap=cap).collect()}
         assert got == exp, f'probed cap={cap}'
+    # string ids take the count-of-changed-labels convergence test
+    # instead of the label sum; zero-padded, so their order is the
+    # integers' and the oracle labels carry over
+    spairs = spark.createDataFrame([(f'{a:03d}', f'{b:03d}')
+                                    for a, b in sorted(edges)],
+                                   'id_a string, id_b string')
+    sids = spark.createDataFrame([(f'{i:03d}',) for i in range(120)],
+                                 'id string')
+    sexp = {f'{i:03d}': f'{c:03d}' for i, c in exp.items()}
+    for cap in (None, 0):
+        got = {r['id']: r['component']
+               for r in connected_components(spairs, sids,
+                                             collect_cap=cap).collect()}
+        assert got == sexp, f'string ids, collect_cap={cap}'
+
+    from bench import last_job_id
+
+    def round_jobs(p, i):
+        # jobs of one distributed round: 2 rounds minus 1 round
+        n = []
+        for rounds in (1, 2):
+            j0 = last_job_id(spark)
+            connected_components(p, i, max_iterations=rounds,
+                                 collect_cap=0).count()
+            n.append(last_job_id(spark) - j0)
+        return n[1] - n[0]
+
+    # both id kinds materialize each round's lazy checkpoint inside the
+    # convergence test; the string test's extra join costs at most 3 more
+    # jobs per round (9 and 12 on Spark 4.1.2, local[4]; the eager
+    # checkpoint plus a limit(1) probe used to cost 13)
+    assert round_jobs(spairs, sids) <= round_jobs(pairs, ids) + 3
 
 
 def test_connected_components_fractional_ids(spark):

@@ -13,20 +13,24 @@ Usage:
         -> orchestrates the counterbalanced sequence, prints a summary
 """
 
+import importlib.util
 import json
 import os
 import subprocess
 import sys
-import time
+
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _sentinel_cpu():
-    import hashlib
-    t0 = time.perf_counter()
-    h = b'calibration'
-    for _ in range(400_000):
-        h = hashlib.md5(h).digest()
-    return time.perf_counter() - t0
+def _bench():
+    """This checkout's bench.py (warm-up, sentinel, per-run cleanup), so
+    every tree is measured by the same harness. Loaded by path after the
+    tree's ``__spark_entry__``, which it then shares."""
+    spec = importlib.util.spec_from_file_location(
+        'bench', os.path.join(REPO_DIR, 'bench.py'))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def run_one(tree, sf_dir, queries, n_runs=3):
@@ -34,29 +38,15 @@ def run_one(tree, sf_dir, queries, n_runs=3):
     os.chdir(tree)
     import __spark_entry__ as entry
     from erde_spark.session import get_spark
+    bench = _bench()
     spark = get_spark(app_name='ab_bench')
     qs = entry.queries()
-    # same warm-up discipline as bench.py
-    qs['tpch_q1_pricing'](spark, sf_dir).count()
-    from pyspark.sql import functions as F, types as T
-
-    @F.pandas_udf(T.LongType())
-    def _warm(x):
-        return x + 1
-    spark.range(0, 1024, 1, 32).select(_warm('id')).count()
-    s0 = _sentinel_cpu()
-    out = {}
-    for name in queries:
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            runs.append(round(time.perf_counter() - t0, 3))
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-            spark.catalog.clearCache()
-        out[name] = runs
-    s1 = _sentinel_cpu()
+    bench.warm_up(spark, sf_dir)
+    s0 = bench._sentinel_cpu()
+    out = {name: [round(w, 3) for w, _, _, _ in
+                  bench.time_runs(spark, qs[name], sf_dir, n_runs)]
+           for name in queries}
+    s1 = bench._sentinel_cpu()
     print(json.dumps({'tree': tree, 'sentinel': [round(s0, 3), round(s1, 3)],
                       'queries': out}))
 
