@@ -1,8 +1,21 @@
 """SparkSession factory tuned for this engine.
 
 Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
-confs hold (AQE, Arrow, sane shuffle parallelism). Nothing here is
-local-mode-specific except the master default.
+confs hold (AQE, Arrow, sane shuffle parallelism). Two things are
+local-mode-specific: the master default, and the Python worker daemon.
+
+Every pandas UDF task starts with ``importlib.invalidate_caches()`` in its
+Python worker, and on Python 3.11 that re-reads the central directory of
+``pyspark.zip`` once per imported pyspark package, plus the spark-core
+jar's. That is a fixed 0.14-0.24 s per task on 4 vCPUs before the task
+reads a row. For ``local[...]`` masters ``get_spark`` therefore runs
+``erde_spark._daemon`` as ``spark.python.daemon.module``: Spark's own
+daemon, with archives re-read only when they have changed (see that
+module), and this package's parent directory on the workers'
+``PYTHONPATH`` so the daemon imports from any working directory. Other
+masters keep Spark's stock daemon: the executor has to import erde_spark
+before its first task, and a ``--py-files`` install only arrives with
+the task.
 """
 
 from __future__ import annotations
@@ -12,6 +25,9 @@ from contextlib import contextmanager
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+#: the directory holding the erde_spark package, for the workers' PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_mem() -> str:
@@ -43,6 +59,13 @@ def get_spark(app_name: str = "erde_spark", master: str | None = None,
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master == "local" or master.startswith("local["):
+        # Python workers forked by erde_spark._daemon skip the per-task
+        # re-read of pyspark.zip's directory (module docstring)
+        builder = (
+            builder.config("spark.python.daemon.module", "erde_spark._daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        )
     spark = builder.getOrCreate()
     # the driver-generated events table carries ns-precision timestamps,
     # which Spark's parquet reader rejects unless read as long
@@ -105,7 +128,8 @@ def spread_to_cores(df):
     estimated against ``spark.sql.files.maxPartitionBytes``, since big
     files of a splittable format still scan wide. Non-file-backed
     frames (ExistingRDD / LocalRelation / post-checkpoint) fall back to
-    the RDD probe — their physical plans are shallow by construction.
+    the RDD probe — their physical plans are shallow by construction —
+    and so do file-backed frames whose files cannot be stat'ed.
     Streaming frames are returned unchanged (``df.rdd`` would raise;
     the streaming near-dup path spreads inside ``foreachBatch`` where
     batches are plain batch frames)."""
@@ -132,12 +156,11 @@ def spread_to_cores(df):
                 splits += max(1, -(-size // max_pb))
                 if splits >= cores:
                     return df
+            return df.repartition(cores)
         except Exception:
-            # unreadable listing (moved files, exotic scheme): fall
-            # through to the spread — the repartition is correct either
-            # way, this probe only decides whether it is needed
+            # unreadable listing (moved files, exotic scheme): the RDD
+            # probe below decides instead
             pass
-        return df.repartition(cores)
     if df.rdd.getNumPartitions() >= cores:
         return df
     return df.repartition(cores)

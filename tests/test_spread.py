@@ -79,3 +79,35 @@ def test_streaming_frame_returned_unchanged(spark, tmp_path):
     stream = (spark.readStream.schema('id long').parquet(p))
     assert stream.isStreaming
     assert spread_to_cores(stream) is stream
+
+
+def test_failed_file_probe_falls_back_to_rdd_probe(spark, tmp_path,
+                                                   monkeypatch):
+    import erde_spark.session as S
+
+    def unreadable(v):
+        raise OSError('listing unavailable')
+
+    p = str(tmp_path / 'probe_fails')
+    spark.range(0, 20000).coalesce(1).write.parquet(p)
+    size = sum(os.path.getsize(os.path.join(p, f))
+               for f in os.listdir(p) if f.endswith('.parquet'))
+    old = spark.conf.get('spark.sql.files.maxPartitionBytes')
+    cores = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(S, '_bytes_conf', unreadable)
+    try:
+        # one file that scans as >= cores splits: with the size probe
+        # failing, the RDD probe must see the wide scan and keep df
+        spark.conf.set('spark.sql.files.maxPartitionBytes',
+                       str(max(1, size // (cores + 1))))
+        wide = spark.read.parquet(p)
+        assert wide.rdd.getNumPartitions() >= cores
+        assert spread_to_cores(wide) is wide
+    finally:
+        spark.conf.set('spark.sql.files.maxPartitionBytes', old)
+    # the same file scanned as one split is still spread
+    narrow = spark.read.parquet(p)
+    assert narrow.rdd.getNumPartitions() < cores
+    out = spread_to_cores(narrow)
+    assert out.rdd.getNumPartitions() == cores
+    assert out.count() == 20000

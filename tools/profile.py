@@ -16,12 +16,18 @@ timed window. One JSON line per name:
   union (driver-side time no job covers);
 * the rest describe the last run: ``top_jobs`` (the 8 longest, with their
   descriptions), ``stages`` (stage totals), ``python`` (pandas-UDF worker
-  run/boot/init ms and bytes), ``jvm`` (codegen ms, scan bytes, files
-  written), ``skew`` (stages whose max task runs > 4x the median task,
-  with >= 8 tasks and a max >= 1 s) and ``streaming`` (per-trigger
-  durations and input rows, one entry per micro-batch; Spark counts the
-  input rows of every scan of the batch, so a ``foreachBatch`` body
-  that reads its batch three times reports three times its rows).
+  run/boot/init ms and bytes; see below), ``jvm`` (codegen ms, scan
+  bytes, files written), ``skew`` (stages whose max task runs > 4x the
+  median task, with >= 8 tasks and a max >= 1 s) and ``streaming``
+  (per-trigger durations and input rows, one entry per micro-batch; Spark
+  counts the input rows of every scan of the batch, so a ``foreachBatch``
+  body that reads its batch three times reports three times its rows).
+
+``python``'s ``init_ms`` is Spark's "time to initialize Python workers".
+The worker starts that clock when it enters ``pyspark.worker.main()``,
+before its blocking read of the task. A reused worker enters ``main()``
+again as soon as its previous task ends, so on a reused worker the
+figure includes the idle time between tasks and is not a cost.
 
 ``--sf`` defaults to bench.py's sf dir. ``--top N`` adds the N slowest
 names of the latest ``BENCH_r<N>.json``. ``--plandir DIR`` writes each
