@@ -443,8 +443,13 @@ def _bucket_star_edges(buckets: DataFrame, member_col: str = 'id') -> DataFrame:
             .distinct())
 
 
-def _bucket_all_pairs(buckets: DataFrame, member_col: str = 'id',
-                      max_bucket: int | None = 64) -> DataFrame:
+#: rep buckets with more members than this are enumerated as star edges
+#: instead of all pairs, on the driver and in Spark alike (see
+#: :func:`_bucket_all_pairs`)
+_MAX_BUCKET = 64
+
+
+def _bucket_all_pairs(buckets: DataFrame, member_col: str = 'id') -> DataFrame:
     """Distinct (id_a, id_b) — EVERY member pair per (band, bh) bucket
     (quadratic per bucket). Used only where bucket membership is known to
     be small, e.g. cluster REPRESENTATIVES re-bucketed for the merge pass:
@@ -452,31 +457,25 @@ def _bucket_all_pairs(buckets: DataFrame, member_col: str = 'id',
     third, non-matching rep as their minimum, because bucket minima never
     change unless a merge fires.
 
-    Buckets larger than ``max_bucket`` fall back to star edges: at r rows
+    Buckets larger than ``_MAX_BUCKET`` fall back to star edges: at r rows
     per band an oversized bucket is a hash-collision artifact (hundreds of
     mutually DISSIMILAR reps — mostly short documents), and enumerating
     its k²/2 pairs dominated the whole merge pass (measured at sf0.1
     t=0.9: 106 of ~58k buckets held 93% of 758k candidate pairs). A true
     near-dup pair shares ~b·t^r buckets in expectation (~5 of 12 at
     t=0.9), so it is still all-pairs-enumerated unless EVERY shared
-    bucket is oversized. ``max_bucket=None`` restores unconditional
-    all-pairs."""
-    if max_bucket is not None:
-        sizes = buckets.groupBy('band', 'bh').agg(
-            F.count(F.lit(1)).alias('__k'))
-        buckets = buckets.join(sizes, ['band', 'bh'])
-        small_b = buckets.filter(F.col('__k') <= max_bucket).drop('__k')
-        big_b = buckets.filter(F.col('__k') > max_bucket).drop('__k')
-        return (_bucket_all_pairs(small_b, member_col, None)
-                .unionByName(_bucket_star_edges(big_b, member_col))
-                .distinct())
-    a, b = buckets.alias('a'), buckets.alias('b')
-    return (a.join(b, (F.col('a.band') == F.col('b.band')) &
-                      (F.col('a.bh') == F.col('b.bh')) &
-                      (F.col(f'a.{member_col}') < F.col(f'b.{member_col}')))
+    bucket is oversized."""
+    sizes = buckets.groupBy('band', 'bh').agg(F.count(F.lit(1)).alias('__k'))
+    buckets = buckets.join(sizes, ['band', 'bh'])
+    a = buckets.filter(F.col('__k') <= _MAX_BUCKET).alias('a')
+    b = a.alias('b')
+    pairs = (a.join(b, (F.col('a.band') == F.col('b.band')) &
+                       (F.col('a.bh') == F.col('b.bh')) &
+                       (F.col(f'a.{member_col}') < F.col(f'b.{member_col}')))
              .select(F.col(f'a.{member_col}').alias('id_a'),
-                     F.col(f'b.{member_col}').alias('id_b'))
-             .distinct())
+                     F.col(f'b.{member_col}').alias('id_b')))
+    big = buckets.filter(F.col('__k') > _MAX_BUCKET).drop('__k')
+    return pairs.unionByName(_bucket_star_edges(big, member_col)).distinct()
 
 
 # ---------------------------------------------------------------- simhash
@@ -540,9 +539,8 @@ def simhash_pairs(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text',
 
 # ---------------------------------------------------------------- clustering
 
-#: merge-repair edge sets up to this size are resolved with a driver
-#: union-find instead of a distributed CC round (they are bounded by the
-#: representative count, not the corpus)
+#: connected-components edge sets up to this size are resolved with a
+#: driver union-find instead of distributed label rounds
 _MERGE_COLLECT_CAP = 100_000
 
 
@@ -568,9 +566,11 @@ def _union_find_min(edges: list[tuple]) -> dict:
     return {x: find(x) for x in parent if find(x) != x}
 
 
-#: micro-batch driver path bound on collected (id, band, bh) rows —
-#: docs x bands; 150k rows ~= a 12.5k-doc batch at 12 bands. Over it,
-#: the distributed merge loop runs instead. MEASURED at the edges
+#: driver bound on collected bucket rows. The whole-input driver path
+#: collects the (id, band, bh) table — docs x bands rows; 150k rows ~= a
+#: 12.5k-doc batch at 12 bands. The distributed fallback's merge collects
+#: the buckets that hold two or more representatives, one row each. Over
+#: it, the merge rounds run in Spark instead. MEASURED at the edges
 #: (round 8's forced-fallback size sweep, SCALE.md): the driver path wins
 #: below ~12k docs on both dup-dense and all-unique corpora (2.3-4.1 s
 #: vs 3.1-4.8 s distributed) but INVERTS well before the old 500k cap
@@ -582,30 +582,30 @@ _MICROBATCH_BUCKET_CAP = 150_000
 _MICROBATCH_CAND_CAP = 250_000
 
 
-#: driver-known id lists up to this size filter with a literal ``isin``
-#: (an InSet that stays in codegen and needs no broadcast job); larger
-#: sets take a join. A long list costs on the Python side, not in
-#: Catalyst: pyspark builds one py4j literal per id, and building
-#: ``F.col('id').isin(ids)`` took 0.027 / 0.139 / 0.427 / 0.875 s at
-#: 50 / 300 / 1,000 / 3,000 ids, while a ``driver_frame`` of the same ids
-#: took 0.012-0.017 s at every size (Spark 4.1.2, 4 vCPU, one process).
-#: The join runs one more job, so the crossover sits well below this
-#: bound; it has not been measured end to end yet
+#: the streaming writer's survivor-id lists up to this size filter with a
+#: literal ``isin`` (an InSet that stays in codegen and needs no broadcast
+#: job); larger lists take a checkpointed semi-join. A long list costs on
+#: the Python side, not in Catalyst: pyspark builds one py4j literal per
+#: id, and building ``F.col('id').isin(ids)`` took 0.027 / 0.139 / 0.427 /
+#: 0.875 s at 50 / 300 / 1,000 / 3,000 ids, while a ``driver_frame`` of the
+#: same ids took 0.012-0.017 s at every size (Spark 4.1.2, 4 vCPU, one
+#: process). The join runs one more job, so the crossover sits well below
+#: this bound; it has not been measured end to end yet
 _ISIN_MAX = 5000
 
 
-def _rep_pair_candidates(bmap: dict, touched: set | None) -> set | None:
-    """Driver-side rep-pair candidates from {(band, bh): set of reps}: ALL
-    pairs per bucket up to :func:`_bucket_all_pairs`' ``max_bucket=64``,
-    star edges from the bucket minimum above it; with ``touched``, only
-    pairs involving a touched rep. ``None`` once the set exceeds
-    ``_MICROBATCH_CAND_CAP`` (the caller falls back to Spark)."""
+def _rep_pair_candidates(groups: list, touched: set | None) -> set | None:
+    """Driver-side rep-pair candidates from the representative sets of
+    LSH buckets: ALL pairs per bucket up to ``_MAX_BUCKET`` members, star
+    edges from the bucket minimum above it (as :func:`_bucket_all_pairs`
+    does in Spark); with ``touched``, only pairs involving a touched rep.
+    ``None`` once the set exceeds ``_MICROBATCH_CAND_CAP``."""
     cand: set = set()
-    for reps in bmap.values():
-        if len(reps) < 2 or (touched is not None and not reps & touched):
+    for reps in groups:
+        if touched is not None and not reps & touched:
             continue
         rs = sorted(reps)
-        if len(rs) <= 64:
+        if len(rs) <= _MAX_BUCKET:
             pairs = [(rs[i], rs[j]) for i in range(len(rs))
                      for j in range(i + 1, len(rs))]
         else:  # oversized hash-collision bucket: star edges
@@ -617,11 +617,59 @@ def _rep_pair_candidates(bmap: dict, touched: set | None) -> set | None:
     return cand
 
 
+def _driver_merge(groups: list, verify, merge_rounds: int,
+                  edges: list = ()) -> dict | None:
+    """The representative-merge rounds of :func:`dedup_clusters`, on the
+    driver. ``groups``: the member sets of LSH buckets; ``edges``: pairs
+    already verified, merged before the first round;
+    ``verify(candidates)``: the verified pairs of a sorted list of
+    (id_a, id_b) candidates (:func:`_driver_verify`, one Spark action per
+    call).
+
+    Each round verifies the pairs of current labels (representatives)
+    sharing a bucket and merges the labels of every verified pair; rounds
+    stop when none merges, or after ``merge_rounds``. Rounds after the
+    first keep only pairs involving a rep touched by the last merge:
+    every pair of untouched reps was already verified and refuted, and
+    their buckets are unchanged. Zero candidates in a round = zero Spark
+    actions. Returns {member: merged label} for the members whose label
+    changed, or ``None`` when a round's candidates exceed
+    ``_MICROBATCH_CAND_CAP`` (the caller falls back to Spark)."""
+    label = m2 = _union_find_min(edges)
+    touched = None
+    for _ in range(merge_rounds):
+        # each bucket's current labels; a bucket down to one is done
+        groups = [g for g in ({m2.get(x, x) for x in grp} for grp in groups)
+                  if len(g) > 1]
+        cand = _rep_pair_candidates(groups, touched)
+        if cand is None:
+            return None
+        if not cand:
+            break
+        merges = verify(sorted(cand))
+        if not merges:
+            break
+        m2 = _union_find_min(merges)
+        touched = set(m2) | set(m2.values())
+        label = {x: m2.get(c, c) for x, c in label.items()}
+        label.update(m2)
+    return label
+
+
+def _driver_verify(verified, spark, itype):
+    """``verify`` for :func:`_driver_merge`: a driver list of candidate
+    pairs becomes a ``driver_frame``, ``verified`` (candidate frame ->
+    verified (id_a, id_b) frame) runs on it, and one collect brings the
+    verified pairs back."""
+    schema = T.StructType([T.StructField('id_a', itype),
+                           T.StructField('id_b', itype)])
+    return lambda cand: [tuple(r) for r in
+                         verified(driver_frame(spark, cand, schema)).collect()]
+
+
 def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
                                   edge_rows: list, buckets: DataFrame,
-                                  sig: DataFrame, tok: DataFrame,
-                                  threshold: float, num_perm: int,
-                                  small, pf: bool, merge_rounds: int,
+                                  verified, merge_rounds: int,
                                   n_buckets: int | None = None,
                                   state_out: dict | None = None
                                   ) -> DataFrame | None:
@@ -630,27 +678,22 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
     distributed path — identical semantics, more jobs). ``dedup_clusters``
     tries it on every call, batch or micro-batch.
 
-    The distributed merge loop costs ~2 eager actions per round plus a
-    CC probe and label checkpoint — ~6 Spark actions whose payloads are
-    a few thousand rows each; on inputs this size the per-action overhead
-    (Catalyst analysis + AQE stage jobs) dominates end-to-end latency.
-    Here everything EXCEPT exact-Jaccard verification moves to the
-    driver: take the verified star edges (``edge_rows``, the caller's
-    ``limit(_MERGE_COLLECT_CAP + 1)`` probe of the checkpointed edges,
-    which its connected-components fallback reuses) and collect the
-    (id, band, bh) bucket table (bounded by ``_MICROBATCH_BUCKET_CAP``;
-    a known row count ``n_buckets`` over the bound returns ``None``
-    before any collect), then per merge round build
-    the rep-pair candidates in memory — all pairs per bucket under the
-    same ``max_bucket=64`` cap with the same star-edge fallback as
-    :func:`_bucket_all_pairs`, the same touched-rep pruning — and spend
-    exactly ONE Spark action verifying them against the checkpointed
-    (sig, toks) base. Zero candidates in a round = zero Spark actions.
-    The kept ids (component minima) end as a driver list, handed to
-    ``state_out['kept_ids']`` when given.
-    Output is row-identical to the distributed path (parity-tested in
-    tests/test_scale.py); only job count differs. At 100 TB the bounds
-    never hold and the distributed loop remains the scale path.
+    On inputs this size the per-action overhead (Catalyst analysis + AQE
+    stage jobs) of a distributed connected-components pass dominates
+    end-to-end latency. Here everything EXCEPT exact-Jaccard verification
+    moves to the driver: take the verified star edges (``edge_rows``, the
+    caller's ``limit(_MERGE_COLLECT_CAP + 1)`` probe of the checkpointed
+    edges, which its connected-components fallback reuses), collect the
+    (id, band, bh) bucket table (bounded by ``_MICROBATCH_BUCKET_CAP``; a
+    known row count ``n_buckets`` over the bound returns ``None`` before
+    any collect) and hand both to :func:`_driver_merge`, which
+    union-finds the edges and runs the merge rounds (one Spark action
+    per round, for the Jaccard verify). The kept ids (component
+    minima) end as a driver list, handed to ``state_out['kept_ids']`` when
+    given. Output is row-identical to the distributed path
+    (parity-tested in tests/test_scale.py); only job count differs. At
+    100 TB the bounds never hold and the distributed path remains the
+    scale path.
     """
     if len(edge_rows) > _MERGE_COLLECT_CAP:
         return None
@@ -659,35 +702,18 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
     bucket_rows = buckets.limit(_MICROBATCH_BUCKET_CAP + 1).collect()
     if len(bucket_rows) > _MICROBATCH_BUCKET_CAP:
         return None
-    spark = sig.sparkSession
-    itype = sig.schema['id'].dataType
-    remap = _union_find_min([(r['id_a'], r['id_b']) for r in edge_rows])
-    comp_of = {}
+    spark, itype = df.sparkSession, buckets.schema['id'].dataType
+    bmap: dict = {}
     for r in bucket_rows:  # every doc appears (sig always explodes)
-        i = r['id']
-        comp_of[i] = remap.get(i, i)
-    touched = None
-    for _ in range(merge_rounds):
-        bmap: dict = {}
-        for r in bucket_rows:
-            bmap.setdefault((r['band'], r['bh']), set()).add(comp_of[r['id']])
-        cand = _rep_pair_candidates(bmap, touched)
-        if cand is None:
-            return None  # degenerate: let the distributed loop pay
-        if not cand:
-            break
-        cand_df = driver_frame(spark, sorted(cand), T.StructType(
-            [T.StructField('id_a', itype), T.StructField('id_b', itype)]))
-        merges = _verify_jaccard(cand_df, sig, tok, threshold, num_perm,
-                                 small, pf).select('id_a', 'id_b').collect()
-        if not merges:
-            break
-        m2 = _union_find_min([(r['id_a'], r['id_b']) for r in merges])
-        touched = set(m2) | set(m2.values())
-        for i, c in comp_of.items():
-            comp_of[i] = m2.get(c, c)
+        bmap.setdefault((r['band'], r['bh']), set()).add(r['id'])
+    label = _driver_merge(list(bmap.values()),
+                          _driver_verify(verified, spark, itype), merge_rounds,
+                          [(r['id_a'], r['id_b']) for r in edge_rows])
+    if label is None:
+        return None  # degenerate: let the distributed path pay
     sizes: dict = {}
-    for c in comp_of.values():
+    for i in {r['id'] for r in bucket_rows}:
+        c = label.get(i, i)
         sizes[c] = sizes.get(c, 0) + 1
     if state_out is not None:
         state_out['kept_ids'] = sorted(sizes)
@@ -698,8 +724,7 @@ def _microbatch_spanning_clusters(df: DataFrame, id_col: str,
 
 
 def connected_components(pairs: DataFrame, ids: DataFrame,
-                         max_iterations: int = 12,
-                         collect_cap: int | None = None) -> DataFrame:
+                         max_iterations: int = 12) -> DataFrame:
     """(id, component) — connected components over an undirected edge list
     (columns ``id_a``/``id_b``): min-label propagation with pointer
     jumping, so rounds grow the reached radius exponentially
@@ -709,17 +734,15 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     materialized frame: the upstream (typically the LSH bucket/verify
     chain, whose shuffles ``limit()`` cannot short-circuit) is evaluated
     exactly once whether the input lands under or over the cap. Edge
-    sets at or under ``collect_cap`` (default ``_MERGE_COLLECT_CAP``)
-    then take a driver fast path: one bounded ``limit(cap+1)`` probe,
-    then union-find in memory — identical min-label output, replacing
-    ~10 iterative Spark jobs with one. Verified near-dup edges are
-    SPARSE relative to the corpus (the spanning strategy emits
-    O(docs x bands) candidates and only true near-dups survive
-    verification), but at 100 TB they still exceed any driver cap, so
-    the distributed iteration remains the scale path; the probe itself
-    terminates early and never materializes more than cap+1 rows.
-    ``collect_cap=0`` skips checkpoint and probe (the edges are read
-    once, by the iteration's own edge checkpoint).
+    sets at or under ``_MERGE_COLLECT_CAP`` then take a driver fast path:
+    one bounded ``limit(cap+1)`` probe, then union-find in memory —
+    identical min-label output, replacing ~10 iterative Spark jobs with
+    one. Verified near-dup edges are SPARSE relative to the corpus (the
+    spanning strategy emits O(docs x bands) candidates and only true
+    near-dups survive verification), but at 100 TB they still exceed any
+    driver cap, so the distributed iteration remains the scale path; the
+    probe itself terminates early and never materializes more than cap+1
+    rows.
 
     Only nodes that appear in an edge enter the iteration — in a dedup
     corpus most documents are singletons, and carrying them through every
@@ -728,89 +751,77 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
 
     Each round: (1) every node adopts the min label among itself and its
     neighbors; (2) pointer jump — every node re-reads its current
-    component's label. Labels are eagerly localCheckpoint'ed per round:
-    iterative plans otherwise accrue lineage that inflates Catalyst
-    analysis time quadratically. Convergence is detected from the label
-    sum — labels only ever decrease, so an unchanged sum is a fixpoint —
-    one aggregation on the already-checkpointed labels instead of a
-    join-and-compare against the previous round.
+    component's label. Labels are localCheckpoint'ed per round: iterative
+    plans otherwise accrue lineage that inflates Catalyst analysis time
+    quadratically. Each label row carries its previous round's label, and
+    convergence is a count of changed labels — labels only ever decrease,
+    so zero changes is a fixpoint, for any orderable id type.
     """
-    base = pairs.select('id_a', 'id_b')
-    if collect_cap != 0:
-        base = base.localCheckpoint(eager=True)
-    return _components(base, ids, max_iterations, collect_cap)
+    base = pairs.select('id_a', 'id_b').localCheckpoint(eager=True)
+    return _components(base, ids, max_iterations)
 
 
-def _components(base: DataFrame, ids: DataFrame, max_iterations: int = 12,
-                collect_cap: int | None = None,
+def _components(base: DataFrame, ids: DataFrame | None = None,
+                max_iterations: int = 12,
                 probe: list | None = None) -> DataFrame:
-    """:func:`connected_components` over ``base`` (id_a, id_b) that is
-    already materialized, or read only once (``collect_cap=0``).
-    ``probe``: the rows of a ``base.limit(collect_cap + 1)`` collect the
-    caller already holds."""
-    if collect_cap is None:
-        collect_cap = _MERGE_COLLECT_CAP
+    """:func:`connected_components` over ``base`` (id_a, id_b), which is
+    read by the probe and, over the cap, once more by the iteration's
+    edge checkpoint. ``probe``: the rows of a
+    ``base.limit(_MERGE_COLLECT_CAP + 1)`` collect the caller already
+    holds. ``ids=None`` labels only the nodes of ``base``."""
     itype = base.schema['id_a'].dataType
-    if collect_cap:
-        if probe is None:
-            probe = base.limit(collect_cap + 1).collect()
-        if len(probe) <= collect_cap:
-            edge_list = [(r['id_a'], r['id_b']) for r in probe]
-            remap = _union_find_min(edge_list)
-            nodes = {x for e in edge_list for x in e}
-            labels = driver_frame(
-                base.sparkSession,
-                [(x, remap.get(x, x)) for x in sorted(nodes)],
-                T.StructType([T.StructField('id', itype),
-                              T.StructField('component', itype)]))
-            singles = (ids.select(F.col(ids.columns[0]).alias('id'))
-                       .join(labels.select('id'), 'id', 'left_anti')
-                       .select('id', F.col('id').alias('component')))
-            return labels.unionByName(singles)
-    edges = base.union(base.select(F.col('id_b').alias('id_a'),
-                                   F.col('id_a').alias('id_b')))
-    edges = edges.localCheckpoint(eager=True)
-    # sum-shortcut only for integral ids: a fractional label decrease
-    # smaller than 1 could leave the truncated decimal sum unchanged and
-    # terminate propagation early; float/decimal ids use the join-compare
-    numeric = isinstance(itype, T.IntegralType)
-    # Each round's checkpoint is LAZY and the convergence test right
-    # after it is what materializes the frame: the label sum, or on the
-    # non-numeric path a full count of changed labels, scans every
-    # partition, so the checkpoint completes in the SAME job instead of
-    # paying a separate materialization action per round (guide §5
-    # driver-side actions). The count must be full: a limit(1) probe can
-    # short-circuit and leave a lazy checkpoint partially computed.
-    labels = (edges.select(F.col('id_a').alias('id')).distinct()
-              .select('id', F.col('id').alias('component'))
-              .localCheckpoint(eager=False))
-    # decimal sum: long-id sums overflow int64 on large corpora
-    label_sum = (lambda df_: df_.agg(
-        F.sum(F.col('component').cast(T.DecimalType(38, 0)))).first()[0])
-    prev_sum = label_sum(labels) if numeric else None
-    for i in range(max_iterations):
-        nmin = (edges.join(labels, edges['id_b'] == labels['id'])
-                .groupBy('id_a').agg(F.min('component').alias('nmin'))
-                .withColumnRenamed('id_a', 'id'))
-        stepped = (labels.join(nmin, 'id', 'left')
-                   .select('id', F.least('component', F.coalesce('nmin', 'component'))
-                           .alias('component')))
-        # pointer jump: component <- label(component)
-        ptr = stepped.select(F.col('id').alias('pid'), F.col('component').alias('pcomp'))
-        jumped = (stepped.join(ptr, stepped['component'] == ptr['pid'], 'left')
-                  .select('id', F.least('component', F.coalesce('pcomp', 'component'))
-                          .alias('component'))
+    if probe is None:
+        probe = base.limit(_MERGE_COLLECT_CAP + 1).collect()
+    if len(probe) <= _MERGE_COLLECT_CAP:
+        edge_list = [(r['id_a'], r['id_b']) for r in probe]
+        remap = _union_find_min(edge_list)
+        nodes = {x for e in edge_list for x in e}
+        labels = driver_frame(
+            base.sparkSession,
+            [(x, remap.get(x, x)) for x in sorted(nodes)],
+            T.StructType([T.StructField('id', itype),
+                          T.StructField('component', itype)]))
+    else:
+        edges = base.union(base.select(F.col('id_b').alias('id_a'),
+                                       F.col('id_a').alias('id_b')))
+        edges = edges.localCheckpoint(eager=True)
+        # Each round's checkpoint is LAZY and the count of changed labels
+        # right after it is what materializes the frame: the count scans
+        # every partition, so the checkpoint completes in the SAME job
+        # instead of paying a separate materialization action per round
+        # (guide §5 driver-side actions). The count must be full: a
+        # limit(1) probe can short-circuit and leave a lazy checkpoint
+        # partially computed.
+        labels = (edges.select(F.col('id_a').alias('id')).distinct()
+                  .select('id', F.col('id').alias('component'))
                   .localCheckpoint(eager=False))
-        if numeric:
-            cur_sum = label_sum(jumped)
-            changed = cur_sum != prev_sum
-            prev_sum = cur_sum
-        else:
-            changed = (jumped.join(labels.withColumnRenamed('component', 'old'), 'id')
-                       .filter(F.col('component') != F.col('old')).count()) > 0
-        labels = jumped
-        if not changed:
-            break
+        for i in range(max_iterations):
+            with phase(f'connected_components: round {i + 1}'):
+                nmin = (edges.join(labels, edges['id_b'] == labels['id'])
+                        .groupBy('id_a').agg(F.min('component').alias('nmin'))
+                        .withColumnRenamed('id_a', 'id'))
+                stepped = (labels.join(nmin, 'id', 'left')
+                           .select('id', F.col('component').alias('prev'),
+                                   F.least('component',
+                                           F.coalesce('nmin', 'component'))
+                                   .alias('component')))
+                # pointer jump: component <- label(component)
+                ptr = stepped.select(F.col('id').alias('pid'),
+                                     F.col('component').alias('pcomp'))
+                jumped = (stepped.join(ptr, stepped['component'] == ptr['pid'],
+                                       'left')
+                          .select('id', 'prev',
+                                  F.least('component',
+                                          F.coalesce('pcomp', 'component'))
+                                  .alias('component'))
+                          .localCheckpoint(eager=False))
+                changed = jumped.agg(F.count(F.when(
+                    F.col('component') != F.col('prev'), 1))).first()[0]
+            labels = jumped.drop('prev')
+            if not changed:
+                break
+    if ids is None:
+        return labels
     singles = (ids.select(F.col(ids.columns[0]).alias('id'))
                .join(labels.select('id'), 'id', 'left_anti')
                .select('id', F.col('id').alias('component')))
@@ -838,28 +849,31 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
     merge pass re-buckets the REPRESENTATIVES: ALL pairs of
     representatives sharing an LSH bucket are verified (they are few —
     members that verified already merged; hash-collision buckets above
-    ``_bucket_all_pairs``'s ``max_bucket`` cap fall back to star edges)
-    and any verified pair merges its two components. The pass repeats
-    until no merge fires (up to ``merge_rounds`` times); at convergence
-    no two kept documents sharing a NON-OVERSIZED LSH bucket are
-    near-duplicates at the threshold — the pairs-path invariant up to
-    LSH recall and the oversized-bucket fallback (a true pair shares
-    ~b·t^r buckets, so it escapes only if every one is oversized).
+    ``_MAX_BUCKET`` members fall back to star edges) and any verified
+    pair merges its two components. The pass repeats until no merge
+    fires (up to ``merge_rounds`` times); at convergence no two kept
+    documents sharing a NON-OVERSIZED LSH bucket are near-duplicates at
+    the threshold — the pairs-path invariant up to LSH recall and the
+    oversized-bucket fallback (a true pair shares ~b·t^r buckets, so it
+    escapes only if every one is oversized).
 
     The verified star edges are checkpointed once and probed once (a
-    ``limit(_MERGE_COLLECT_CAP + 1)`` collect). When they, the
-    (id, band, bh) bucket table and every merge round's candidate pairs
-    fit the driver bounds (``_MERGE_COLLECT_CAP``,
+    ``limit(_MERGE_COLLECT_CAP + 1)`` collect). The merge rounds are one
+    driver loop (:func:`_driver_merge`) wherever they fit the driver
+    bounds. When the edges, the (id, band, bh) bucket table and every
+    round's candidate pairs fit (``_MERGE_COLLECT_CAP``,
     ``_MICROBATCH_BUCKET_CAP``, ``_MICROBATCH_CAND_CAP``), components and
-    the merge pass run on the driver
+    merges all run on the driver
     (:func:`_microbatch_spanning_clusters`: one Spark action per merge
     round, for the Jaccard verify) and ``_state_out['kept_ids']`` holds
-    the kept ids as a driver list. Over any bound, connected components
-    (on the same edge probe) and the distributed merge loop run on the
-    same checkpointed edges, with row-identical output. The bucket table
-    has docs x bands rows, and with ``prefilter=None`` the prefilter
-    probe counts the documents, so an input over the bucket bound falls
-    back without collecting buckets.
+    the kept ids as a driver list. The bucket table has docs x bands
+    rows, and with ``prefilter=None`` the prefilter probe counts the
+    documents, so an input over the bucket bound falls back without
+    collecting buckets. The fallback runs connected components on the
+    same edge probe, then :func:`_merge_reps`: the same driver rounds
+    over the buckets holding two or more representatives when those
+    buckets and the candidates fit the bounds, plain Spark rounds when
+    they do not. Every path is row-identical.
 
     ``prefilter=None`` probes the mean token-set size once per call to
     decide whether the signature pre-filter pays for itself (see
@@ -900,24 +914,27 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                 # pass over the kept subset
                 _state_out.update(tok=tok, sig=sig, buckets=buckets,
                                   bands=bands, rows=rows, prefilter=pf)
-            edges = _verify_jaccard(_bucket_star_edges(buckets), sig, tok,
-                                    threshold, num_perm, small, pf) \
-                .select('id_a', 'id_b').localCheckpoint(eager=True)
+
+            def verified(cand):
+                return _verify_jaccard(cand, sig, tok, threshold, num_perm,
+                                       small, pf).select('id_a', 'id_b')
+
+            edges = verified(_bucket_star_edges(buckets)) \
+                .localCheckpoint(eager=True)
             # one bounded edge probe serves both paths: the driver path's
             # edge list and the connected-components fast path of the fallback
             edge_rows = edges.limit(_MERGE_COLLECT_CAP + 1).collect()
         with phase('dedup_clusters: driver rounds'):
             out = _microbatch_spanning_clusters(
-                df, id_col, edge_rows, buckets, sig, tok, threshold, num_perm,
-                small, pf, merge_rounds, n_buckets=n_buckets,
-                state_out=_state_out)
+                df, id_col, edge_rows, buckets, verified, merge_rounds,
+                n_buckets=n_buckets, state_out=_state_out)
         if out is not None:
             return out
         with phase('dedup_clusters: fallback'):
             comp = _components(edges, df.select(id_col), probe=edge_rows) \
                 .localCheckpoint(eager=True)
-            comp = _merge_reps(comp, buckets, sig, tok, threshold, num_perm,
-                               small, pf, merge_rounds)
+        with phase('dedup_clusters: merge'):
+            comp = _merge_reps(comp, buckets, verified, merge_rounds)
     else:
         raise ValueError(f'unknown pair_strategy {pair_strategy!r}')
     reps = comp.groupBy('component').agg(F.min('id').alias('keep_id'),
@@ -926,168 +943,82 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
                     id_col, 'inner'))
 
 
-def _merge_reps(comp: DataFrame, buckets: DataFrame, sig: DataFrame,
-                tok: DataFrame, threshold: float, num_perm: int, small,
-                pf: bool, merge_rounds: int) -> DataFrame:
-    """The distributed representative-merge pass of :func:`dedup_clusters`
-    over component labels ``comp`` (id, component): up to
-    ``merge_rounds`` rounds of verifying rep pairs that share an LSH
-    bucket and merging their components. Returns the merged labels."""
-    touched = None  # round 1 checks all rep pairs; later rounds prune
-    touched_vals = None  # driver-known touched labels (bounded list)
-    for _ in range(merge_rounds):
-        # representatives (= component labels) back into their buckets;
-        # ALL pairs of representatives sharing a bucket are verified
-        # (star edges would miss pairs whose shared buckets all have a
-        # third, non-matching rep as their min). Reps per bucket are
-        # few — members that verified already merged — so the
-        # per-bucket product is bounded.
-        rep_buckets = (buckets.join(comp, 'id')
-                       .select(F.col('component').alias('rid'), 'band', 'bh')
-                       .distinct())
-        if touched is not None:
-            # rounds after the first only need pairs involving a rep
-            # whose component changed last round: every pair of
-            # UNCHANGED reps sharing a bucket was already verified
-            # (and refuted) by the previous all-pairs round — and an
-            # unchanged rep's bucket set is itself unchanged. Restrict
-            # to buckets holding a touched rep BEFORE the quadratic
-            # pair step, then to pairs involving a touched rep.
-            if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
-                # small driver-known list: a literal isin stays in
-                # codegen and beats any join
-                hot = (rep_buckets.filter(F.col('rid').isin(touched_vals))
-                       .select('band', 'bh').distinct())
-            else:
-                # larger sets: broadcast-hash semi join (explicit hint
-                # when the set is driver-bounded by the collect cap)
-                tb = touched.withColumnRenamed('t', 'rid')
-                if touched_vals is not None:
-                    tb = F.broadcast(tb)
-                hot = (rep_buckets.join(tb, 'rid', 'left_semi')
-                       .select('band', 'bh').distinct())
-            rep_buckets = rep_buckets.join(hot, ['band', 'bh'], 'left_semi')
-        rep_cand = None
-        if touched_vals is not None:
-            # rounds after the first with a DRIVER-KNOWN touched set:
-            # the hot-restricted rep-bucket table is bounded (touched
-            # reps x bands buckets, whole buckets kept), so build the
-            # candidate pairs in memory — same max_bucket=64 split,
-            # star fallback and touched filter as the distributed
-            # _bucket_all_pairs branch below — and spend Spark
-            # actions only on the exact-Jaccard verify (r13: replaces
-            # the rep_buckets checkpoint + 4-branch pair chain, ~8
-            # AQE stage jobs per round; zero candidates = zero jobs)
-            probe = rep_buckets.limit(
-                _MICROBATCH_BUCKET_CAP + 1).collect()
-            if len(probe) <= _MICROBATCH_BUCKET_CAP:
-                bmap: dict = {}
-                for r in probe:
-                    bmap.setdefault((r['band'], r['bh']),
-                                    set()).add(r['rid'])
-                cand = _rep_pair_candidates(bmap, set(touched_vals))
-                if cand is not None:
-                    if not cand:
-                        break
-                    ctype0 = comp.schema['component'].dataType
-                    rep_cand = driver_frame(
-                        comp.sparkSession, sorted(cand),
-                        T.StructType([T.StructField('id_a', ctype0),
-                                      T.StructField('id_b', ctype0)]))
-                    # falls through to the shared verify/apply below;
-                    # the touched isin re-filter there is a no-op on
-                    # this already-filtered local relation
-        if rep_cand is None:
-            # materialize: the bucket-size split inside
-            # _bucket_all_pairs references this plan four times —
-            # uncheckpointed, Catalyst re-analyzes the join+distinct
-            # per branch per round (lazy variants measured 15-35%
-            # SLOWER on micro-batches, ABBA round 7 — the
-            # recompute+re-analysis exceeds the job cost)
-            rep_buckets = rep_buckets.localCheckpoint(eager=True)
-            rep_cand = _bucket_all_pairs(rep_buckets, member_col='rid')
-        if touched is not None:
-            if touched_vals is not None and len(touched_vals) <= _ISIN_MAX:
-                rep_cand = rep_cand.filter(
-                    F.col('id_a').isin(touched_vals) |
-                    F.col('id_b').isin(touched_vals))
-            else:
-                # one linear pass: flag both endpoints via two hash
-                # left joins and filter the OR — no union, no pair
-                # distinct, no double-reference of the pair DAG
-                # (previously two semi-joins + distinct, the source
-                # of the superlinear shuffle term in SCALE.md)
-                bhint = (F.broadcast if touched_vals is not None
-                         else (lambda x: x))
-                ta = touched.select(F.col('t').alias('id_a'),
-                                    F.lit(True).alias('_ta'))
-                tb2 = touched.select(F.col('t').alias('id_b'),
-                                     F.lit(True).alias('_tb'))
-                rep_cand = (rep_cand
-                            .join(bhint(ta), 'id_a', 'left')
-                            .join(bhint(tb2), 'id_b', 'left')
-                            .filter(F.col('_ta').isNotNull() |
-                                    F.col('_tb').isNotNull())
-                            .drop('_ta', '_tb'))
-        merges = _verify_jaccard(rep_cand, sig, tok, threshold,
-                                 num_perm, small, pf) \
-            .select('id_a', 'id_b')
-        # probe-collect directly: in the common (bounded) path the
-        # merge edges are consumed on the driver and the frame is
-        # never re-read, so a checkpoint would be a wasted job; the
-        # degenerate over-cap path re-materializes below
-        edge_rows = merges.limit(_MERGE_COLLECT_CAP + 1).collect()
-        if not edge_rows:
-            break
-        if len(edge_rows) <= _MERGE_COLLECT_CAP:
-            # merge edges are representative REPAIRS — tiny relative
-            # to the corpus by construction (bounded by rep count).
-            # Union-find on the driver + one broadcast-mapped join
-            # replaces a whole distributed CC round (~10 jobs) with
-            # one; the distributed path below remains for the
-            # degenerate huge-merge case.
-            remap = _union_find_min(
-                [(r['id_a'], r['id_b']) for r in edge_rows])
-            if not remap:
-                break
-            ctype = comp.schema['component'].dataType
-            map_df = driver_frame(
-                comp.sparkSession, list(remap.items()),
-                T.StructType([T.StructField('component', ctype),
-                              T.StructField('__super', ctype)]))
-            t_vals = sorted({v for kv in remap.items() for v in kv})
-            touched = driver_frame(
-                comp.sparkSession, [(v,) for v in t_vals],
-                T.StructType([T.StructField('t', ctype)]))
-            # driver-known: the use sites pick isin (small lists,
-            # stays in codegen) or an explicit broadcast join
-            # (larger — a huge IN-list would dwarf the join in
-            # Catalyst analysis time)
-            touched_vals = t_vals
-            comp = (comp.join(F.broadcast(map_df), 'component', 'left')
-                    .select('id', F.coalesce('__super', 'component')
-                            .alias('component'))
-                    .localCheckpoint(eager=True))
-            continue
-        merges = merges.localCheckpoint(eager=True)
-        rep_map = (connected_components(
-            merges, comp.select(F.col('component')).distinct(),
-            collect_cap=0)  # known > cap: skip the probe
-            .withColumnRenamed('component', 'supercomp')
-            .withColumnRenamed('id', 'component'))
-        # reps whose label changed (absorbed into another component)
-        # plus the absorbing labels themselves
-        touched = (rep_map
-                   .filter(F.col('component') != F.col('supercomp'))
-                   .select(F.col('component').alias('t'))
-                   .unionByName(rep_map
-                                .filter(F.col('component') != F.col('supercomp'))
-                                .select(F.col('supercomp').alias('t')))
+def _relabel(frame: DataFrame, sup: DataFrame) -> DataFrame:
+    """``frame`` with its ``component`` labels mapped through ``sup``
+    (component, __super); labels ``sup`` does not hold are kept."""
+    return (frame.join(sup, 'component', 'left')
+            .withColumn('component', F.coalesce('__super', 'component'))
+            .drop('__super'))
+
+
+def _merge_reps(comp: DataFrame, buckets: DataFrame, verified,
+                merge_rounds: int) -> DataFrame:
+    """The representative-merge pass of :func:`dedup_clusters`' fallback
+    over component labels ``comp`` (id, component); returns the merged
+    labels.
+
+    The (component, band, bh) rep-bucket table is checkpointed once. Its
+    buckets holding two or more representatives are collected (bounded
+    by ``_MICROBATCH_BUCKET_CAP`` rows), :func:`_driver_merge` runs the
+    rounds on them, and one broadcast join relabels ``comp``. Over that
+    bound, or over the candidate bound, plain Spark rounds run on the
+    same checkpoint: all pairs per bucket (:func:`_bucket_all_pairs`),
+    after the first round only buckets and pairs that hold a rep touched
+    by the last merge, and the verified merges go through
+    :func:`_components`."""
+    rep_buckets = (buckets.join(comp, 'id')
+                   .select('component', 'band', 'bh')
                    .distinct().localCheckpoint(eager=True))
-        touched_vals = None
-        comp = (comp.join(rep_map, 'component')
-                .select('id', F.col('supercomp').alias('component'))
-                .localCheckpoint(eager=True))
+    groups = (rep_buckets.groupBy('band', 'bh')
+              .agg(F.collect_set('component').alias('reps'))
+              .filter(F.size('reps') > 1).select('reps')
+              .limit(_MICROBATCH_BUCKET_CAP + 1).collect())
+    if len(groups) <= _MICROBATCH_BUCKET_CAP:
+        ctype = comp.schema['component'].dataType
+        label = _driver_merge(
+            [set(r['reps']) for r in groups],
+            _driver_verify(verified, comp.sparkSession, ctype), merge_rounds)
+        if label is not None:
+            if not label:
+                return comp
+            sup = driver_frame(comp.sparkSession, sorted(label.items()),
+                               T.StructType([T.StructField('component', ctype),
+                                             T.StructField('__super', ctype)]))
+            return _relabel(comp, F.broadcast(sup))
+    touched = None
+    for _ in range(merge_rounds):
+        rb = rep_buckets
+        if touched is not None:
+            # restrict to buckets holding a touched rep BEFORE the
+            # quadratic pair step, then to pairs involving a touched rep;
+            # materialized because _bucket_all_pairs references it four
+            # times
+            hot = (rb.join(touched, 'component', 'left_semi')
+                   .select('band', 'bh').distinct())
+            rb = rb.join(hot, ['band', 'bh'], 'left_semi') \
+                .localCheckpoint(eager=True)
+        cand = _bucket_all_pairs(rb, member_col='component')
+        if touched is not None:
+            # flag both endpoints via two hash left joins and filter the
+            # OR: no union, no pair distinct
+            ta = touched.select(F.col('component').alias('id_a'),
+                                F.lit(True).alias('_ta'))
+            tb = touched.select(F.col('component').alias('id_b'),
+                                F.lit(True).alias('_tb'))
+            cand = (cand.join(ta, 'id_a', 'left').join(tb, 'id_b', 'left')
+                    .filter(F.col('_ta').isNotNull() | F.col('_tb').isNotNull())
+                    .drop('_ta', '_tb'))
+        merges = verified(cand)
+        probe = merges.limit(_MERGE_COLLECT_CAP + 1).collect()
+        if not probe:
+            break
+        # every node of a merge edge is touched: it either changed label
+        # or absorbed another component
+        sup = _components(merges, probe=probe).select(
+            F.col('id').alias('component'), F.col('component').alias('__super'))
+        touched = sup.select('component')
+        rep_buckets = _relabel(rep_buckets, sup).distinct()
+        comp = _relabel(comp, sup)
     return comp
 
 

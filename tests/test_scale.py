@@ -935,13 +935,14 @@ def test_profile_record(spark):
 
 # ---------------------------------------------------------------- clustering
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, monkeypatch):
     """Full value oracle for connected_components: random 100-node edge
     list vs a brute-force union-find, singletons included — on BOTH the
-    driver fast path (edge count under collect_cap) and the distributed
-    min-label iteration (collect_cap=0 forces it)."""
+    driver fast path (edge count under _MERGE_COLLECT_CAP) and the
+    distributed min-label iteration (a cap of 0 forces it)."""
     import random
 
+    import erde_spark.scale.dedup as D
     from erde_spark.scale.dedup import connected_components
     rnd = random.Random(7)
     edges = set()
@@ -966,22 +967,22 @@ def test_connected_components_matches_union_find(spark):
     for i in range(120):
         groups.setdefault(find(i), []).append(i)
     exp = {i: min(g) for g in groups.values() for i in g}
-    for cap in (None, 0):  # driver union-find / distributed iteration
-        got = {r['id']: r['component']
-               for r in connected_components(pairs, ids,
-                                             collect_cap=cap).collect()}
-        assert got == exp, f'collect_cap={cap}'
-    # checkpoint-then-probe must be output-identical on both sides of
-    # the cap: under (driver path) and over (the probe falls through to
-    # the distributed iteration on the checkpointed edges)
-    for cap in (1000, 5):
-        got = {r['id']: r['component']
-               for r in connected_components(pairs, ids,
-                                             collect_cap=cap).collect()}
-        assert got == exp, f'probed cap={cap}'
-    # string ids take the count-of-changed-labels convergence test
-    # instead of the label sum; zero-padded, so their order is the
-    # integers' and the oracle labels carry over
+
+    def components(p, i, cap):
+        # cap None: the module default
+        with monkeypatch.context() as m:
+            if cap is not None:
+                m.setattr(D, '_MERGE_COLLECT_CAP', cap)
+            return {r['id']: r['component']
+                    for r in connected_components(p, i).collect()}
+
+    # driver union-find / distributed iteration, then checkpoint-then-probe
+    # on both sides of the cap: under (driver path) and over (the probe
+    # falls through to the distributed iteration on the checkpointed edges)
+    for cap in (None, 0, 1000, 5):
+        assert components(pairs, ids, cap) == exp, f'cap={cap}'
+    # string ids take the same convergence test as long ids; zero-padded,
+    # so their order is the integers' and the oracle labels carry over
     spairs = spark.createDataFrame([(f'{a:03d}', f'{b:03d}')
                                     for a, b in sorted(edges)],
                                    'id_a string, id_b string')
@@ -989,46 +990,50 @@ def test_connected_components_matches_union_find(spark):
                                  'id string')
     sexp = {f'{i:03d}': f'{c:03d}' for i, c in exp.items()}
     for cap in (None, 0):
-        got = {r['id']: r['component']
-               for r in connected_components(spairs, sids,
-                                             collect_cap=cap).collect()}
-        assert got == sexp, f'string ids, collect_cap={cap}'
+        assert components(spairs, sids, cap) == sexp, f'string ids, cap={cap}'
 
     from bench import last_job_id
 
     def round_jobs(p, i):
         # jobs of one distributed round: 2 rounds minus 1 round
         n = []
-        for rounds in (1, 2):
-            j0 = last_job_id(spark)
-            connected_components(p, i, max_iterations=rounds,
-                                 collect_cap=0).count()
-            n.append(last_job_id(spark) - j0)
+        with monkeypatch.context() as m:
+            m.setattr(D, '_MERGE_COLLECT_CAP', 0)
+            for rounds in (1, 2):
+                j0 = last_job_id(spark)
+                connected_components(p, i, max_iterations=rounds).count()
+                n.append(last_job_id(spark) - j0)
         return n[1] - n[0]
 
-    # both id kinds materialize each round's lazy checkpoint inside the
-    # convergence test; the string test's extra join costs at most 3 more
-    # jobs per round (9 and 12 on Spark 4.1.2, local[4]; the eager
-    # checkpoint plus a limit(1) probe used to cost 13)
-    assert round_jobs(spairs, sids) <= round_jobs(pairs, ids) + 3
+    # both id kinds count changed labels in the aggregation that
+    # materializes each round's lazy checkpoint, so a round costs the
+    # same jobs on either (9 on Spark 4.1.2, local[4]; the string ids'
+    # join-compare used to cost 12)
+    assert round_jobs(spairs, sids) <= round_jobs(pairs, ids)
 
 
-def test_connected_components_fractional_ids(spark):
-    """Non-integral ids take the join-compare convergence path (a
-    truncated decimal sum can miss sub-1 label decreases)."""
-    from erde_spark.scale.dedup import connected_components
+def test_connected_components_fractional_ids(spark, monkeypatch):
+    """Non-integral ids converge under the same rule as integral ones, on
+    the driver path and in the distributed rounds (a cap of 0): a count
+    of changed labels, which sees a sub-1 label decrease that a truncated
+    label sum would miss."""
+    import erde_spark.scale.dedup as D
     pairs = spark.createDataFrame([(2.25, 1.5), (3.5, 2.25)],
                                   'id_a double, id_b double')
     ids = spark.createDataFrame([(1.5,), (2.25,), (3.5,), (9.75,)], 'id double')
-    got = {r['id']: r['component']
-           for r in connected_components(pairs, ids).collect()}
-    assert got == {1.5: 1.5, 2.25: 1.5, 3.5: 1.5, 9.75: 9.75}
+    for cap in (D._MERGE_COLLECT_CAP, 0):
+        monkeypatch.setattr(D, '_MERGE_COLLECT_CAP', cap)
+        got = {r['id']: r['component']
+               for r in D.connected_components(pairs, ids).collect()}
+        assert got == {1.5: 1.5, 2.25: 1.5, 3.5: 1.5, 9.75: 9.75}, cap
 
 
-#: Spark jobs of dedup_clusters(_clique_corpus) on the driver path,
-#: collect included (measured 15 on Spark 4.1.2, local[4]; the
-#: distributed path launches 32-33)
+#: Spark jobs of dedup_clusters(_clique_corpus), collect included, on
+#: the whole-input driver path and on the distributed fallback forced by
+#: a bucket cap of docs x bands - 1 (measured 15 and 24 on Spark 4.1.2,
+#: local[4] and local[2])
 DRIVER_PATH_JOBS = 15
+FALLBACK_PATH_JOBS = 24
 
 
 def _clique_corpus(spark):
@@ -1145,6 +1150,26 @@ def test_dedup_clusters_driver_path_job_count(spark, monkeypatch):
     assert len(jobs) <= DRIVER_PATH_JOBS, len(jobs)
 
 
+def test_dedup_clusters_fallback_path_job_count(spark, monkeypatch):
+    """Pin: with the whole-input driver path off (a bucket cap one below
+    docs x bands), dedup_clusters on the clique corpus launches at most
+    the measured number of Spark jobs (collect of the result included)."""
+    import erde_spark.scale.dedup as D
+    seen = _spy_driver_path(monkeypatch)
+    docs = _clique_corpus(spark).localCheckpoint(eager=True)
+    monkeypatch.setattr(D, '_MICROBATCH_BUCKET_CAP',
+                        docs.count() * D._threshold_bands(96, 0.9) - 1)
+    sc = spark.sparkContext
+    sc.setJobGroup('dedup_fallback_pin', 'dedup_clusters fallback pin')
+    try:
+        _kept_sizes(docs)
+    finally:
+        sc.setJobGroup(None, None)
+    assert seen['driver_path'] is False
+    jobs = sc.statusTracker().getJobIdsForGroup('dedup_fallback_pin')
+    assert len(jobs) <= FALLBACK_PATH_JOBS, len(jobs)
+
+
 def test_driver_frame_skips_python_rdd(spark):
     """Pin: driver_frame builds through the Arrow path — its lineage has
     no PythonRDD (the list path's parallelize + pickled map) and it plans
@@ -1166,30 +1191,53 @@ def test_driver_frame_skips_python_rdd(spark):
 
 
 def test_dedup_clusters_driver_merge_rounds_parity(spark, monkeypatch):
-    """r13: in the distributed merge loop, rounds AFTER the first with a
-    driver-known touched set build rep-pair candidates in memory (bounded
-    collect of the hot-restricted rep-bucket table) instead of the
-    distributed _bucket_all_pairs chain. A bucket cap one below the
-    corpus's bucket rows (docs x bands) turns off the whole-input driver
-    path but keeps those rounds; a cap of 0 makes every round
-    distributed. Both must be row-identical to each other and to the
-    default driver path, on the dup-dense corpus where multi-round
-    merges fire and on the synthetic clique."""
+    """The distributed fallback's representative merge runs the driver
+    merge rounds (_driver_merge) on its buckets that hold two or more
+    representatives when they fit _MICROBATCH_BUCKET_CAP, and plain Spark
+    rounds otherwise. A bucket cap one below the corpus's bucket rows
+    (docs x bands) turns off the whole-input driver path but keeps the
+    driver merge rounds; a cap of 0 runs Spark rounds (on the dup-dense
+    corpus, which has multi-rep buckets), and so does a candidate cap of
+    0. All must be row-identical to each other and to the default driver
+    path, on the dup-dense corpus where multi-round merges fire and on
+    the synthetic clique."""
     import erde_spark.scale.dedup as D
     seen = _spy_driver_path(monkeypatch)
+    orig_merge, merged = D._driver_merge, []
+
+    def spy_merge(*a, **kw):
+        merged.append(True)
+        return orig_merge(*a, **kw)
+
+    monkeypatch.setattr(D, '_driver_merge', spy_merge)
     bands = D._threshold_bands(96, 0.9)
-    for docs in (_clique_corpus(spark),
+    clique = _clique_corpus(spark)
+    for docs in (clique,
                  spark.read.parquet('/root/testdata/sf0.01/documents.parquet')):
         default = _kept_sizes(docs, merge_rounds=3)
         assert seen['driver_path'] is True
         with monkeypatch.context() as m:
             m.setattr(D, '_MICROBATCH_BUCKET_CAP', docs.count() * bands - 1)
+            merged.clear()
             drv = _kept_sizes(docs, merge_rounds=3)
+            # the whole-input path stops at the bucket count, before
+            # _driver_merge: every call here comes from _merge_reps
+            assert merged, 'driver merge rounds did not run in _merge_reps'
         assert seen['driver_path'] is False
         with monkeypatch.context() as m:
             m.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
+            merged.clear()
             dist = _kept_sizes(docs, merge_rounds=3)
+            if docs is not clique:
+                assert not merged, 'driver merge rounds ran at cap 0'
         assert drv == dist == default
+    # on the dup-dense corpus (the loop's last), the buckets fit but round
+    # 1's candidates do not (the 10x corpus's shape): _driver_merge gives
+    # up and the Spark rounds run
+    with monkeypatch.context() as m:
+        m.setattr(D, '_MICROBATCH_BUCKET_CAP', docs.count() * bands - 1)
+        m.setattr(D, '_MICROBATCH_CAND_CAP', 0)
+        assert _kept_sizes(docs, merge_rounds=3) == default
 
 
 def test_dedup_clusters_rejects_bad_bands(spark):
