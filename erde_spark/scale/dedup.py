@@ -444,38 +444,38 @@ def _bucket_star_edges(buckets: DataFrame, member_col: str = 'id') -> DataFrame:
 
 
 #: rep buckets with more members than this are enumerated as star edges
-#: instead of all pairs, on the driver and in Spark alike (see
-#: :func:`_bucket_all_pairs`)
+#: instead of all pairs, on the driver (:func:`_rep_pair_candidates`) and
+#: in Spark (:func:`_group_pairs`) alike. At r rows per band an oversized
+#: bucket is a hash-collision artifact (hundreds of mutually DISSIMILAR
+#: reps, mostly short documents), and enumerating its k²/2 pairs
+#: dominated the whole merge pass (measured at sf0.1 t=0.9: 106 of ~58k
+#: buckets held 93% of 758k candidate pairs). A true near-dup pair shares
+#: ~b·t^r buckets in expectation (~5 of 12 at t=0.9), so it is still
+#: all-pairs-enumerated unless EVERY shared bucket is oversized.
 _MAX_BUCKET = 64
 
 
-def _bucket_all_pairs(buckets: DataFrame, member_col: str = 'id') -> DataFrame:
-    """Distinct (id_a, id_b) — EVERY member pair per (band, bh) bucket
-    (quadratic per bucket). Used only where bucket membership is known to
-    be small, e.g. cluster REPRESENTATIVES re-bucketed for the merge pass:
-    star edges there would miss rep pairs whose shared buckets all have a
+def _group_pairs(groups: DataFrame, hot: str | None = None) -> DataFrame:
+    """Distinct (id_a, id_b) candidate pairs of the member sets ``reps``
+    (an array column, one row per LSH bucket): EVERY pair of a set up to
+    ``_MAX_BUCKET`` members, star edges from its minimum above it. Used
+    for cluster REPRESENTATIVES re-bucketed for the merge pass: star
+    edges there would miss rep pairs whose shared buckets all have a
     third, non-matching rep as their minimum, because bucket minima never
-    change unless a merge fires.
-
-    Buckets larger than ``_MAX_BUCKET`` fall back to star edges: at r rows
-    per band an oversized bucket is a hash-collision artifact (hundreds of
-    mutually DISSIMILAR reps — mostly short documents), and enumerating
-    its k²/2 pairs dominated the whole merge pass (measured at sf0.1
-    t=0.9: 106 of ~58k buckets held 93% of 758k candidate pairs). A true
-    near-dup pair shares ~b·t^r buckets in expectation (~5 of 12 at
-    t=0.9), so it is still all-pairs-enumerated unless EVERY shared
-    bucket is oversized."""
-    sizes = buckets.groupBy('band', 'bh').agg(F.count(F.lit(1)).alias('__k'))
-    buckets = buckets.join(sizes, ['band', 'bh'])
-    a = buckets.filter(F.col('__k') <= _MAX_BUCKET).alias('a')
-    b = a.alias('b')
-    pairs = (a.join(b, (F.col('a.band') == F.col('b.band')) &
-                       (F.col('a.bh') == F.col('b.bh')) &
-                       (F.col(f'a.{member_col}') < F.col(f'b.{member_col}')))
-             .select(F.col(f'a.{member_col}').alias('id_a'),
-                     F.col(f'b.{member_col}').alias('id_b')))
-    big = buckets.filter(F.col('__k') > _MAX_BUCKET).drop('__k')
-    return pairs.unionByName(_bucket_star_edges(big, member_col)).distinct()
+    change unless a merge fires. Both members come from one row, so the
+    pairs need no join; ``hot`` (an array column) keeps only the pairs
+    with a member in it."""
+    k = F.size('reps')
+    pairs = (groups
+             .select(*([hot] if hot else []), F.explode('reps').alias('id_b'),
+                     F.when(k <= _MAX_BUCKET, F.col('reps'))
+                     .otherwise(F.array(F.array_min('reps'))).alias('__a'))
+             .select('*', F.explode('__a').alias('id_a'))
+             .filter(F.col('id_a') < F.col('id_b')))
+    if hot:
+        pairs = pairs.filter(F.array_contains(hot, F.col('id_a')) |
+                             F.array_contains(hot, F.col('id_b')))
+    return pairs.select('id_a', 'id_b').distinct()
 
 
 # ---------------------------------------------------------------- simhash
@@ -569,8 +569,9 @@ def _union_find_min(edges: list[tuple]) -> dict:
 #: driver bound on collected bucket rows. The whole-input driver path
 #: collects the (id, band, bh) table — docs x bands rows; 150k rows ~= a
 #: 12.5k-doc batch at 12 bands. The distributed fallback's merge collects
-#: the buckets that hold two or more representatives, one row each. Over
-#: it, the merge rounds run in Spark instead. MEASURED at the edges
+#: the buckets that hold two or more representatives when their summed
+#: rep count fits it (one element per rep). Over it, the merge rounds run
+#: in Spark instead. MEASURED at the edges
 #: (round 8's forced-fallback size sweep, SCALE.md): the driver path wins
 #: below ~12k docs on both dup-dense and all-unique corpora (2.3-4.1 s
 #: vs 3.1-4.8 s distributed) but INVERTS well before the old 500k cap
@@ -578,7 +579,8 @@ def _union_find_min(edges: list[tuple]) -> dict:
 #: 258 MB driver peak — the bucket collect dominates), so the cap sits
 #: at the measured crossover, not at the memory ceiling.
 _MICROBATCH_BUCKET_CAP = 150_000
-#: and on candidate rep pairs per merge round (mirrors the edge cap)
+#: and on candidate rep pairs per merge round (mirrors the edge cap); the
+#: fallback's merge counts round 1's before it collects anything
 _MICROBATCH_CAND_CAP = 250_000
 
 
@@ -597,7 +599,7 @@ _ISIN_MAX = 5000
 def _rep_pair_candidates(groups: list, touched: set | None) -> set | None:
     """Driver-side rep-pair candidates from the representative sets of
     LSH buckets: ALL pairs per bucket up to ``_MAX_BUCKET`` members, star
-    edges from the bucket minimum above it (as :func:`_bucket_all_pairs`
+    edges from the bucket minimum above it (as :func:`_group_pairs`
     does in Spark); with ``touched``, only pairs involving a touched rep.
     ``None`` once the set exceeds ``_MICROBATCH_CAND_CAP``."""
     cand: set = set()
@@ -871,9 +873,10 @@ def dedup_clusters(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text'
     documents, so an input over the bucket bound falls back without
     collecting buckets. The fallback runs connected components on the
     same edge probe, then :func:`_merge_reps`: the same driver rounds
-    over the buckets holding two or more representatives when those
-    buckets and the candidates fit the bounds, plain Spark rounds when
-    they do not. Every path is row-identical.
+    over the buckets holding two or more representatives when their reps
+    and round 1's candidate pairs, counted before any collect, fit the
+    bucket and candidate bounds, plain Spark rounds when they do not.
+    Every path is row-identical.
 
     ``prefilter=None`` probes the mean token-set size once per call to
     decide whether the signature pre-filter pays for itself (see
@@ -957,26 +960,35 @@ def _merge_reps(comp: DataFrame, buckets: DataFrame, verified,
     over component labels ``comp`` (id, component); returns the merged
     labels.
 
-    The (component, band, bh) rep-bucket table is checkpointed once. Its
-    buckets holding two or more representatives are collected (bounded
-    by ``_MICROBATCH_BUCKET_CAP`` rows), :func:`_driver_merge` runs the
-    rounds on them, and one broadcast join relabels ``comp``. Over that
-    bound, or over the candidate bound, plain Spark rounds run on the
-    same checkpoint: all pairs per bucket (:func:`_bucket_all_pairs`),
-    after the first round only buckets and pairs that hold a rep touched
-    by the last merge, and the verified merges go through
-    :func:`_components`."""
-    rep_buckets = (buckets.join(comp, 'id')
-                   .select('component', 'band', 'bh')
-                   .distinct().localCheckpoint(eager=True))
-    groups = (rep_buckets.groupBy('band', 'bh')
+    The representatives of the buckets holding two or more of them are
+    grouped per bucket and checkpointed once; no other bucket can yield a
+    candidate in any round, since labels only merge. One aggregation
+    materializes that table, counts its reps and counts round 1's
+    candidate pairs. When the reps fit ``_MICROBATCH_BUCKET_CAP`` and the
+    pairs ``_MICROBATCH_CAND_CAP``, the table is collected,
+    :func:`_driver_merge` runs the rounds on it, and one broadcast join
+    relabels ``comp``. Otherwise, or if a later round's candidates pass
+    the bound after all, plain Spark rounds run from the same checkpoint:
+    the candidates of each bucket row (:func:`_group_pairs`) are
+    verified, the merges go through :func:`_components`, and the table
+    is relabeled, regrouped and checkpointed for the next round, which
+    keeps only pairs with a rep touched by the last merge."""
+    k = F.size('reps')
+    groups = (buckets.join(comp, 'id').groupBy('band', 'bh')
               .agg(F.collect_set('component').alias('reps'))
-              .filter(F.size('reps') > 1).select('reps')
-              .limit(_MICROBATCH_BUCKET_CAP + 1).collect())
-    if len(groups) <= _MICROBATCH_BUCKET_CAP:
+              .filter(k > 1).localCheckpoint(eager=False))
+    # round 1's candidates per bucket of k reps: all pairs up to
+    # _MAX_BUCKET, star edges above it. Later rounds keep only pairs of
+    # touched reps, so the sum, taken before anything is collected,
+    # decides the regime; a later round over the bound still gives up
+    pairs = F.when(k <= _MAX_BUCKET, k * (k - 1) / 2).otherwise(k - 1)
+    n_reps, n_cand = groups.agg(F.sum(k), F.sum(pairs)).first()
+    if not n_reps:
+        return comp  # no bucket holds two reps: nothing can merge
+    if n_reps <= _MICROBATCH_BUCKET_CAP and n_cand <= _MICROBATCH_CAND_CAP:
         ctype = comp.schema['component'].dataType
         label = _driver_merge(
-            [set(r['reps']) for r in groups],
+            [set(r['reps']) for r in groups.select('reps').collect()],
             _driver_verify(verified, comp.sparkSession, ctype), merge_rounds)
         if label is not None:
             if not label:
@@ -985,40 +997,28 @@ def _merge_reps(comp: DataFrame, buckets: DataFrame, verified,
                                T.StructType([T.StructField('component', ctype),
                                              T.StructField('__super', ctype)]))
             return _relabel(comp, F.broadcast(sup))
-    touched = None
-    for _ in range(merge_rounds):
-        rb = rep_buckets
-        if touched is not None:
-            # restrict to buckets holding a touched rep BEFORE the
-            # quadratic pair step, then to pairs involving a touched rep;
-            # materialized because _bucket_all_pairs references it four
-            # times
-            hot = (rb.join(touched, 'component', 'left_semi')
-                   .select('band', 'bh').distinct())
-            rb = rb.join(hot, ['band', 'bh'], 'left_semi') \
-                .localCheckpoint(eager=True)
-        cand = _bucket_all_pairs(rb, member_col='component')
-        if touched is not None:
-            # flag both endpoints via two hash left joins and filter the
-            # OR: no union, no pair distinct
-            ta = touched.select(F.col('component').alias('id_a'),
-                                F.lit(True).alias('_ta'))
-            tb = touched.select(F.col('component').alias('id_b'),
-                                F.lit(True).alias('_tb'))
-            cand = (cand.join(ta, 'id_a', 'left').join(tb, 'id_b', 'left')
-                    .filter(F.col('_ta').isNotNull() | F.col('_tb').isNotNull())
-                    .drop('_ta', '_tb'))
+    cand = _group_pairs(groups)
+    for i in range(merge_rounds):
         merges = verified(cand)
         probe = merges.limit(_MERGE_COLLECT_CAP + 1).collect()
         if not probe:
             break
-        # every node of a merge edge is touched: it either changed label
-        # or absorbed another component
         sup = _components(merges, probe=probe).select(
             F.col('id').alias('component'), F.col('component').alias('__super'))
-        touched = sup.select('component')
-        rep_buckets = _relabel(rep_buckets, sup).distinct()
         comp = _relabel(comp, sup)
+        if i + 1 == merge_rounds:
+            break
+        # every node of a merge edge is touched: it changed label or
+        # absorbed another component, and its new label is ``__super``.
+        # Later rounds keep only pairs with a touched member: every pair
+        # of untouched reps was verified and refuted, in unchanged buckets
+        groups = (groups.select('band', 'bh',
+                                F.explode('reps').alias('component'))
+                  .join(sup, 'component', 'left').groupBy('band', 'bh')
+                  .agg(F.collect_set(F.coalesce('__super', 'component'))
+                       .alias('reps'), F.collect_set('__super').alias('hot'))
+                  .filter(k > 1).localCheckpoint(eager=True))
+        cand = _group_pairs(groups.filter(F.size('hot') > 0), 'hot')
     return comp
 
 

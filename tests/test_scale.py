@@ -1030,10 +1030,10 @@ def test_connected_components_fractional_ids(spark, monkeypatch):
 
 #: Spark jobs of dedup_clusters(_clique_corpus), collect included, on
 #: the whole-input driver path and on the distributed fallback forced by
-#: a bucket cap of docs x bands - 1 (measured 15 and 24 on Spark 4.1.2,
-#: local[4] and local[2])
+#: a bucket cap of docs x bands - 1 (measured 15 and 23 on Spark 4.1.2,
+#: local[4])
 DRIVER_PATH_JOBS = 15
-FALLBACK_PATH_JOBS = 24
+FALLBACK_PATH_JOBS = 23
 
 
 def _clique_corpus(spark):
@@ -1198,9 +1198,11 @@ def test_dedup_clusters_driver_merge_rounds_parity(spark, monkeypatch):
     (docs x bands) turns off the whole-input driver path but keeps the
     driver merge rounds; a cap of 0 runs Spark rounds (on the dup-dense
     corpus, which has multi-rep buckets), and so does a candidate cap of
-    0. All must be row-identical to each other and to the default driver
-    path, on the dup-dense corpus where multi-round merges fire and on
-    the synthetic clique."""
+    0, decided before the buckets are collected. A candidate set over the
+    cap in round 2 makes _driver_merge give up after round 1's merges,
+    and the Spark rounds run instead. All must be row-identical to each
+    other and to the default driver path, on the dup-dense corpus where
+    multi-round merges fire and on the synthetic clique."""
     import erde_spark.scale.dedup as D
     seen = _spy_driver_path(monkeypatch)
     orig_merge, merged = D._driver_merge, []
@@ -1221,8 +1223,10 @@ def test_dedup_clusters_driver_merge_rounds_parity(spark, monkeypatch):
             merged.clear()
             drv = _kept_sizes(docs, merge_rounds=3)
             # the whole-input path stops at the bucket count, before
-            # _driver_merge: every call here comes from _merge_reps
-            assert merged, 'driver merge rounds did not run in _merge_reps'
+            # _driver_merge: every call here comes from _merge_reps. The
+            # clique's star edges merge it whole, so no bucket holds two
+            # reps and _merge_reps returns before any merge round
+            assert bool(merged) == (docs is not clique), merged
         assert seen['driver_path'] is False
         with monkeypatch.context() as m:
             m.setattr(D, '_MICROBATCH_BUCKET_CAP', 0)
@@ -1232,12 +1236,27 @@ def test_dedup_clusters_driver_merge_rounds_parity(spark, monkeypatch):
                 assert not merged, 'driver merge rounds ran at cap 0'
         assert drv == dist == default
     # on the dup-dense corpus (the loop's last), the buckets fit but round
-    # 1's candidates do not (the 10x corpus's shape): _driver_merge gives
-    # up and the Spark rounds run
+    # 1's candidates do not (the 10x corpus's shape): the count taken
+    # before the collect sends the merge straight to the Spark rounds
     with monkeypatch.context() as m:
         m.setattr(D, '_MICROBATCH_BUCKET_CAP', docs.count() * bands - 1)
         m.setattr(D, '_MICROBATCH_CAND_CAP', 0)
+        merged.clear()
         assert _kept_sizes(docs, merge_rounds=3) == default
+        assert not merged, 'driver merge rounds ran over the candidate cap'
+    # a round after the first over the candidate cap: _driver_merge gives
+    # up after merging, and the Spark rounds start over on the same table
+    orig_cand, rounds = D._rep_pair_candidates, []
+
+    def give_up_in_round_2(groups, touched):
+        rounds.append(touched is None)
+        return None if len(rounds) == 2 else orig_cand(groups, touched)
+
+    with monkeypatch.context() as m:
+        m.setattr(D, '_MICROBATCH_BUCKET_CAP', docs.count() * bands - 1)
+        m.setattr(D, '_rep_pair_candidates', give_up_in_round_2)
+        assert _kept_sizes(docs, merge_rounds=3) == default
+    assert rounds == [True, False], rounds
 
 
 def test_dedup_clusters_rejects_bad_bands(spark):
