@@ -3,115 +3,37 @@ exposes the geo functions to ``spark.sql`` under PostGIS-style names, so the
 engine's capabilities compose with plain Spark SQL (the reference is a
 Python-only library; a SQL surface is the idiomatic Spark extension).
 
-All functions are Arrow-batched pandas UDFs over WKB BinaryType columns;
-the metric variants fix the reference's 4326-with-coslat-correction
-semantics (`/root/reference/erde/op/area.py:44`, `erde/op/length.py:44`,
-`erde/op/buffer.py:44`).
+Every name binds a pandas UDF of ``erde_spark.functions.geo``, the same
+kernels the DataFrame functions run; the metric variants fix the
+reference's 4326-with-coslat-correction semantics (`erde/op/area.py:44`,
+`erde/op/length.py:44`, `erde/op/buffer.py:44`).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from erde_spark.geo import geom as G
-from erde_spark.geo import ops as O
-
-
-def _metric(measure):
-    def run(wkb: pd.Series) -> pd.Series:
-        out = []
-        for v in wkb:
-            if v is None:
-                out.append(None)
-                continue
-            g = G.wkb_loads(bytes(v))
-            g3857 = O.transform_geom(g, 4326, 3857)
-            c = O.coslat_factor(g3857, 3857)
-            out.append(measure(g3857, c))
-        return pd.Series(out, dtype='float64')
-    return run
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_area_metric(wkb: pd.Series) -> pd.Series:
-    return _metric(lambda g, c: O.geom_area(g) * c * c)(wkb)
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_length_metric(wkb: pd.Series) -> pd.Series:
-    return _metric(lambda g, c: O.geom_length(g) * c)(wkb)
-
-
-@F.pandas_udf(T.BinaryType())
-def _st_buffer_metric(wkb: pd.Series, radius: pd.Series) -> pd.Series:
-    out = []
-    for v, r in zip(wkb, radius):
-        if v is None or r is None:
-            out.append(None)
-            continue
-        g3857 = O.transform_geom(G.wkb_loads(bytes(v)), 4326, 3857)
-        c = O.coslat_factor(g3857, 3857)
-        buf = O.buffer_geom(g3857, float(r) / c, 16)
-        out.append(G.wkb_dumps(O.transform_geom(buf, 3857, 4326)))
-    return pd.Series(out)
-
-
-def _predicate_udf(op):
-    pred = O.PREDICATES[op]
-
-    @F.pandas_udf(T.BooleanType())
-    def _p(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([
-            False if (va is None or vb is None)
-            else pred(G.wkb_loads(bytes(va)), G.wkb_loads(bytes(vb)))
-            for va, vb in zip(a, b)])
-    return _p
-
-
-@F.pandas_udf(T.BinaryType())
-def _st_centroid(wkb: pd.Series) -> pd.Series:
-    return pd.Series([
-        None if v is None
-        else G.wkb_dumps(('Point', O.geom_centroid(G.wkb_loads(bytes(v)))))
-        for v in wkb])
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_x(wkb: pd.Series) -> pd.Series:
-    return pd.Series([
-        None if v is None else float(G.wkb_loads(bytes(v))[1][0])
-        for v in wkb], dtype='float64')
-
-
-@F.pandas_udf(T.DoubleType())
-def _st_y(wkb: pd.Series) -> pd.Series:
-    return pd.Series([
-        None if v is None else float(G.wkb_loads(bytes(v))[1][1])
-        for v in wkb], dtype='float64')
+from erde_spark.functions import geo
 
 
 def register_sql_functions(spark: SparkSession) -> None:
     """Idempotent: (re)binds the ST_* names on this session."""
-    from erde_spark.functions.geo import (st_astext, st_distance,
-                                          st_geometrytype, st_geomfromtext,
-                                          st_linestring_between, st_point,
-                                          st_try_geomfromtext)
-    reg = spark.udf.register
-    reg('st_distance', st_distance)
-    reg('st_geomfromtext', st_geomfromtext)
-    reg('st_try_geomfromtext', st_try_geomfromtext)
-    reg('st_astext', st_astext)
-    reg('st_point', st_point)
-    reg('st_geometrytype', st_geometrytype)
-    reg('st_makeline', st_linestring_between)
-    reg('st_area_metric', _st_area_metric)
-    reg('st_length_metric', _st_length_metric)
-    reg('st_buffer_metric', _st_buffer_metric)
-    reg('st_centroid', _st_centroid)
-    reg('st_x', _st_x)
-    reg('st_y', _st_y)
+    udfs = {
+        'st_distance': geo.st_distance,
+        'st_geomfromtext': geo.st_geomfromtext,
+        'st_try_geomfromtext': geo.st_try_geomfromtext,
+        'st_astext': geo.st_astext,
+        'st_point': geo.st_point,
+        'st_geometrytype': geo.st_geometrytype,
+        'st_makeline': geo.st_linestring_between,
+        'st_area_metric': geo._area(4326),
+        'st_length_metric': geo._length(4326),
+        'st_buffer_metric': geo._buffer_udf(4326, 16),
+        'st_centroid': geo.st_centroid,
+        'st_x': geo._coord(0),
+        'st_y': geo._coord(1),
+    }
     for op in ('intersects', 'within', 'contains'):
-        reg(f'st_{op}', _predicate_udf(op))
+        udfs[f'st_{op}'] = geo._predicate_udf(op)
+    for name, udf in udfs.items():
+        spark.udf.register(name, udf)

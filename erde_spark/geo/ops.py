@@ -1641,6 +1641,9 @@ def _iter_coords(geom: Geometry):
 
 
 def geom_bounds(geom: Geometry) -> tuple[float, float, float, float]:
+    if geom[0] == 'Point':  # every row of a point side: skip the coordinate walk
+        x, y = geom[1]
+        return (x, y, x, y)
     xs, ys = zip(*_iter_coords(geom))
     return (min(xs), min(ys), max(xs), max(ys))
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from erde_spark.functions.geo import st_bounds, st_predicate
+from erde_spark.functions.geo import st_bounds, st_distance, st_predicate
 
 _OPS = ('intersects', 'within', 'contains')
 
@@ -177,13 +177,21 @@ def _explode_cells(df: DataFrame, cells_col) -> DataFrame:
               .drop('__cell'))
 
 
-def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: str,
-              op: str, cell_size: float | None) -> DataFrame:
-    """Inner candidate join returning ``__lid``/``__rid`` pair rows with both
-    full row payloads as structs ``__lrow``/``__rrow``.
+def _candidates(left_df: DataFrame, right_df: DataFrame, left_on: str,
+                right_on: str, cell: float | None, pad: float = 0.0,
+                broadcast: bool = True):
+    """``(lx, cand)``: the left side in payload form (``_sides``) and the
+    candidate pairs whose bboxes overlap, the left one dilated by ``pad``,
+    each pair once. Shared by the predicate joins and ``snearest``; the
+    caller adds the exact test.
 
-    ONE equi-join handles both regular and oversized geometries — each side
-    is scanned once and crosses the Python (bounds-UDF) boundary once:
+    With ``broadcast``, a side Catalyst sizes below BROADCAST_SIDE_BYTES is
+    broadcast whole and the join runs on the codegen'd bbox predicate
+    (broadcast-nested-loop): no cell sizing job, no explode, no dedup.
+    Otherwise ONE equi-join on grid cells of size ``cell`` (estimated from
+    a sample when None) handles both regular and oversized geometries —
+    each side is scanned once and crosses the Python (bounds-UDF) boundary
+    once:
 
     * small geometries (bbox covers <= MAX_CELLS_PER_GEOM cells) explode to
       their covering cells as usual;
@@ -204,26 +212,14 @@ def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: s
     shuffle row per input row instead of a second full scan or a hot
     single-reducer partition.
     """
-    if op not in _OPS:
-        raise ValueError(f'op must be one of {_OPS}, got {op!r}')
-
-    lx, rx, bbox_overlap = _sides(left_df, right_df, left_on, right_on)
-
-    # small-side fast path: broadcast the small side whole and join on the
-    # codegen'd bbox predicate (broadcast-nested-loop), then refine. No
-    # cell sizing job, no explode, no dedup — each pair meets exactly once.
-    # An explicit cell_size opts out (forces the grid path).
-    if cell_size is None:
+    lx, rx, bbox_overlap = _sides(left_df, right_df, left_on, right_on, pad)
+    if broadcast:
         r_small = _catalyst_size(right_df) <= BROADCAST_SIDE_BYTES
-        l_small = (not r_small) and _catalyst_size(left_df) <= BROADCAST_SIDE_BYTES
-        if r_small or l_small:
-            cand = (lx.join(F.broadcast(rx), bbox_overlap) if r_small
-                    else rx.join(F.broadcast(lx), bbox_overlap))
-            cand = cand.filter(st_predicate(F.col('__lgeom'), F.col('__rgeom'), op))
-            return cand.select('__lid', '__rid', '__lrow', '__rrow')
-
-    if cell_size is None:
-        cell_size = _estimate_cell_size(lx, rx)
+        if r_small or _catalyst_size(left_df) <= BROADCAST_SIDE_BYTES:
+            return lx, (lx.join(F.broadcast(rx), bbox_overlap) if r_small
+                        else rx.join(F.broadcast(lx), bbox_overlap))
+    if cell is None:
+        cell = _estimate_cell_size(lx, rx)
 
     # Null geometry matches nothing: emit an empty cell array so the explode
     # drops the row. No null filter and no null-intolerant comparison on a
@@ -231,56 +227,63 @@ def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: s
     # push the filter (written, or inferred from the comparison) under the
     # projection computing the bounds, as a second Arrow node re-running
     # the side's UDF chain (see ``_sides``).
-    n_l, cov_l = _covering_cells('__l_', cell_size)
+    empty = F.array().cast('array<struct<cx:bigint,cy:bigint>>')
+    n_l, cov_l = _covering_cells('__l_', cell)
     l_salt = F.pmod(F.hash('__lid'), F.lit(SENTINEL_SALTS))
     l_cells = (F.when(n_l <= MAX_CELLS_PER_GEOM,
                       F.concat(cov_l, F.array(_sentinel(_SENT_R, l_salt))))
-                .when(F.col('__l_minx').isNull(),
-                      F.array().cast('array<struct<cx:bigint,cy:bigint>>'))
+                .when(F.col('__l_minx').isNull(), empty)
                 .otherwise(_all_salts(_SENT_L)))
 
-    n_r, cov_r = _covering_cells('__r_', cell_size)
+    n_r, cov_r = _covering_cells('__r_', cell)
     r_salt = F.pmod(F.hash('__rid'), F.lit(SENTINEL_SALTS))
     r_cells = (F.when(n_r <= MAX_CELLS_PER_GEOM,
                       F.concat(F.array(_sentinel(_SENT_L, r_salt)), cov_r))
-                .when(F.col('__r_minx').isNull(),
-                      F.array().cast('array<struct<cx:bigint,cy:bigint>>'))
+                .when(F.col('__r_minx').isNull(), empty)
                 .otherwise(F.concat(_all_salts(_SENT_R),
                                     F.array(_sentinel(_SENT_L, r_salt)))))
 
-    lc = _explode_cells(lx, l_cells)
-    rc = _explode_cells(rx, r_cells)
-
-    cand = lc.join(rc, on=['__cx', '__cy'], how='inner')
-    cand = cand.filter(bbox_overlap)
+    cand = (_explode_cells(lx, l_cells)
+            .join(_explode_cells(rx, r_cells), on=['__cx', '__cy'], how='inner')
+            .filter(bbox_overlap))
     # reference-cell dedup: a small x small pair can meet in many covering
     # cells — keep it only in the cell holding the bottom-left corner of the
     # bbox intersection. Sentinel meetings are unique by construction.
-    ref_cx = F.floor(F.greatest('__l_minx', '__r_minx') / F.lit(cell_size)).cast('long')
-    ref_cy = F.floor(F.greatest('__l_miny', '__r_miny') / F.lit(cell_size)).cast('long')
-    cand = cand.filter((F.col('__cx') < F.lit(_SENT_CUT)) |
-                       ((F.col('__cx') == ref_cx) & (F.col('__cy') == ref_cy)))
+    ref_cx = F.floor(F.greatest('__l_minx', '__r_minx') / F.lit(cell)).cast('long')
+    ref_cy = F.floor(F.greatest('__l_miny', '__r_miny') / F.lit(cell)).cast('long')
+    return lx, cand.filter((F.col('__cx') < F.lit(_SENT_CUT)) |
+                           ((F.col('__cx') == ref_cx) & (F.col('__cy') == ref_cy)))
 
+
+def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: str,
+              op: str, cell_size: float | None) -> DataFrame:
+    """Inner predicate join returning ``__lid``/``__rid`` pair rows with
+    both full row payloads as structs ``__lrow``/``__rrow``. An explicit
+    ``cell_size`` forces the grid path."""
+    if op not in _OPS:
+        raise ValueError(f'op must be one of {_OPS}, got {op!r}')
+    _, cand = _candidates(left_df, right_df, left_on, right_on, cell_size,
+                          broadcast=cell_size is None)
     # exact predicate refine (Arrow batch, survivors only)
     cand = cand.filter(st_predicate(F.col('__lgeom'), F.col('__rgeom'), op))
     return cand.select('__lid', '__rid', '__lrow', '__rrow')
 
 
-def _flatten(pairs: DataFrame, lcols: list[str], rcols: list[str],
-             suffixes: tuple[str, str], drop_right_geom: str | None) -> DataFrame:
-    """Expand the __lrow/__rrow structs back to flat columns, suffixing
-    name collisions; ``drop_right_geom`` names the right column to leave
-    out (gpd.sjoin keeps the left geometry only; sjfull keeps both)."""
-    cols = []
-    for c in lcols:
-        name = c + suffixes[0] if (c in rcols and suffixes[0]) else c
-        cols.append(F.col(f'__lrow.{c}').alias(name))
-    for c in rcols:
-        if drop_right_geom and c == drop_right_geom:
-            continue
-        name = c + suffixes[1] if c in lcols else c
-        cols.append(F.col(f'__rrow.{c}').alias(name))
-    return pairs.select(*cols)
+def _flatten(df: DataFrame, lcols: list[str], rcols: list[str],
+             suffixes: tuple[str, str], drop_right_geom: str | None,
+             left: str | None = '__lrow', right: str = '__rrow',
+             extra=()) -> DataFrame:
+    """Expand the ``left``/``right`` row structs back to flat columns (one
+    rule for every join shape), suffixing a name both sides output;
+    ``drop_right_geom`` names the right column to leave out (gpd.sjoin
+    keeps the left geometry only; sjfull keeps both). ``left=None`` reads
+    the left columns unnested; ``extra`` columns go last."""
+    rkeep = [c for c in rcols if c != drop_right_geom]
+    cols = [F.col(f'{left}.{c}' if left else c).alias(c + suffixes[0] if c in rkeep else c)
+            for c in lcols]
+    cols += [F.col(f'{right}.{c}').alias(c + suffixes[1] if c in lcols else c)
+             for c in rkeep]
+    return df.select(*cols, *extra)
 
 
 def sjoin(left_df: DataFrame, right_df: DataFrame, left_on: str = 'geometry',
@@ -292,19 +295,12 @@ def sjoin(left_df: DataFrame, right_df: DataFrame, left_on: str = 'geometry',
     lcols, rcols = left_df.columns, right_df.columns
     if how == 'inner':
         pairs = _sj_pairs(left_df, right_df, left_on, right_on, op, cell_size)
-        return _flatten(pairs, lcols, rcols, suffixes, drop_right_geom=right_on)
+        return _flatten(pairs, lcols, rcols, suffixes, right_on)
     if how == 'left':
         left = left_df.withColumn('__lid', F.monotonically_increasing_id())
         pairs = _sj_pairs(left, right_df, left_on, right_on, op, cell_size)
-        rpart = pairs.select('__lid', '__rrow')
-        j = left.join(rpart, on='__lid', how='left')
-        cols = [F.col(c) for c in lcols]
-        for c in rcols:
-            if c == right_on:
-                continue
-            name = c + suffixes[1] if c in lcols else c
-            cols.append(F.col(f'__rrow.{c}').alias(name))
-        return j.select(*cols)
+        j = left.join(pairs.select('__lid', '__rrow'), on='__lid', how='left')
+        return _flatten(j, lcols, rcols, suffixes, right_on, left=None)
     if how == 'right':
         return sjoin(right_df, left_df, right_on, left_on,
                      _swap_op(op), 'left', (suffixes[1], suffixes[0]), cell_size)
@@ -323,8 +319,7 @@ def sjfull(left_df: DataFrame, right_df: DataFrame, left_on: str = 'geometry',
     ``geometry<suffix0>`` and ``geometry<suffix1>``
     (reference `/root/reference/erde/op/sjoin.py:10-40`)."""
     pairs = _sj_pairs(left_df, right_df, left_on, right_on, op, cell_size)
-    return _flatten(pairs, left_df.columns, right_df.columns, suffixes,
-                    drop_right_geom=None)
+    return _flatten(pairs, left_df.columns, right_df.columns, suffixes, None)
 
 
 def sagg(left_df: DataFrame, right_df: DataFrame, agg: dict,
@@ -409,11 +404,11 @@ def snearest(left_df: DataFrame, right_df: DataFrame, max_distance: float,
     right row's column values (lexicographic). ``how='left'`` keeps
     unmatched left rows with NULLs (one row each).
 
-    Physical strategy: the search radius bounds the problem, so the grid
-    cell size IS ``max_distance`` — each left bbox dilated by the radius
-    explodes to its covering cells, rights explode to theirs, candidates
-    equi-join on cell (one shuffle, AQE-skew-handled), pairs dedupe by the
-    reference-cell trick, exact distances compute in one Arrow pass, and
+    Physical strategy: the candidate stage of the predicate joins
+    (``_candidates``) with each left bbox dilated by the radius. A small
+    side broadcasts; otherwise the grid cell size IS ``max_distance``, and
+    a geometry covering more than MAX_CELLS_PER_GEOM cells takes the
+    sentinel cells. Exact distances compute in one Arrow pass, and
     ``min(struct(distance, rid, payload))`` per left row picks the nearest
     — a map-side-combining aggregate, never a driver loop.
     """
@@ -421,30 +416,10 @@ def snearest(left_df: DataFrame, right_df: DataFrame, max_distance: float,
         raise ValueError('max_distance must be positive')
     if how not in ('inner', 'left'):
         raise ValueError(f'how must be inner or left, got {how!r}')
-    from erde_spark.functions.geo import st_distance
-
-    lcols, rcols = left_df.columns, right_df.columns
     cell = float(max_distance)
-    # dilate the left bbox by the search radius; covering cells + ref-cell
-    # dedup then work exactly as in the predicate join
-    lx, rx, bbox_overlap = _sides(left_df, right_df, left_on, right_on, pad=cell)
-    if _catalyst_size(right_df) <= BROADCAST_SIDE_BYTES:
-        # small-side fast path: broadcast-nested-loop on the (radius-
-        # dilated) bbox predicate — no cell explode, pairs unique as-is
-        cand = lx.join(F.broadcast(rx), bbox_overlap)
-    else:
-        _, cov_l = _covering_cells('__l_', cell)
-        _, cov_r = _covering_cells('__r_', cell)
-        empty = F.array().cast('array<struct<cx:bigint,cy:bigint>>')
-        lc = _explode_cells(lx, F.when(F.col('__l_minx').isNull(), empty)
-                            .otherwise(cov_l))
-        rc = _explode_cells(rx, F.when(F.col('__r_minx').isNull(), empty)
-                            .otherwise(cov_r))
-        cand = lc.join(rc, on=['__cx', '__cy'], how='inner').filter(bbox_overlap)
-        ref_cx = F.floor(F.greatest('__l_minx', '__r_minx') / F.lit(cell)).cast('long')
-        ref_cy = F.floor(F.greatest('__l_miny', '__r_miny') / F.lit(cell)).cast('long')
-        cand = cand.filter((F.col('__cx') == ref_cx) & (F.col('__cy') == ref_cy))
-
+    # the search radius bounds the problem: it is the grid cell size, and
+    # each left bbox is dilated by it
+    lx, cand = _candidates(left_df, right_df, left_on, right_on, cell, pad=cell)
     cand = cand.withColumn('__d', st_distance(F.col('__lgeom'), F.col('__rgeom')))
     # The radius test runs after the pick, not as a Filter over the distance
     # projection: Catalyst pushes such a Filter below the projection by
@@ -474,16 +449,8 @@ def snearest(left_df: DataFrame, right_df: DataFrame, max_distance: float,
         # which re-reads the left side as sagg's join-back does
         best = lx.select('__lid', '__lrow').join(best.drop('__lrow'), '__lid', 'left')
 
-    cols = [F.col(f'__lrow.{c}').alias(
-                c + suffixes[0] if (c in rcols and suffixes[0]) else c)
-            for c in lcols]
-    for c in rcols:
-        if c == right_on:
-            continue
-        name = c + suffixes[1] if c in lcols else c
-        cols.append(F.col(f'__best.__rrow.{c}').alias(name))
-    cols.append(F.col('__best.__d').alias(distance_col))
-    return best.select(*cols)
+    return _flatten(best, left_df.columns, right_df.columns, suffixes, right_on,
+                    right='__best.__rrow', extra=[F.col('__best.__d').alias(distance_col)])
 
 
 def sfilter(left_df: DataFrame, filter_df: DataFrame, left_on: str = 'geometry',

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
-confs hold (AQE, Arrow, sane shuffle parallelism). Two things are
+Local testing runs ``local[$SPARK_GRAFT_CPUS]``, by default one thread per
+CPU the process may run on; on a real cluster the same confs hold (AQE,
+Arrow, sane shuffle parallelism). Two things are
 local-mode-specific: the master default, and the Python worker daemon.
 
 Every pandas UDF task starts with ``importlib.invalidate_caches()`` in its
@@ -36,9 +37,20 @@ def _default_driver_mem() -> str:
     return f"{min(48 * 1024, phys // 2 // (1 << 20))}m"
 
 
+def _local_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on (the
+    count ``nproc`` prints)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "erde_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _local_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     builder = (

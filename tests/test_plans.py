@@ -55,7 +55,8 @@ def test_sjoin_udf_passes_bounded(spark):
 
 @pytest.mark.parametrize('case', ['sjoin_points_rects', 'snearest_rect',
                                   'sagg_rect_demand', 'sjoin_grid',
-                                  'snearest_k2', 'snearest_grid'])
+                                  'snearest_k2', 'snearest_grid',
+                                  'sjoin_left', 'sjoin_right'])
 def test_spatial_join_crosses_once_per_side(spark, monkeypatch, case):
     """Exactly 3 Arrow nodes (one crossing per side, the geometry's UDFs
     chained with st_bounds, plus the refine) and no UDF expression
@@ -64,7 +65,9 @@ def test_spatial_join_crosses_once_per_side(spark, monkeypatch, case):
     computing it, which re-runs that side's whole UDF chain in a second
     node. sagg_rect_demand's left join-back adds no node: the query keeps
     no rectangle geometry, so column pruning drops the UDF there (left and
-    anti shapes otherwise re-read the left side by design)."""
+    anti shapes otherwise re-read the left side by design). That is the
+    4th node of sjoin(how='left'|'right'): the kept side's geometry UDF
+    runs again for the join-back, alone, and nothing else repeats."""
     import __spark_entry__ as e
     from erde_spark.operators import sjoin as sj
     from erde_spark.plans.inspect import duplicated_udfs, physical_plan
@@ -78,9 +81,17 @@ def test_spatial_join_crosses_once_per_side(spark, monkeypatch, case):
         df = {'sjoin_grid': lambda: sj.sjoin(pts, rects, op='within', cell_size=1.0),
               'snearest_k2': lambda: sj.snearest(pts, rects, max_distance=0.5, k=2),
               'snearest_grid': lambda: sj.snearest(pts, rects, max_distance=0.5),
+              'sjoin_left': lambda: sj.sjoin(pts, rects, op='within', how='left'),
+              'sjoin_right': lambda: sj.sjoin(pts, rects, op='within', how='right'),
               }[case]()
-    assert count_python_udf_passes(df) == 3
-    assert duplicated_udfs(physical_plan(df)) == []
+    dups = duplicated_udfs(physical_plan(df))
+    if case in ('sjoin_left', 'sjoin_right'):
+        assert count_python_udf_passes(df) == 4
+        kept = 'st_point(' if case == 'sjoin_left' else 'st_envelope('
+        assert len(dups) == 1 and dups[0].startswith(kept), dups
+    else:
+        assert count_python_udf_passes(df) == 3
+        assert dups == []
 
 
 def test_duplicated_udfs_parses_arrow_nodes():

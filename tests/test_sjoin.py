@@ -324,3 +324,59 @@ def test_snearest_grid_matches_broadcast(spark, monkeypatch):
     assert want[0] == [('a', 's1', 1.0), ('b', 's3', pytest.approx(2 ** 0.5 * 0.2)),
                        ('c', 's4', 1.0)]
     assert ('far', None, None) in want[2]
+
+
+def test_sjoin_outer_names_match_inner(spark):
+    """Frames sharing attribute names: every join shape names the output as
+    the inner join does — the left frame's columns plain, the right frame's
+    ``_right`` — so no name repeats and ``select('name')`` is unambiguous.
+    ``suffixes[0]`` applies to left and right joins alike."""
+    pts = spark.createDataFrame([('p1', 1, 'POINT (1 1)'), ('p2', 2, 'POINT (9 9)')],
+                                'name string, v int, wkt string')
+    pts = pts.withColumn('geometry', st_geomfromtext('wkt')).drop('wkt')
+    zones = spark.createDataFrame(POLYS[:3], 'name string, wkt string')
+    zones = (zones.withColumn('v', F.lit(10))
+             .withColumn('geometry', st_geomfromtext('wkt')).drop('wkt'))
+    inner = sjoin(pts, zones)
+    assert inner.columns == ['name', 'v', 'geometry', 'name_right', 'v_right']
+    for how in ('left', 'right'):
+        cols = sjoin(pts, zones, how=how).columns
+        assert sorted(cols) == sorted(inner.columns), (how, cols)
+    right = sjoin(pts, zones, how='right')
+    assert sorted((r['name_right'], r['name']) for r in right.select('name', 'name_right')
+                  .collect()) == [('X', 'p1'), ('Y', None), ('Z', None)]
+    sfx = ('_l', '_r')
+    want = ['name_l', 'v_l', 'geometry', 'name_r', 'v_r']
+    assert sjoin(pts, zones, suffixes=sfx).columns == want
+    assert sjoin(pts, zones, how='left', suffixes=sfx).columns == want
+    assert sorted(sjoin(pts, zones, how='right', suffixes=sfx).columns) == sorted(want)
+
+
+def test_snearest_oversized_geometry_grid_matches_broadcast(spark, monkeypatch):
+    """A right geometry whose bbox covers ~2e9 cells of size max_distance
+    takes the sentinel cells on the grid path, as in the predicate joins,
+    instead of exploding to every covering cell; the grid path returns
+    what the broadcast path returns."""
+    from erde_spark.geo import geom as G
+    from erde_spark.operators import sjoin as sj
+    from erde_spark.session import driver_frame
+    schema = 'geometry binary, name string'
+
+    def frame(rows):
+        return driver_frame(spark, [(G.wkb_dumps(G.wkt_loads(w)), n) for w, n in rows],
+                            schema)
+    pts = frame([('POINT (5 1)', 'a'), ('POINT (1000000000 -1.2)', 'b'),
+                 ('POINT (7 7)', 'c'), ('POINT (-3 0.5)', 'd')])
+    sites = frame([('LINESTRING (0 0, 3000000000 0)', 'line'),
+                   ('POINT (7 6)', 'pt')])
+
+    def run(**kw):
+        return sorted((r['name'], r['name_right'], r['distance'])
+                      for r in sj.snearest(pts, sites, max_distance=1.5, **kw).collect())
+    cases = [{}, {'k': 2}, {'how': 'left'}]
+    want = [run(**kw) for kw in cases]
+    assert want[0] == [('a', 'line', 1.0), ('b', 'line', pytest.approx(1.2)),
+                       ('c', 'pt', 1.0)]
+    assert ('d', None, None) in want[2]
+    monkeypatch.setattr(sj, 'BROADCAST_SIDE_BYTES', -1)   # force the grid
+    assert [run(**kw) for kw in cases] == want

@@ -65,3 +65,32 @@ def test_sql_distance(spark):
     row = spark.sql(
         "SELECT st_distance(st_point(0.0, 0.0), st_point(3.0, 4.0)) AS d").first()
     assert row['d'] == 5.0
+
+
+def test_sql_matches_dataframe_functions(spark):
+    """The SQL names bind the DataFrame functions' UDFs: equal values on the
+    same rows, nulls included."""
+    from pyspark.sql import functions as F
+
+    from erde_spark.functions.geo import (st_buffer, st_geomfromtext, st_metric_area,
+                                          st_metric_length, st_predicate)
+    poly = 'POLYGON ((37.6 55.75, 37.61 55.75, 37.61 55.76, 37.6 55.76, 37.6 55.75))'
+    rows = [(0, poly, 50.0, 'POINT (37.605 55.755)'),
+            (1, 'LINESTRING (37.6 55.75, 37.7 55.8)', 10.0, poly),
+            (2, 'POINT (37.6 55.75)', 100.0, 'POINT (40 60)'),
+            (3, 'POINT (-73.98 40.75)', None, None),
+            (4, None, 5.0, poly)]
+    df = (spark.createDataFrame(rows, 'id int, wkt string, r double, other string')
+          .select('id', 'r', st_geomfromtext('wkt').alias('g'),
+                  st_geomfromtext('other').alias('o')))
+    df.createOrReplaceTempView('sql_parity')
+    sql = spark.sql('SELECT id, st_area_metric(g) AS a, st_length_metric(g) AS l, '
+                    'st_buffer_metric(g, r) AS b, st_intersects(g, o) AS i '
+                    'FROM sql_parity ORDER BY id').collect()
+    api = df.select('id', st_metric_area(F.col('g'), crs=4326).alias('a'),
+                    st_metric_length(F.col('g'), crs=4326).alias('l'),
+                    st_buffer(F.col('g'), F.col('r'), crs=4326).alias('b'),
+                    st_predicate(F.col('g'), F.col('o')).alias('i')).orderBy('id').collect()
+    assert [r.asDict() for r in sql] == [r.asDict() for r in api]
+    assert [r['i'] for r in api] == [True, True, False, False, False]
+    assert api[4]['a'] is None and api[3]['b'] is None and api[0]['b'] is not None
