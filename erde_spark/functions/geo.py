@@ -29,13 +29,18 @@ _BOUNDS_T = T.StructType([
 _XY_T = T.StructType([T.StructField('x', T.DoubleType()), T.StructField('y', T.DoubleType())])
 
 
-def _load(b: bytes):
-    """Parsed WKB; a plain 2D point (21 bytes: endian + type + 2 doubles)
-    skips the generic parser."""
+def _point(b: bytes):
+    """A plain 2D point (21 bytes: endian + type + 2 doubles) parsed without
+    the generic parser; None for any other WKB."""
     if len(b) == 21 and (b[1:5] == b'\x01\x00\x00\x00'
                          or b[1:5] == b'\x00\x00\x00\x01'):
         return ('Point', struct.unpack_from('<2d' if b[0] == 1 else '>2d', b, 5))
-    return G.wkb_loads(b)
+    return None
+
+
+def _load(b: bytes):
+    """Parsed WKB, points through ``_point``."""
+    return _point(b) or G.wkb_loads(b)
 
 
 def _map(series: pd.Series, fn, default=None) -> list:
@@ -43,7 +48,8 @@ def _map(series: pd.Series, fn, default=None) -> list:
     memoized per batch: join fan-out repeats the small side's geometries
     thousands of times (e.g. every point paired with the same 25 region
     polygons), so the parse + compute runs once per DISTINCT value instead
-    of once per row."""
+    of once per row. A plain point skips the memo: its parse costs less
+    than the lookup and insert."""
     cache = {}
     out = []
     for v in series:
@@ -51,9 +57,13 @@ def _map(series: pd.Series, fn, default=None) -> list:
             out.append(default)
             continue
         b = bytes(v)
+        g = _point(b)
+        if g is not None:
+            out.append(fn(g))
+            continue
         r = cache.get(b, cache)
         if r is cache:
-            cache[b] = r = fn(_load(b))
+            cache[b] = r = fn(G.wkb_loads(b))
         out.append(r)
     return out
 

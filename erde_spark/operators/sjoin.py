@@ -146,52 +146,51 @@ _SENT_R = -(1 << 62) + 1   # cell hosting oversized RIGHT geometries
 _SENT_CUT = -(1 << 61)
 
 
-def _covering_cells(prefix: str, cell: float):
-    """(ncells, array<struct<cx,cy>>) of grid cells covering the bbox."""
-    cx0 = F.floor(F.col(f'{prefix}minx') / cell).cast('long')
-    cx1 = F.floor(F.col(f'{prefix}maxx') / cell).cast('long')
-    cy0 = F.floor(F.col(f'{prefix}miny') / cell).cast('long')
-    cy1 = F.floor(F.col(f'{prefix}maxy') / cell).cast('long')
-    n = (cx1 - cx0 + 1) * (cy1 - cy0 + 1)
-    cells = F.flatten(F.transform(
-        F.sequence(cx0, cx1),
-        lambda x: F.transform(F.sequence(cy0, cy1),
-                              lambda y: F.struct(x.alias('cx'), y.alias('cy')))))
-    return n, cells
+def _explode_cells(df: DataFrame, p: str, cell: float, own: int, other: int,
+                   salt, big_meets_other: bool) -> DataFrame:
+    """One row per grid cell ``(__cx, __cy)`` the row must meet in: a small
+    bbox its covering cells plus the other side's sentinel ``(other,
+    salt)``, an oversized one every salt of its own sentinel ``own`` (plus
+    ``(other, salt)`` when ``big_meets_other``), a null one none.
 
-
-def _sentinel(sent: int, salt):
-    return F.struct(F.lit(sent).cast('long').alias('cx'),
-                    salt.cast('long').alias('cy'))
-
-
-def _all_salts(sent: int):
-    return F.transform(F.sequence(F.lit(0), F.lit(SENTINEL_SALTS - 1)),
-                       lambda s: _sentinel(sent, s))
-
-
-def _explode_cells(df: DataFrame, cells_col) -> DataFrame:
-    return (df.withColumn('__cell', F.explode(cells_col))
-              .withColumn('__cx', F.col('__cell.cx'))
-              .withColumn('__cy', F.col('__cell.cy'))
-              .drop('__cell'))
+    The row explodes an index range, not an array of cell structs: index
+    ``i >= 0`` is covering cell ``i`` (row-major), ``-1`` the other side's
+    sentinel and ``i <= -2`` salt ``-2 - i`` of its own. Built with
+    ``sequence`` and plain arithmetic, the explode stays in generated code;
+    nested ``transform`` lambdas run interpreted (4 vCPUs, 300,000 points:
+    0.25 s against 1.5 s)."""
+    cx0 = F.floor(F.col(f'{p}minx') / cell).cast('long')
+    cy0 = F.floor(F.col(f'{p}miny') / cell).cast('long')
+    ny = F.floor(F.col(f'{p}maxy') / cell).cast('long') - cy0 + 1
+    n = (F.floor(F.col(f'{p}maxx') / cell).cast('long') - cx0 + 1) * ny
+    idx = (F.when(n <= MAX_CELLS_PER_GEOM, F.sequence(F.lit(-1).cast('long'), n - 1))
+           .when(F.col(f'{p}minx').isNull(), F.array().cast('array<bigint>'))
+           .otherwise(F.sequence(F.lit(-1 - SENTINEL_SALTS).cast('long'),
+                                 F.lit(-1 if big_meets_other else -2).cast('long'))))
+    i = F.col('__i')
+    return (df.withColumn('__i', F.explode(idx))
+              .withColumn('__cx', F.when(i >= 0, cx0 + (i / ny).cast('long'))
+                          .when(i == -1, F.lit(other)).otherwise(F.lit(own)))
+              .withColumn('__cy', F.when(i >= 0, cy0 + F.pmod(i, ny))
+                          .when(i == -1, salt.cast('long')).otherwise(-2 - i))
+              .drop('__i'))
 
 
 def _candidates(left_df: DataFrame, right_df: DataFrame, left_on: str,
                 right_on: str, cell: float | None, pad: float = 0.0,
-                broadcast: bool = True):
+                broadcast: str = 'rl'):
     """``(lx, cand)``: the left side in payload form (``_sides``) and the
     candidate pairs whose bboxes overlap, the left one dilated by ``pad``,
     each pair once. Shared by the predicate joins and ``snearest``; the
     caller adds the exact test.
 
-    With ``broadcast``, a side Catalyst sizes below BROADCAST_SIDE_BYTES is
-    broadcast whole and the join runs on the codegen'd bbox predicate
-    (broadcast-nested-loop): no cell sizing job, no explode, no dedup.
-    Otherwise ONE equi-join on grid cells of size ``cell`` (estimated from
-    a sample when None) handles both regular and oversized geometries —
-    each side is scanned once and crosses the Python (bounds-UDF) boundary
-    once:
+    A side named in ``broadcast`` (``'r'``, ``'l'``, tried in that order)
+    that Catalyst sizes below BROADCAST_SIDE_BYTES is broadcast whole and
+    the join runs on the codegen'd bbox predicate (broadcast-nested-loop):
+    no cell sizing job, no explode, no dedup. Otherwise ONE equi-join on
+    grid cells of size ``cell`` (estimated from a sample when None) handles
+    both regular and oversized geometries — each side is scanned once and
+    crosses the Python (bounds-UDF) boundary once:
 
     * small geometries (bbox covers <= MAX_CELLS_PER_GEOM cells) explode to
       their covering cells as usual;
@@ -213,11 +212,10 @@ def _candidates(left_df: DataFrame, right_df: DataFrame, left_on: str,
     single-reducer partition.
     """
     lx, rx, bbox_overlap = _sides(left_df, right_df, left_on, right_on, pad)
-    if broadcast:
-        r_small = _catalyst_size(right_df) <= BROADCAST_SIDE_BYTES
-        if r_small or _catalyst_size(left_df) <= BROADCAST_SIDE_BYTES:
-            return lx, (lx.join(F.broadcast(rx), bbox_overlap) if r_small
-                        else rx.join(F.broadcast(lx), bbox_overlap))
+    if 'r' in broadcast and _catalyst_size(right_df) <= BROADCAST_SIDE_BYTES:
+        return lx, lx.join(F.broadcast(rx), bbox_overlap)
+    if 'l' in broadcast and _catalyst_size(left_df) <= BROADCAST_SIDE_BYTES:
+        return lx, rx.join(F.broadcast(lx), bbox_overlap)
     if cell is None:
         cell = _estimate_cell_size(lx, rx)
 
@@ -227,24 +225,11 @@ def _candidates(left_df: DataFrame, right_df: DataFrame, left_on: str,
     # push the filter (written, or inferred from the comparison) under the
     # projection computing the bounds, as a second Arrow node re-running
     # the side's UDF chain (see ``_sides``).
-    empty = F.array().cast('array<struct<cx:bigint,cy:bigint>>')
-    n_l, cov_l = _covering_cells('__l_', cell)
     l_salt = F.pmod(F.hash('__lid'), F.lit(SENTINEL_SALTS))
-    l_cells = (F.when(n_l <= MAX_CELLS_PER_GEOM,
-                      F.concat(cov_l, F.array(_sentinel(_SENT_R, l_salt))))
-                .when(F.col('__l_minx').isNull(), empty)
-                .otherwise(_all_salts(_SENT_L)))
-
-    n_r, cov_r = _covering_cells('__r_', cell)
     r_salt = F.pmod(F.hash('__rid'), F.lit(SENTINEL_SALTS))
-    r_cells = (F.when(n_r <= MAX_CELLS_PER_GEOM,
-                      F.concat(F.array(_sentinel(_SENT_L, r_salt)), cov_r))
-                .when(F.col('__r_minx').isNull(), empty)
-                .otherwise(F.concat(_all_salts(_SENT_R),
-                                    F.array(_sentinel(_SENT_L, r_salt)))))
-
-    cand = (_explode_cells(lx, l_cells)
-            .join(_explode_cells(rx, r_cells), on=['__cx', '__cy'], how='inner')
+    cand = (_explode_cells(lx, '__l_', cell, _SENT_L, _SENT_R, l_salt, False)
+            .join(_explode_cells(rx, '__r_', cell, _SENT_R, _SENT_L, r_salt, True),
+                  on=['__cx', '__cy'], how='inner')
             .filter(bbox_overlap))
     # reference-cell dedup: a small x small pair can meet in many covering
     # cells — keep it only in the cell holding the bottom-left corner of the
@@ -263,7 +248,7 @@ def _sj_pairs(left_df: DataFrame, right_df: DataFrame, left_on: str, right_on: s
     if op not in _OPS:
         raise ValueError(f'op must be one of {_OPS}, got {op!r}')
     _, cand = _candidates(left_df, right_df, left_on, right_on, cell_size,
-                          broadcast=cell_size is None)
+                          broadcast='rl' if cell_size is None else '')
     # exact predicate refine (Arrow batch, survivors only)
     cand = cand.filter(st_predicate(F.col('__lgeom'), F.col('__rgeom'), op))
     return cand.select('__lid', '__rid', '__lrow', '__rrow')
@@ -274,7 +259,8 @@ def _flatten(df: DataFrame, lcols: list[str], rcols: list[str],
              left: str | None = '__lrow', right: str = '__rrow',
              extra=()) -> DataFrame:
     """Expand the ``left``/``right`` row structs back to flat columns (one
-    rule for every join shape), suffixing a name both sides output;
+    rule for every join shape), suffixing a name both sides output, as
+    gpd.sjoin does (the dropped right geometry suffixes nothing);
     ``drop_right_geom`` names the right column to leave out (gpd.sjoin
     keeps the left geometry only; sjfull keeps both). ``left=None`` reads
     the left columns unnested; ``extra`` columns go last."""
@@ -406,11 +392,16 @@ def snearest(left_df: DataFrame, right_df: DataFrame, max_distance: float,
 
     Physical strategy: the candidate stage of the predicate joins
     (``_candidates``) with each left bbox dilated by the radius. A small
-    side broadcasts; otherwise the grid cell size IS ``max_distance``, and
-    a geometry covering more than MAX_CELLS_PER_GEOM cells takes the
-    sentinel cells. Exact distances compute in one Arrow pass, and
-    ``min(struct(distance, rid, payload))`` per left row picks the nearest
-    — a map-side-combining aggregate, never a driver loop.
+    right side broadcasts; otherwise the grid cell size IS
+    ``max_distance``, and a geometry covering more than MAX_CELLS_PER_GEOM
+    cells takes the sentinel cells. A small left side is not broadcast:
+    the nested loop then streams the large right side past every left
+    row, and with no cell-sizing job to save, the grid is cheaper (4
+    vCPUs, 1,000 left x 300,000 right points, radius 0.5 over a 100 x 100
+    square: 2.6-3.0 s broadcast, 1.5-1.7 s grid). Exact distances compute
+    in one Arrow pass, and ``min(struct(distance, rid, payload))`` per left
+    row picks the nearest — a map-side-combining aggregate, never a driver
+    loop.
     """
     if max_distance <= 0:
         raise ValueError('max_distance must be positive')
@@ -419,7 +410,8 @@ def snearest(left_df: DataFrame, right_df: DataFrame, max_distance: float,
     cell = float(max_distance)
     # the search radius bounds the problem: it is the grid cell size, and
     # each left bbox is dilated by it
-    lx, cand = _candidates(left_df, right_df, left_on, right_on, cell, pad=cell)
+    lx, cand = _candidates(left_df, right_df, left_on, right_on, cell, pad=cell,
+                           broadcast='r')
     cand = cand.withColumn('__d', st_distance(F.col('__lgeom'), F.col('__rgeom')))
     # The radius test runs after the pick, not as a Filter over the distance
     # projection: Catalyst pushes such a Filter below the projection by

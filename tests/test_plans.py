@@ -240,6 +240,23 @@ def test_snearest_small_side_broadcasts(spark):
     assert count_python_udf_passes(df) == 3
 
 
+def test_snearest_small_left_takes_grid(spark, monkeypatch):
+    """snearest broadcasts only a small RIGHT side: when only the left side
+    is under the threshold, the nested loop would stream the larger right
+    side past every left row, so snearest takes the grid, while sjoin on
+    the same frames broadcasts the left."""
+    import __spark_entry__ as e
+    from erde_spark.operators import sjoin as sj
+    from erde_spark.plans.inspect import physical_plan
+    t = e._t(spark, SF, 'customer', 'nation')
+    pts = e._cust_points(t['customer']).select('c_custkey', 'geometry')
+    rects = e._nation_rects(t['nation'])
+    assert sj._catalyst_size(pts) < sj._catalyst_size(rects)
+    monkeypatch.setattr(sj, 'BROADCAST_SIDE_BYTES', sj._catalyst_size(pts))
+    assert 'BroadcastNestedLoopJoin' in physical_plan(sj.sjoin(pts, rects))
+    assert 'BroadcastNestedLoopJoin' not in physical_plan(sj.snearest(pts, rects, 0.5))
+
+
 def test_sjoin_small_side_broadcasts(spark):
     """The predicate-join family (sjoin/sagg/sfilter via _sj_pairs) takes
     the broadcast fast path when one side is small: nested-loop on the

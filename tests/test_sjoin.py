@@ -170,6 +170,29 @@ def test_oversized_both_sides(polys):
     assert ('X', 'Z') not in got
 
 
+def test_explode_cells_maps_indices_to_cells(spark, monkeypatch):
+    """The index-range explode emits, per row, its covering cells plus the
+    other side's salted sentinel (small bbox), every salt of its own
+    sentinel (oversized bbox; a right row also keeps the other side's
+    salt), or nothing (null bbox)."""
+    from erde_spark.operators import sjoin as sj
+    monkeypatch.setattr(sj, 'MAX_CELLS_PER_GEOM', 4)
+    df = spark.createDataFrame(
+        [(0, 0.5, 2.2, 1.5, 2.8), (1, -1.5, -0.5, -0.5, 1.5), (2, None, None, None, None)],
+        'id long, p_minx double, p_miny double, p_maxx double, p_maxy double')
+    small = {(0, 2), (1, 2)}
+    for own, other, big_meets_other in ((sj._SENT_L, sj._SENT_R, False),
+                                        (sj._SENT_R, sj._SENT_L, True)):
+        got = {}
+        for r in sj._explode_cells(df, 'p_', 1.0, own, other, F.lit(7),
+                                   big_meets_other).collect():
+            got.setdefault(r['id'], []).append((r['__cx'], r['__cy']))
+        assert sorted(got[0]) == sorted(small | {(other, 7)})
+        big = [(own, s) for s in range(sj.SENTINEL_SALTS)]
+        assert sorted(got[1]) == sorted(big + [(other, 7)] * big_meets_other)
+        assert 2 not in got
+
+
 # ---------------------------------------------------------------- snearest
 
 def _pt_df(spark, rows):
